@@ -47,10 +47,6 @@ EVENTS_RAW_SCHEMA = T.StructType([
 ])
 
 
-def default_sf_dir() -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
 def _events_ts_unit(path: str) -> str:
     """Sniff the parquet footer for the ``ts`` column's timestamp unit.
 
@@ -102,15 +98,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         return load_events(spark, sf_dir)
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
-
-def load_all(spark: SparkSession, sf_dir: str | None = None) -> dict[str, DataFrame]:
-    sf_dir = sf_dir or default_sf_dir()
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str | None = None) -> dict[str, DataFrame]:
-    """Register every table as a temp view (for the SQL entry points)."""
-    dfs = load_all(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs

@@ -9,7 +9,7 @@ which Spark ``trim`` does not — we use anchored regexes instead).
 The one genuinely stateful transform — the error-block line filter
 (reference transformer.py:52-72) — is an ``F.aggregate`` left fold over
 the line array with a ``struct<in_error, kept_lines>`` accumulator,
-keeping it visible to Catalyst. A pandas_udf twin lives in
+keeping it visible to Catalyst. A plain-Python twin lives in
 ``text_pandas.py`` for differential testing (SURVEY.md §7.3 risk item).
 """
 

@@ -1,17 +1,14 @@
-"""Arrow-batched pandas UDF twin of ``text.clean_text``.
+"""Plain-Python twin of ``text.clean_text``.
 
 Exists ONLY for differential testing of the F.aggregate fold
 (SURVEY.md §7.3 names the stateful error-block scan the riskiest single
-operator — this is its independent reference implementation) and as the
-documented fallback if a future change to the fold misbehaves. The
+operator — this is its independent reference implementation). The
 production path is the pure-columnar ``text.clean_text``.
 """
 
 from __future__ import annotations
 
 import re
-
-import pandas as pd
 
 _ERROR_LINE = re.compile(
     r"^\[ERROR\]|^Exception|^at\s+[\w.]+|^\s+at\s+[\w.]+|^Caused by:"
@@ -45,14 +42,3 @@ def clean_text_py(text: str | None) -> str:
     out = _CI_URL.sub("[CI_URL]", out)
     return out.strip()
 
-
-def clean_text_pandas():
-    """Factory for the Arrow-batched UDF (a factory because pandas_udf
-    needs an active SparkSession to parse its return type)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("string")
-    def _clean(s: pd.Series) -> pd.Series:
-        return s.map(clean_text_py)
-
-    return _clean

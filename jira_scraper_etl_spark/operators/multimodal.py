@@ -1321,6 +1321,10 @@ def _decode_jpeg_entropy(buf: bytes, return_coefs: bool = False) -> tuple:
                 if tc_th >> 4:
                     ac_tab = dec
                 else:
+                    # a DC symbol is a magnitude bit count, and
+                    # _BitReader.bits serves at most 16 bits
+                    if any(v > 15 for v in vals):
+                        raise ValueError("DC category above 15 in DHT")
                     dc_tab = dec
                 i += 17 + nv
         elif marker == 0xDA:
@@ -1335,6 +1339,8 @@ def _decode_jpeg_entropy(buf: bytes, return_coefs: bool = False) -> tuple:
 
     br = _BitReader(buf, scan_start)
     n_blocks = (w // 8) * (h // 8)
+    if n_blocks == 0:
+        raise ValueError(f"JPEG {w}x{h} has no 8x8 block")
     prev_dc, coef_sum, n_nonzero, px = 0, 0, 0, []
     all_coefs = []
     for _ in range(n_blocks):

@@ -49,36 +49,6 @@ def salted_join(big: DataFrame, small: DataFrame, key: str,
     return out.drop("_salt")
 
 
-def salted_join_cond(big: DataFrame, other: DataFrame, cond,
-                     salt: int = 8, how: str = "inner") -> DataFrame:
-    """Salted join with an arbitrary join condition — the big×big form.
-
-    ``cond(big_salted, other_salted) -> Column`` builds the full join
-    condition (the skewed key equality plus any residual range/band
-    predicates); this function adds the salt equality. ``big`` rows get
-    one uniform salt each, ``other`` rows are replicated ``salt``×, so
-    a left join stays row-correct (each big row matches exactly the one
-    replica set carrying its salt — no duplicate or lost rows).
-
-    This is the fallback for joins neither AQE nor broadcast rescues:
-    both sides large (broadcast-ineligible) AND the condition carries a
-    residual band predicate, which AQE's skew-split can rebalance only
-    after the skewed sort-merge partitions already formed. Cost is the
-    ``salt``× replication of ``other`` — at warehouse scale, restrict
-    ``other`` to the hot keys' rows first (hot-key isolation) and union
-    the cold remainder through a plain join. The two frames must have
-    disjoint column names (rename before calling)."""
-    _check_outer(how)
-    big_s = big.withColumn("_salt",
-                           F.pmod(F.monotonically_increasing_id(), F.lit(salt)))
-    other_s = (other.withColumn(
-        "_salt2", F.explode(F.array(*[F.lit(i) for i in range(salt)]))))
-    out = big_s.join(other_s,
-                     cond(big_s, other_s) & (big_s["_salt"] == other_s["_salt2"]),
-                     how)
-    return out.drop("_salt", "_salt2")
-
-
 def hotkey_salted_join(big: DataFrame, small: DataFrame, key: str,
                        salt: int = 8, hot_fraction: float = 0.05,
                        how: str = "inner") -> DataFrame:

@@ -1,150 +1,88 @@
-"""The silver transform: raw Jira issues → flat LLM-training corpus.
+"""The silver transform: flat Jira issue rows → LLM-training corpus.
 
-This is the engine's re-expression of the reference's per-record
-``transform_issue`` loop (transformer.py:225-314) as ONE declarative
-logical plan: ``scan → single projection → write``. No shuffle, no UDF,
-no driver-side loop — at 100 TB it is a pure map stage that scales
-linearly with input splits.
+Re-expresses the reference's per-record ``transform_issue`` loop
+(transformer.py:225-314) as one map-only plan over the rows that
+``sources.jira_rest.issue_to_row`` projects (``ISSUE_SCHEMA``): no
+shuffle, no UDF, no driver-side loop, so it scales linearly with input
+splits. The projection owns the null defaults; this module owns text
+cleaning, derived tasks and validation.
 
-Semantics parity (SURVEY.md §1.3, §2.2, §2.8) with two documented,
-deliberate deviations:
+Two deliberate deviations from the reference (SURVEY.md §1.3, §2.2,
+§2.8):
 * classifications are sorted (the reference's ``list(set(...))`` order
-  is Python-hash-seed nondeterminism — unshippable from a distributed
-  engine);
+  is Python-hash-seed nondeterministic);
 * validation failures land in ``validation_errors``/``is_valid``
-  columns instead of a log line (same warn-don't-drop outcome, but
-  queryable — the reference still wrote the record, so do we).
+  columns instead of a log line (the record is still written, as in the
+  reference, but the failure is queryable).
+
+The plan is staged in two projections. ``clean_text`` is an
+interpreted ``aggregate`` fold, the most expensive expression here, and
+the derived-task expressions reference title, description and comments
+several times each; inlined, every reference would re-run its fold per
+row. The first projection computes each fold once, and the second
+derives from the computed attributes (CollapseProject keeps non-cheap,
+multi-referenced aliases apart).
+
+``write_training_shards`` is the sink for shuffled training corpora.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
+from pyspark.sql import types as T
 
 from ..functions import text as X
 
-
-def _null_safe_name(struct_col: Column, field: str, default: Column | None = None) -> Column:
-    """P2: ``d.get('x', {}).get(field) if d.get('x') else default``."""
-    out = F.when(struct_col.isNull(), default if default is not None else F.lit(None)) \
-        .otherwise(struct_col[field])
-    return out
+_S = T.StringType()
 
 
-def transform_issues(raw: DataFrame) -> DataFrame:
-    """Transform a DataFrame of raw issues (RAW_ISSUE_SCHEMA rows) into
-    the silver corpus (TRANSFORMED_SCHEMA). Pure DataFrame→DataFrame —
-    composable with batch scans, streams, and the REST source alike."""
-    f = F.col("fields")
-
-    title = X.clean_text(f["summary"])
-    description = X.clean_text(f["description"])
-
-    raw_comments = F.coalesce(
-        f["comment"]["comments"],
-        F.array().cast("array<struct<author:struct<displayName:string>,"
-                       "body:string,created:string,updated:string>>"),
-    )
-    # P6: skip falsy comment entries, then clean each body
-    # (transformer.py:259-268); null author → 'Unknown'.
-    comments = F.transform(
-        F.filter(raw_comments, lambda c: c.isNotNull()),
-        lambda c: F.struct(
-            F.when(c["author"].isNull(), F.lit("Unknown"))
-            .otherwise(c["author"]["displayName"]).alias("author"),
-            X.clean_text(c["body"]).alias("body"),
-            c["created"].alias("created"),
-        ),
-    )
-
-    id_col = F.coalesce(F.col("key"), F.lit("UNKNOWN"))
-
-    # TWO projections on purpose. clean_text is an interpreted
-    # ``aggregate`` fold (functions/text.py P8) — the most expensive
-    # expression here — and the derived-task expressions reference
-    # title/description/comments several times each. Inlined (the
-    # former one-projection form) each reference re-evaluates its fold
-    # per row — ~4× the per-row line-scan work, which is what dominates
-    # on a real corpus at scale. CollapseProject keeps the stages apart
-    # because the aliases are non-cheap and multi-referenced (the
-    # operators/dedup.shingled_docs argument); the second stage's
-    # references then read the computed attribute. (One-shot latency on
-    # the 5-row fixture is codegen-compile-bound, ~4 s either way — the
-    # staging targets per-row throughput, not that constant.)
-    base = raw.select(
-        id_col.alias("id"),
-        title.alias("title"),
-        description.alias("description"),
-        _null_safe_name(f["status"], "name", F.lit("Unknown")).alias("status"),
-        _null_safe_name(f["priority"], "name").alias("priority"),
-        _null_safe_name(f["reporter"], "displayName").alias("reporter"),
-        _null_safe_name(f["assignee"], "displayName").alias("assignee"),
-        f["created"].alias("created"),
-        f["updated"].alias("updated"),
-        F.coalesce(f["labels"], F.array().cast("array<string>")).alias("labels"),
-        F.coalesce(
-            F.transform(f["components"], lambda c: c["name"]),
-            F.array().cast("array<string>"),
-        ).alias("components"),
-        comments.alias("comments"),
-        f["summary"].alias("_summary_raw"),
-        f["labels"].alias("_labels_raw"),
-        f["issuetype"]["name"].alias("_issuetype"),
-    )
-    # hoist the loop-invariant answer fold out of qa_pairs' per-question
-    # lambda (see the qa_pairs docstring); first_answer itself is a
-    # cheap filter+element_at, fine to appear twice
-    staged = base.withColumns({
-        "_raw_answer": X.first_answer(F.col("comments")),
-        "_answer": X.clean_text(X.first_answer(F.col("comments"))),
-    })
-    out = staged.select(
-        "id", "title", "description", "status", "priority", "reporter",
-        "assignee", "created", "updated", "labels", "components", "comments",
-        F.struct(
-            X.generate_summary(F.col("title"), F.col("description"))
-            .alias("summary"),
-            X.classify_issue(F.col("_summary_raw"), F.col("_labels_raw"),
-                             F.col("_issuetype")).alias("classifications"),
-            X.qa_pairs(F.col("description"), F.col("comments"),
-                       raw_answer=F.col("_raw_answer"),
-                       answer=F.col("_answer")).alias("qa_pairs"),
-        ).alias("derived_tasks"),
-    )
-    errors = X.validation_errors(
-        F.col("id"), F.col("title"), F.col("created"), F.col("updated"),
-        F.col("comments"))
-    return out.withColumn("validation_errors", errors) \
-        .withColumn("is_valid", F.size("validation_errors") == 0)
+def _struct(**kw: T.DataType) -> T.StructType:
+    return T.StructType([T.StructField(k, v) for k, v in kw.items()])
 
 
-def transform_flat_issues(flat: DataFrame) -> DataFrame:
-    """Silver transform over the REST source's already-projected rows
-    (sources/jira_rest.ISSUE_SCHEMA). Same semantics as
-    ``transform_issues`` minus the nested-field projection the source
-    performed at scan time — the pipeline composition
-    ``jira_rest scan → this → sink`` is the engine's two-phase analog of
-    the reference's extract+transform (main.py:160-186), still one
-    map-only plan end to end."""
+# Silver record (reference transformer.py:276-294 / FIXTURES.md §1.2)
+# plus the source project and the warn-don't-drop validation channel
+# (SURVEY.md §1.5).
+SILVER_SCHEMA = _struct(
+    id=_S, project=_S, title=_S, description=_S, status=_S, priority=_S,
+    reporter=_S, assignee=_S, created=_S, updated=_S,
+    labels=T.ArrayType(_S),
+    components=T.ArrayType(_S),
+    comments=T.ArrayType(_struct(author=_S, body=_S, created=_S)),
+    derived_tasks=_struct(
+        summary=_S,
+        classifications=T.ArrayType(_S),
+        qa_pairs=T.ArrayType(_struct(question=_S, answer=_S)),
+    ),
+    validation_errors=T.ArrayType(_S),
+    is_valid=T.BooleanType(),
+)
+
+
+def transform_issues(issues: DataFrame) -> DataFrame:
+    """Silver records (``SILVER_SCHEMA``) from ``ISSUE_SCHEMA`` rows.
+    Pure DataFrame→DataFrame, so batch scans, streams and fixtures all
+    run the same plan."""
     title = X.clean_text(F.col("summary"))
     description = X.clean_text(F.col("description"))
+    # P6: skip null comment entries, then clean each body
+    # (transformer.py:259-268)
     comments = F.transform(
         F.filter(F.col("comments"), lambda c: c.isNotNull()),
         lambda c: F.struct(
-            F.coalesce(c["author"], F.lit("Unknown")).alias("author"),
+            c["author"].alias("author"),
             X.clean_text(c["body"]).alias("body"),
             c["created"].alias("created"),
         ),
     )
-    # staged like transform_issues: materialize the clean_text folds
-    # once, then derive from the computed attributes (see the
-    # two-projection comment there)
-    base = flat.select(
+    # stage 1 of 2 (see the module docstring): the clean_text folds
+    base = issues.select(
         F.coalesce(F.col("key"), F.lit("UNKNOWN")).alias("id"),
         F.col("project"),
         title.alias("title"),
         description.alias("description"),
-        F.coalesce(F.col("status"), F.lit("Unknown")).alias("status"),
+        F.col("status"),
         F.col("priority"),
         F.col("reporter"),
         F.col("assignee"),
@@ -156,6 +94,9 @@ def transform_flat_issues(flat: DataFrame) -> DataFrame:
         F.col("summary").alias("_summary_raw"),
         F.col("issuetype").alias("_issuetype"),
     )
+    # hoist the loop-invariant answer fold out of qa_pairs' per-question
+    # lambda (see the qa_pairs docstring); first_answer itself is a
+    # cheap filter+element_at, fine to appear twice
     staged = base.withColumns({
         "_raw_answer": X.first_answer(F.col("comments")),
         "_answer": X.clean_text(X.first_answer(F.col("comments"))),
@@ -179,20 +120,6 @@ def transform_flat_issues(flat: DataFrame) -> DataFrame:
         F.col("comments"))
     return out.withColumn("validation_errors", errors) \
         .withColumn("is_valid", F.size("validation_errors") == 0)
-
-
-def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """S6 JSONL sink: Spark's JSON writer is line-delimited by default.
-    Unlike the reference's single open("w") handle (transformer.py:359 —
-    a crash leaves a truncated file), the write is task-atomic via the
-    commit protocol."""
-    df.write.mode(mode).json(path)
-
-
-def write_silver_parquet(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """The engine-native silver sink: parquet, partitioned by nothing at
-    test scale; at 100 TB partition by project/date upstream of this."""
-    df.write.mode(mode).parquet(path)
 
 
 def write_training_shards(assigned: DataFrame, path: str, *,

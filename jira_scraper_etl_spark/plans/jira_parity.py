@@ -16,7 +16,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.transform import transform_issues
-from ..schemas import RAW_ISSUE_SCHEMA
+from ..sources.jira_rest import ISSUE_SCHEMA, issue_to_row
 from .registry import register
 
 
@@ -83,11 +83,14 @@ def _fixture_rows() -> list[dict]:
 
 
 def fixture_df(spark: SparkSession) -> DataFrame:
+    """The fixture corpus as ISSUE_SCHEMA rows, projected by the REST
+    source's own ``issue_to_row``."""
     # one partition on purpose: createDataFrame spreads the 5 fixture
     # rows over defaultParallelism partitions, and every task then pays
     # the full setup of the (very large) transform expression tree —
     # 32 near-empty tasks cost ~4 s/action where one costs ~0.5 s
-    return spark.createDataFrame(_fixture_rows(), RAW_ISSUE_SCHEMA).coalesce(1)
+    rows = [issue_to_row(raw) for raw in _fixture_rows()]
+    return spark.createDataFrame(rows, ISSUE_SCHEMA).coalesce(1)
 
 
 @register("jira_transform_silver", oracle=None, tags=("jira", "parity"))
@@ -177,7 +180,7 @@ def jira_qa_pairs_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
     function — one (question, answer) row per extracted question via a
     LATERAL join.
 
-    Like the pandas twin (functions/text_pandas.py), this exists as the
+    Like the clean_text twin (functions/text_pandas.py), this exists as the
     row-wise differential-testing mirror of the columnar path, NOT the
     hot path: the production plan is jira_transform_silver's
     regexp_extract_all + transform (whole-stage codegen, zero Python).

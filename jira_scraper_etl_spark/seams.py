@@ -74,16 +74,17 @@ def checkpoint_seam(df: DataFrame) -> DataFrame:
     return out
 
 
-def _unpersist_checkpoint(df: DataFrame) -> None:
-    """Drop a localCheckpoint frame's RDD blocks. Best-effort JVM-
-    internal access (LogicalRDD.rdd is stable across Spark 3.x/4.x);
-    if the accessor ever moves, the blocks simply fall back to the
-    pre-round-14 behavior — reclaimed by the ContextCleaner at the
-    next JVM GC — so failure here is silent by design."""
+def _unpersist_checkpoint(df: DataFrame) -> bool:
+    """Drop a localCheckpoint frame's RDD blocks; returns whether it
+    did. Best-effort JVM-internal access (LogicalRDD.rdd is stable
+    across Spark 3.x/4.x); if the accessor ever moves, the blocks are
+    still reclaimed by the ContextCleaner at the next JVM GC, so a
+    failure here is not raised."""
     try:
         df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        return True
     except Exception:
-        pass
+        return False
 
 
 def release_seams(session=None) -> int:
@@ -112,10 +113,7 @@ def release_seams(session=None) -> int:
             n += 1
         except Exception:
             pass  # session already stopped — nothing to release
-    for df in cp_frames:
-        _unpersist_checkpoint(df)
-        n += 1
-    return n
+    return n + sum(_unpersist_checkpoint(df) for df in cp_frames)
 
 
 def outstanding() -> int:

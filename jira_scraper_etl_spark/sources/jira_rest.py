@@ -83,7 +83,7 @@ COMMENT_TYPE = T.StructType([
 ])
 
 ISSUE_SCHEMA = T.StructType([
-    T.StructField("key", T.StringType(), False),
+    T.StructField("key", T.StringType()),
     T.StructField("project", T.StringType()),
     T.StructField("summary", T.StringType()),
     T.StructField("description", T.StringType()),
@@ -335,36 +335,62 @@ def fetch_page(transport: Callable[[dict], tuple[int, Any]],
 
 
 def issue_to_row(raw: dict) -> tuple:
-    """Project a nested raw issue onto ISSUE_SCHEMA (null-safe, parity
-    with transformer.py:245-268). Values stay raw — cleaning belongs to
-    the silver transform, not the scan."""
+    """Project a nested raw issue onto ISSUE_SCHEMA. This is the only
+    nested→flat projection, so it owns the reference's null defaults
+    (transformer.py:245-268): status is ``"Unknown"`` only when the
+    status object is absent, a comment author is ``"Unknown"`` only
+    when the author object is absent, and only ``None`` comments are
+    dropped. Empty or null names inside present objects, and null
+    component entries, are kept. Text stays raw — cleaning belongs to
+    the silver transform."""
     f = raw.get("fields") or {}
-    def name(k):
-        v = f.get(k)
-        return v.get("name") if isinstance(v, dict) else None
-    def display(k):
-        v = f.get(k)
-        return v.get("displayName") if isinstance(v, dict) else None
+
+    def attr(obj, field):
+        return obj.get(field) if isinstance(obj, dict) else None
+
+    def unknown_if_absent(obj, field):
+        return "Unknown" if obj is None else attr(obj, field)
+
     comments = [
-        ((c.get("author") or {}).get("displayName"), c.get("body"), c.get("created"))
-        for c in ((f.get("comment") or {}).get("comments") or []) if c
+        (unknown_if_absent(c.get("author"), "displayName"), c.get("body"),
+         c.get("created"))
+        for c in (attr(f.get("comment"), "comments") or []) if c is not None
     ]
     return (
         raw.get("key"),
-        (f.get("project") or {}).get("key"),
+        attr(f.get("project"), "key"),
         f.get("summary"),
         f.get("description"),
-        name("status") or "Unknown",
-        name("priority"),
-        display("reporter"),
-        display("assignee"),
-        name("issuetype"),
+        unknown_if_absent(f.get("status"), "name"),
+        attr(f.get("priority"), "name"),
+        attr(f.get("reporter"), "displayName"),
+        attr(f.get("assignee"), "displayName"),
+        attr(f.get("issuetype"), "name"),
         f.get("created"),
         f.get("updated"),
         list(f.get("labels") or []),
-        [c.get("name") for c in (f.get("components") or []) if isinstance(c, dict)],
+        [attr(c, "name") for c in (f.get("components") or [])],
         comments,
     )
+
+
+def read_pages(cfg: SourceConfig, jql: str, start: int, end: int) -> Iterator[tuple]:
+    """Rows of issues ``[start, end)``, one page per request — the
+    reference's page loop (`extract.py:270-366`). Stops early on an
+    empty page (server-side termination, `extract.py:278-280`, or a
+    corpus that shrank under us) and waits ``polite_delay_seconds``
+    between pages (`extract.py:366`)."""
+    transport = make_transport(cfg)
+    while start < end:
+        issues, _ = fetch_page(transport, cfg, jql, start,
+                               max_results=min(cfg.max_results, end - start))
+        if not issues:
+            break
+        for raw in issues:
+            yield issue_to_row(raw)
+        start += len(issues)
+        if cfg.polite_delay_seconds and start < end:
+            time.sleep(cfg.polite_delay_seconds)
 
 
 # ---------------------------------------------------------------------------
@@ -439,19 +465,8 @@ class JiraRestReader(DataSourceReader):
                 for s in range(start, total, span)]
 
     def read(self, partition: PageRange) -> Iterator[tuple]:
-        cfg = self.cfg
-        transport = make_transport(cfg)
-        start = partition.start_at
-        while start < partition.end_at:
-            n = min(cfg.max_results, partition.end_at - start)
-            issues, _ = fetch_page(transport, cfg, self._jql, start, max_results=n)
-            if not issues:
-                break  # server-side termination (extract.py:278-280)
-            for raw in issues:
-                yield issue_to_row(raw)
-            start += len(issues)
-            if cfg.polite_delay_seconds and start < partition.end_at:
-                time.sleep(cfg.polite_delay_seconds)
+        return read_pages(self.cfg, self._jql, partition.start_at,
+                          partition.end_at)
 
 
 # ---------------------------------------------------------------------------
@@ -490,19 +505,10 @@ class JiraRestStreamReader(SimpleDataSourceStreamReader):
         """Deterministically re-read a committed-but-unprocessed batch
         during failure recovery (Spark calls this when restarting from a
         checkpoint mid-batch; the base class raises otherwise). The
-        paged source is deterministic by range, so this is a loop over
-        ``fetch_page`` from ``start.start_at`` to ``end.start_at``."""
-        cfg = self.cfg
-        transport = make_transport(cfg)
-        s, e = int(start["start_at"]), int(end["start_at"])
-        while s < e:
-            issues, _ = fetch_page(transport, cfg, self._jql, s,
-                                   max_results=min(cfg.max_results, e - s))
-            if not issues:
-                break  # corpus shrank under us; yield what exists
-            for raw in issues:
-                yield issue_to_row(raw)
-            s += len(issues)
+        paged source is deterministic by range, so this is the batch
+        page loop from ``start.start_at`` to ``end.start_at``."""
+        return read_pages(self.cfg, self._jql, int(start["start_at"]),
+                          int(end["start_at"]))
 
     def commit(self, end: dict) -> None:
         pass  # offset file already mirrored in read(); Spark log is canonical

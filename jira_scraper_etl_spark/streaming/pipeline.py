@@ -33,9 +33,10 @@ import threading
 import time
 from dataclasses import dataclass, field as dc_field
 
+import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.transform import transform_flat_issues
+from ..operators.transform import transform_issues
 from ..sources import register_jira_source
 from ..sources import offsets as OFF
 
@@ -92,10 +93,8 @@ def _source_options(cfg: PipelineConfig, project: str) -> dict:
 
 def scan_issues(spark: SparkSession, cfg: PipelineConfig, project: str) -> DataFrame:
     register_jira_source(spark)
-    reader = spark.read.format("jira_rest")
-    for k, v in _source_options(cfg, project).items():
-        reader = reader.option(k, v)
-    return reader.load()
+    return (spark.read.format("jira_rest")
+            .options(**_source_options(cfg, project)).load())
 
 
 def extract_project(spark: SparkSession, cfg: PipelineConfig, project: str) -> int:
@@ -105,9 +104,8 @@ def extract_project(spark: SparkSession, cfg: PipelineConfig, project: str) -> i
     df = scan_issues(spark, cfg, project)
     bronze = cfg.dir("bronze", f"project={project}")
     df.write.mode("overwrite").parquet(bronze)
-    out = spark.read.parquet(bronze)
-    n = out.count()
-    latest = out.agg({"updated": "max"}).first()[0]
+    n, latest = spark.read.parquet(bronze).agg(
+        F.count(F.lit(1)), F.max("updated")).first()
     base = OFF.load(cfg.dir("checkpoints"), project)
     OFF.save(cfg.dir("checkpoints"), project,
              OFF.Offset(base.start_at + n, latest or base.last_updated))
@@ -117,12 +115,16 @@ def extract_project(spark: SparkSession, cfg: PipelineConfig, project: str) -> i
 def transform_project(spark: SparkSession, cfg: PipelineConfig, project: str) -> int:
     """Phase B for one project: bronze → silver parquet + JSONL corpus
     (`transformer.py:329-428`; the JSONL mirrors
-    data/processed/{PROJECT}_issues.jsonl)."""
+    data/processed/{PROJECT}_issues.jsonl). The transform runs once:
+    the JSONL and the count are read back from the silver parquet."""
     bronze = cfg.dir("bronze", f"project={project}")
-    silver = transform_flat_issues(spark.read.parquet(bronze))
-    silver.write.mode("overwrite").parquet(cfg.dir("silver", f"project={project}"))
-    silver.write.mode("overwrite").json(cfg.dir("processed", f"{project}_issues.jsonl"))
-    return silver.count()
+    silver = cfg.dir("silver", f"project={project}")
+    records = transform_issues(spark.read.parquet(bronze))
+    records.write.mode("overwrite").parquet(silver)
+    # the known schema spares the read-back a footer-inference job
+    out = spark.read.schema(records.schema).parquet(silver)
+    out.write.mode("overwrite").json(cfg.dir("processed", f"{project}_issues.jsonl"))
+    return out.count()
 
 
 def run_pipeline(spark: SparkSession, cfg: PipelineConfig,
@@ -224,10 +226,8 @@ def run_worker(spark: SparkSession, cfg: PipelineConfig,
 
 def stream_issues(spark: SparkSession, cfg: PipelineConfig, project: str) -> DataFrame:
     register_jira_source(spark)
-    reader = spark.readStream.format("jira_rest")
-    for k, v in _source_options(cfg, project).items():
-        reader = reader.option(k, v)
-    return reader.load()
+    return (spark.readStream.format("jira_rest")
+            .options(**_source_options(cfg, project)).load())
 
 
 def run_streaming_silver(spark: SparkSession, cfg: PipelineConfig, project: str,
@@ -254,7 +254,7 @@ def run_streaming_silver(spark: SparkSession, cfg: PipelineConfig, project: str,
         # Idempotent per-batch write: deterministic directory keyed by
         # batch_id, overwritten on retry — at-least-once foreachBatch
         # becomes exactly-once at rest.
-        (transform_flat_issues(batch_df).write.mode("overwrite")
+        (transform_issues(batch_df).write.mode("overwrite")
          .parquet(os.path.join(out_path, f"batch_id={batch_id}")))
 
     def sink_count() -> int:

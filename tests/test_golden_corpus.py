@@ -1,6 +1,6 @@
-"""Golden-corpus differential test (SURVEY.md §5 strategy b): run the
-engine's silver transform over the reference's committed raw page files
-and compare field-by-field against its committed processed JSONL
+"""Golden-corpus differential test (SURVEY.md §5 strategy b): project
+the reference's committed raw page files through the REST source's
+``issue_to_row``, run the engine's silver transform, and compare field-by-field against its committed processed JSONL
 (414 records). Skipped when the reference checkout is absent — the
 engine itself never depends on it.
 
@@ -18,7 +18,7 @@ import os
 import pytest
 
 from jira_scraper_etl_spark.operators.transform import transform_issues
-from jira_scraper_etl_spark.schemas import RAW_ISSUE_SCHEMA
+from jira_scraper_etl_spark.sources.jira_rest import ISSUE_SCHEMA, issue_to_row
 
 REF_RAW = "/root/reference/data/raw"
 REF_PROCESSED = "/root/reference/data/processed"
@@ -47,10 +47,13 @@ def test_golden_parity(spark, project):
     pages = raw_pages(project)
     if not pages:
         pytest.skip(f"no raw pages for {project}")
-    raw = (spark.read.schema(RAW_ISSUE_SCHEMA)
-           .option("multiLine", "true").json(pages))
+    rows = []
+    for page in pages:  # each page file is a JSON array of raw issues
+        with open(page) as f:
+            rows += [issue_to_row(raw) for raw in json.load(f)]
+    flat = spark.createDataFrame(rows, ISSUE_SCHEMA)
     ours = {r["id"]: r for r in
-            (row.asDict(recursive=True) for row in transform_issues(raw).collect())}
+            (row.asDict(recursive=True) for row in transform_issues(flat).collect())}
     golden = load_golden(project)
 
     assert set(ours) == set(golden)

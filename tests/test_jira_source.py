@@ -120,12 +120,27 @@ def test_offset_missing_defaults_to_zero(tmp_path):
 # -- row projection (transformer.py:245-268 parity) -------------------------
 
 def test_issue_to_row_null_safety():
-    raw = {"key": "SPARK-1", "fields": {"status": None, "summary": "s"}}
-    row = J.issue_to_row(raw)
-    d = dict(zip([f.name for f in J.ISSUE_SCHEMA.fields], row))
+    def project(fields):
+        row = J.issue_to_row({"key": "SPARK-1", "fields": fields})
+        return dict(zip([f.name for f in J.ISSUE_SCHEMA.fields], row))
+
+    d = project({"status": None, "summary": "s"})
     assert d["status"] == "Unknown"       # null status default
     assert d["priority"] is None
     assert d["labels"] == [] and d["comments"] == []
+    # "Unknown" only for an ABSENT object: a present status with an
+    # empty or null name keeps it
+    assert project({"status": {"name": ""}})["status"] == ""
+    assert project({"status": {"name": None}})["status"] is None
+    # null component entries are kept, not dropped
+    assert project({"components": [{"name": "core"}, None]})["components"] \
+        == ["core", None]
+    # a comment author object with a null displayName keeps the null;
+    # an absent author is "Unknown"; only None comments are dropped
+    comments = [{"author": {"displayName": None}, "body": "b", "created": "c"},
+                {"author": None, "body": "b2"}, None, {}]
+    assert project({"comment": {"comments": comments}})["comments"] == [
+        (None, "b", "c"), ("Unknown", "b2", None), ("Unknown", None, None)]
 
 
 # -- partition planning ------------------------------------------------------
@@ -286,10 +301,11 @@ def test_stream_reader_pages_and_offsets(tmp_path):
     assert OFF.load(str(tmp_path), "SPARK").start_at == 120
 
 
-def test_stream_read_between_offsets_recovery():
+def test_stream_read_between_offsets_recovery(monkeypatch):
     """Failure recovery: Spark re-reads a committed-but-unprocessed
     batch via readBetweenOffsets; the paged source is deterministic by
-    range, so the replay must equal the original read."""
+    range, so the replay must equal the original read. The replay runs
+    the batch page loop, so it keeps the politeness delay too."""
     r = J.JiraRestStreamReader({"transport": "synthetic", "total": "120",
                                 "max_results": "50"})
     original, _ = r.read({"start_at": 50})
@@ -299,3 +315,12 @@ def test_stream_read_between_offsets_recovery():
     assert len(list(r.readBetweenOffsets({"start_at": 0}, {"start_at": 30}))) == 30
     # empty range
     assert list(r.readBetweenOffsets({"start_at": 10}, {"start_at": 10})) == []
+    # three pages (50 + 50 + 20): a polite pause between pages, not after
+    slept: list[float] = []
+    monkeypatch.setattr(J.time, "sleep", slept.append)
+    polite = J.JiraRestStreamReader({"transport": "synthetic", "total": "120",
+                                     "max_results": "50",
+                                     "polite_delay_seconds": "0.5"})
+    assert len(list(polite.readBetweenOffsets({"start_at": 0},
+                                              {"start_at": 120}))) == 120
+    assert slept == [0.5, 0.5]

@@ -624,6 +624,18 @@ def test_jpeg_batch_decode_bit_identical_to_per_image():
     assert MM.decode_jpeg_pixels_batch([]) == []
     assert MM.decode_jpeg_pixels_batch(bufs[:1]) == [
         MM.decode_jpeg_pixels(bufs[0])]
+    # malformed images fail with the same ValueError on both paths,
+    # alone or inside a batch: a frame below 8 px has no 8x8 block,
+    # and a DC table with a category above 15 is rejected at decode
+    no_block = MM.encode_baseline_jpeg(0, 8, [])
+    dc_vals = bytes(MM.JPEG_DC_BITS) + bytes(MM.JPEG_DC_VALS)
+    wide_dc = bufs[0].replace(dc_vals, dc_vals[:-1] + bytes([16]))
+    for bad, why in ((no_block, "no 8x8 block"), (wide_dc, "DC category")):
+        with pytest.raises(ValueError, match=why):
+            MM.decode_jpeg_pixels(bad)
+        for batch in ([bad], [bad, bad], [bufs[0], bad]):
+            with pytest.raises(ValueError, match=why):
+                MM.decode_jpeg_pixels_batch(batch)
 
 
 def test_jpeg_batched_idct_bit_identical_to_scalar_spec():

@@ -40,9 +40,12 @@ def test_two_phase_run(spark, tmp_path):
     assert row.is_valid
     # offsets advanced (write-then-checkpoint ordering)
     assert OFF.load(cfg.dir("checkpoints"), "SPARK").start_at == 120
-    # JSONL corpus mirror exists
-    jl = spark.read.json(cfg.dir("processed", "SPARK_issues.jsonl"))
+    # the JSONL corpus mirror holds exactly the silver records
+    jl = spark.read.schema(silver.schema).json(
+        cfg.dir("processed", "SPARK_issues.jsonl"))
     assert jl.count() == 120
+    assert jl.exceptAll(silver).count() == 0
+    assert silver.exceptAll(jl).count() == 0
 
 
 def test_transform_gated_on_extract_failure(spark, tmp_path, monkeypatch):
@@ -114,7 +117,7 @@ def test_streaming_silver_soak_crash_every_batch(spark, tmp_path):
     crashed: list[int] = []
 
     def sink(batch_df, batch_id: int) -> None:
-        (P.transform_flat_issues(batch_df).write.mode("overwrite")
+        (P.transform_issues(batch_df).write.mode("overwrite")
          .parquet(os.path.join(out_path, f"batch_id={batch_id}")))
         if batch_id not in crashed:
             crashed.append(batch_id)

@@ -1,8 +1,9 @@
-"""Property-based differential test for the whole silver transform
-(operators/transform.py): hypothesis generates raw Jira issues with
-nulls in every structural position — null fields, null nested structs,
-null array entries, empty/short/markup-ridden text, malformed dates —
-and the single-projection Catalyst plan must agree with an independent
+"""Property-based differential test for the whole silver path — the REST
+source's row projection (sources/jira_rest.issue_to_row) followed by
+the silver transform (operators/transform.py): hypothesis generates raw
+Jira issues with nulls in every structural position — null fields, null
+nested structs, null array entries, empty/short/markup-ridden text,
+malformed dates — and the Catalyst plan must agree with an independent
 plain-Python replay of the documented semantics (transformer.py:225-314
 parity incl. the first-answer ``break`` quirk, double-clean of the
 answer, sorted classifications, warn-don't-drop validation).
@@ -29,7 +30,7 @@ from jira_scraper_etl_spark.functions.text import (
 )
 from jira_scraper_etl_spark.functions.text_pandas import clean_text_py
 from jira_scraper_etl_spark.operators.transform import transform_issues
-from jira_scraper_etl_spark.schemas import RAW_ISSUE_SCHEMA
+from jira_scraper_etl_spark.sources.jira_rest import ISSUE_SCHEMA, issue_to_row
 
 # -- python twins of the derived-task expressions -------------------------
 
@@ -192,8 +193,9 @@ _ISSUE = st.fixed_dictionaries({
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(st.lists(_ISSUE, min_size=1, max_size=12))
 def test_silver_transform_matches_python_replay(spark, issues):
-    raw = spark.createDataFrame(issues, RAW_ISSUE_SCHEMA).coalesce(1)
-    got = transform_issues(raw).collect()
+    rows = [issue_to_row(issue) for issue in issues]
+    flat = spark.createDataFrame(rows, ISSUE_SCHEMA).coalesce(1)
+    got = transform_issues(flat).collect()
     assert len(got) == len(issues)
     # coalesce(1) + map-only plan: output order == input order
     for issue, r in zip(issues, got):

@@ -98,6 +98,33 @@ def test_checkpoint_seam_releases_rdd_blocks(spark):
     assert _settle(spark, base) <= base
 
 
+class _UnreleasableCheckpoint:
+    """A checkpoint frame whose RDD accessor fails, so its unpersist
+    cannot succeed."""
+
+    def __init__(self, session):
+        self.sparkSession = session
+
+    def localCheckpoint(self):
+        return self
+
+    @property
+    def _jdf(self):
+        raise RuntimeError("no JVM handle")
+
+
+def test_release_counts_only_released_checkpoints(spark):
+    """release_seams reports what it released: a checkpoint frame whose
+    unpersist fails is dropped from the registry but not counted."""
+    seams.release_seams()
+    df = seams.checkpoint_seam(spark.range(10))
+    assert df.count() == 10
+    seams.checkpoint_seam(_UnreleasableCheckpoint(spark))
+    assert seams.outstanding() == 2
+    assert seams.release_seams() == 1
+    assert seams.outstanding() == 0
+
+
 def test_release_is_idempotent_and_returns_count(spark, sf_dir):
     seams.release_seams()
     df = seams.persist_seam(

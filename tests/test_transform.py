@@ -4,9 +4,8 @@ re-expressed against the DataFrame pipeline)."""
 
 from __future__ import annotations
 
-from jira_scraper_etl_spark.operators.transform import transform_issues
+from jira_scraper_etl_spark.operators.transform import SILVER_SCHEMA, transform_issues
 from jira_scraper_etl_spark.plans.jira_parity import fixture_df
-from jira_scraper_etl_spark.schemas import TRANSFORMED_SCHEMA
 
 
 def get(rows, key):
@@ -17,7 +16,8 @@ def test_transform_schema(spark):
     out = transform_issues(fixture_df(spark))
     # simpleString comparison: names+types must match; our pipeline's
     # nullability is tighter than the declared schema (coalesce defaults)
-    assert out.schema.simpleString() == TRANSFORMED_SCHEMA.simpleString()
+    assert out.schema.simpleString() == SILVER_SCHEMA.simpleString()
+    assert out.columns[:2] == ["id", "project"]
 
 
 def test_transform_end_to_end(spark):
