@@ -3,7 +3,7 @@
 # scale-independent invariant suite (tests/test_sf1_soak.py) runs
 # against it via SPARK_GRAFT_SOAK_DIR.
 
-.PHONY: test oracle bench bench-sf1 bench-sf10 soak-sf1 soak-sf10 \
+.PHONY: test oracle bench perfbench bench-sf1 bench-sf10 soak-sf1 soak-sf10 \
         plan-audit probe-sf30 probe-sf100
 
 # the Tier-1 suite, as ROADMAP.md states it
@@ -17,6 +17,13 @@ oracle:
 
 bench:
 	python bench.py
+
+# the repo benchmark (BENCHMARK.json): its self-tests, then one untraced
+# run of each workload; .PHONY matters, a perfbench/ directory exists
+perfbench:
+	python3 -m pytest perfbench -q -p no:cacheprovider
+	python3 perfbench/run.py --workload etl_jira --seed 1 --seconds 10 --trace 0
+	python3 perfbench/run.py --workload llm_curation --seed 1 --seconds 10 --trace 0
 
 .scratch/sf1:
 	python tools/make_sf.py 10 .scratch/sf1

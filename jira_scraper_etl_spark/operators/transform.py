@@ -23,13 +23,25 @@ row. The first projection computes each fold once, and the second
 derives from the computed attributes (CollapseProject keeps non-cheap,
 multi-referenced aliases apart).
 
+The Column trees of both projections are built once per JVM and reused
+by every call. Building them costs 4-6k py4j round trips, about
+0.6-0.9 s on the driver, against about 0.05 s to analyze, optimize and
+plan the result; in a pipeline run that was most of the transform's
+wall time. The Columns name input columns only, so they hold no session
+or input state; the memo is keyed on ``SparkContext._gateway``, so a new
+JVM rebuilds it.
+
 ``write_training_shards`` is the sink for shuffled training corpora.
 """
 
 from __future__ import annotations
 
+import functools
+from typing import NamedTuple
+
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark import SparkContext
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import types as T
 
 from ..functions import text as X
@@ -60,10 +72,18 @@ SILVER_SCHEMA = _struct(
 )
 
 
-def transform_issues(issues: DataFrame) -> DataFrame:
-    """Silver records (``SILVER_SCHEMA``) from ``ISSUE_SCHEMA`` rows.
-    Pure DataFrame→DataFrame, so batch scans, streams and fixtures all
-    run the same plan."""
+class _Projection(NamedTuple):
+    base: list[Column]          # stage 1 of 2: the clean_text folds
+    answers: dict[str, Column]  # the hoisted answer folds
+    out: list[Column | str]     # stage 2: derived tasks
+    errors: Column
+    is_valid: Column
+
+
+@functools.lru_cache(maxsize=1)
+def _projection(gateway: object) -> _Projection:
+    """The Columns ``transform_issues`` applies, built once per py4j
+    ``gateway`` (only the cache key; see the module docstring)."""
     title = X.clean_text(F.col("summary"))
     description = X.clean_text(F.col("description"))
     # P6: skip null comment entries, then clean each body
@@ -76,8 +96,7 @@ def transform_issues(issues: DataFrame) -> DataFrame:
             c["created"].alias("created"),
         ),
     )
-    # stage 1 of 2 (see the module docstring): the clean_text folds
-    base = issues.select(
+    base = [
         F.coalesce(F.col("key"), F.lit("UNKNOWN")).alias("id"),
         F.col("project"),
         title.alias("title"),
@@ -93,15 +112,15 @@ def transform_issues(issues: DataFrame) -> DataFrame:
         comments.alias("comments"),
         F.col("summary").alias("_summary_raw"),
         F.col("issuetype").alias("_issuetype"),
-    )
+    ]
     # hoist the loop-invariant answer fold out of qa_pairs' per-question
     # lambda (see the qa_pairs docstring); first_answer itself is a
     # cheap filter+element_at, fine to appear twice
-    staged = base.withColumns({
+    answers = {
         "_raw_answer": X.first_answer(F.col("comments")),
         "_answer": X.clean_text(X.first_answer(F.col("comments"))),
-    })
-    out = staged.select(
+    }
+    out = [
         "id", "project", "title", "description", "status", "priority",
         "reporter", "assignee", "created", "updated", "labels", "components",
         "comments",
@@ -114,12 +133,24 @@ def transform_issues(issues: DataFrame) -> DataFrame:
                        raw_answer=F.col("_raw_answer"),
                        answer=F.col("_answer")).alias("qa_pairs"),
         ).alias("derived_tasks"),
-    )
+    ]
     errors = X.validation_errors(
         F.col("id"), F.col("title"), F.col("created"), F.col("updated"),
         F.col("comments"))
-    return out.withColumn("validation_errors", errors) \
-        .withColumn("is_valid", F.size("validation_errors") == 0)
+    return _Projection(base, answers, out, errors,
+                       F.size("validation_errors") == 0)
+
+
+def transform_issues(issues: DataFrame) -> DataFrame:
+    """Silver records (``SILVER_SCHEMA``) from ``ISSUE_SCHEMA`` rows.
+    Pure DataFrame→DataFrame, so batch scans, streams and fixtures all
+    run the same plan."""
+    p = _projection(SparkContext._gateway)
+    return (issues.select(*p.base)
+            .withColumns(p.answers)
+            .select(*p.out)
+            .withColumn("validation_errors", p.errors)
+            .withColumn("is_valid", p.is_valid))
 
 
 def write_training_shards(assigned: DataFrame, path: str, *,

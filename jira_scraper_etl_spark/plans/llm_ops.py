@@ -28,7 +28,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.storagelevel import StorageLevel
 
-from ..seams import checkpoint_seam, persist_seam
+from ..seams import checkpoint_seam, persist_seam, release_checkpoint
 
 from ..catalog import load_table
 from ..functions import hashing as H
@@ -1273,11 +1273,14 @@ def _cc_label_loop(members: DataFrame, edges: DataFrame,
     self-loop row carries the node's own label into the same groupBy
     that computes the neighbor minimum (min picks the better of the
     two), and ``min(label) FILTER (s = d)`` recovers the old label so
-    the convergence check is a scan, not a second join."""
+    the convergence check is a scan, not a second join. Each round
+    releases the checkpoint it supersedes, so the loop holds two
+    checkpoints (edges and the latest labels) at any round count."""
     labels = checkpoint_seam(members.select(
         F.col("simhash").alias("id"), F.col("fp_min").alias("label")))
     eplus = checkpoint_seam(edges.unionByName(
         labels.select(F.col("id").alias("s"), F.col("id").alias("d"))))
+    held = labels
     for _ in range(max_rounds):  # bound ≥ any real component diameter
         new_labels = checkpoint_seam(
             eplus.join(labels, eplus.s == labels.id)
@@ -1285,6 +1288,8 @@ def _cc_label_loop(members: DataFrame, edges: DataFrame,
             .agg(F.min("label").alias("label"),
                  F.min(F.when(F.col("s") == F.col("d"), F.col("label")))
                  .alias("old")))
+        release_checkpoint(held)
+        held = new_labels
         changed = new_labels.where(F.col("label") < F.col("old")).count()
         labels = new_labels.select("id", "label")
         if changed == 0:

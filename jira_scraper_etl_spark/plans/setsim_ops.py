@@ -19,7 +19,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.storagelevel import StorageLevel
 
-from ..seams import checkpoint_seam, persist_seam
+from ..seams import checkpoint_seam, persist_seam, release_checkpoint
 
 from ..catalog import load_table
 from ..errors import RegimeRefused
@@ -738,14 +738,15 @@ def _bpe_train(spark: SparkSession, sf_dir: str,
         l, r, cnt = top[0].l, top[0].r, top[0].cnt
         merges.append((step, l, r, l + r, int(cnt)))
         merged = F.lit(l + r)
-        cur = cur.select(*cols, F.aggregate(
+        nxt = checkpoint_seam(cur.select(*cols, F.aggregate(
             "syms", F.expr("cast(array() as array<string>)"),
             lambda acc, x: F.when(
                 (F.size(acc) > 0)
                 & (F.element_at(acc, -1) == F.lit(l)) & (x == F.lit(r)),
                 F.concat(F.slice(acc, 1, F.size(acc) - 1), F.array(merged)))
-            .otherwise(F.concat(acc, F.array(x)))).alias("syms"))
-        cur = checkpoint_seam(cur)
+            .otherwise(F.concat(acc, F.array(x)))).alias("syms")))
+        release_checkpoint(cur)  # no-op on the first step's vocab
+        cur = nxt
     vocab.unpersist()
     return merges, cur
 

@@ -87,6 +87,21 @@ def _unpersist_checkpoint(df: DataFrame) -> bool:
         return False
 
 
+def release_checkpoint(df: DataFrame) -> bool:
+    """Release one ``checkpoint_seam`` frame ahead of ``release_seams``:
+    drop it from the registry and unpersist its blocks; returns whether
+    it did. Iterative loops call it on the iteration a newer, already
+    materialized checkpoint supersedes, so the blocks a loop holds do
+    not grow with its round count. A frame this registry does not hold
+    is left alone."""
+    with _LOCK:
+        frames = _OUTSTANDING_CP.get(id(df.sparkSession), [])
+        held = any(f is df for f in frames)
+        if held:
+            frames[:] = [f for f in frames if f is not df]
+    return held and _unpersist_checkpoint(df)
+
+
 def release_seams(session=None) -> int:
     """Unpersist every outstanding seam; returns how many were
     released. Safe at any point — a seam whose result the caller has

@@ -34,11 +34,12 @@ import time
 from dataclasses import dataclass, field as dc_field
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
-from ..operators.transform import transform_issues
+from ..operators.transform import SILVER_SCHEMA, transform_issues
 from ..sources import register_jira_source
 from ..sources import offsets as OFF
+from ..sources.jira_rest import ISSUE_SCHEMA
 
 
 @dataclass
@@ -100,12 +101,15 @@ def scan_issues(spark: SparkSession, cfg: PipelineConfig, project: str) -> DataF
 def extract_project(spark: SparkSession, cfg: PipelineConfig, project: str) -> int:
     """Phase A for one project: partitioned REST scan → bronze parquet,
     then advance the offset file (the write-then-checkpoint ordering of
-    `extract.py:354-356` — at-least-once, idempotent by overwrite)."""
-    df = scan_issues(spark, cfg, project)
+    `extract.py:354-356` — at-least-once, idempotent by overwrite). The
+    row count and ``max(updated)`` come from an ``Observation`` on the
+    bronze write, so bronze is not read back."""
     bronze = cfg.dir("bronze", f"project={project}")
-    df.write.mode("overwrite").parquet(bronze)
-    n, latest = spark.read.parquet(bronze).agg(
-        F.count(F.lit(1)), F.max("updated")).first()
+    seen = Observation()
+    (scan_issues(spark, cfg, project)
+     .observe(seen, F.count(F.lit(1)).alias("n"), F.max("updated").alias("latest"))
+     .write.mode("overwrite").parquet(bronze))
+    n, latest = seen.get["n"], seen.get["latest"]
     base = OFF.load(cfg.dir("checkpoints"), project)
     OFF.save(cfg.dir("checkpoints"), project,
              OFF.Offset(base.start_at + n, latest or base.last_updated))
@@ -115,16 +119,19 @@ def extract_project(spark: SparkSession, cfg: PipelineConfig, project: str) -> i
 def transform_project(spark: SparkSession, cfg: PipelineConfig, project: str) -> int:
     """Phase B for one project: bronze → silver parquet + JSONL corpus
     (`transformer.py:329-428`; the JSONL mirrors
-    data/processed/{PROJECT}_issues.jsonl). The transform runs once:
-    the JSONL and the count are read back from the silver parquet."""
+    data/processed/{PROJECT}_issues.jsonl). The transform runs once: the
+    JSONL is written from the silver parquet, and the count comes from
+    an ``Observation`` on the silver write. Both reads pass their known
+    schema, which spares each a footer-inference job."""
     bronze = cfg.dir("bronze", f"project={project}")
     silver = cfg.dir("silver", f"project={project}")
-    records = transform_issues(spark.read.parquet(bronze))
-    records.write.mode("overwrite").parquet(silver)
-    # the known schema spares the read-back a footer-inference job
-    out = spark.read.schema(records.schema).parquet(silver)
-    out.write.mode("overwrite").json(cfg.dir("processed", f"{project}_issues.jsonl"))
-    return out.count()
+    seen = Observation()
+    (transform_issues(spark.read.schema(ISSUE_SCHEMA).parquet(bronze))
+     .observe(seen, F.count(F.lit(1)).alias("n"))
+     .write.mode("overwrite").parquet(silver))
+    (spark.read.schema(SILVER_SCHEMA).parquet(silver)
+     .write.mode("overwrite").json(cfg.dir("processed", f"{project}_issues.jsonl")))
+    return seen.get["n"]
 
 
 def run_pipeline(spark: SparkSession, cfg: PipelineConfig,

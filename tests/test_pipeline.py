@@ -48,6 +48,29 @@ def test_two_phase_run(spark, tmp_path):
     assert silver.exceptAll(jl).count() == 0
 
 
+def test_incremental_empty_leg_keeps_offset(spark, tmp_path):
+    """A saved watermark past every issue makes the incremental scan
+    return 0 rows: the write observations report a count of 0 and a
+    null max(updated), so the offset stays as saved, and both outputs
+    are still written, empty."""
+    import os
+
+    from jira_scraper_etl_spark.operators.transform import SILVER_SCHEMA
+
+    cfg = make_cfg(tmp_path, projects=["SPARK"], incremental=True)
+    saved = OFF.Offset(120, "2099-01-01T00:00:00.000+0000")
+    OFF.save(cfg.dir("checkpoints"), "SPARK", saved)
+    report = run_pipeline(spark, cfg)
+    assert report["success"]
+    counts = report["projects"]["SPARK"]
+    assert counts["extracted"] == counts["transformed"] == 0
+    assert OFF.load(cfg.dir("checkpoints"), "SPARK") == saved
+    assert spark.read.parquet(cfg.dir("silver", "project=SPARK")).count() == 0
+    jsonl = cfg.dir("processed", "SPARK_issues.jsonl")
+    assert os.path.isdir(jsonl)
+    assert spark.read.schema(SILVER_SCHEMA).json(jsonl).count() == 0
+
+
 def test_transform_gated_on_extract_failure(spark, tmp_path, monkeypatch):
     cfg = make_cfg(tmp_path)
 

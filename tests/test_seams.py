@@ -98,6 +98,43 @@ def test_checkpoint_seam_releases_rdd_blocks(spark):
     assert _settle(spark, base) <= base
 
 
+def test_label_loop_releases_superseded_rounds(spark, monkeypatch):
+    """ADVICE r14: the label-propagation loop checkpoints every round.
+    Each round must release the checkpoint it supersedes, so what the
+    loop leaves registered (edges and the final labels) does not grow
+    with the round count. Paths of 4 and 8 nodes need 4 and 8 rounds:
+    the minimum label travels one hop per round, plus the round that
+    sees no change."""
+    from jira_scraper_etl_spark.plans import llm_ops
+
+    calls = []
+
+    def counting(df):
+        calls.append(df)
+        return seams.checkpoint_seam(df)
+
+    monkeypatch.setattr(llm_ops, "checkpoint_seam", counting)
+
+    def run(n: int) -> tuple[int, int]:
+        members = spark.createDataFrame(
+            [(i, i) for i in range(n)], "simhash int, fp_min long")
+        edges = spark.createDataFrame(
+            [e for i in range(n - 1) for e in ((i, i + 1), (i + 1, i))],
+            "s int, d int")
+        seams.release_seams()
+        calls.clear()
+        labels = llm_ops._cc_label_loop(members, edges)
+        held = seams.outstanding()
+        assert sorted(tuple(r) for r in labels.collect()) == [
+            (i, 0) for i in range(n)]
+        seams.release_seams()
+        return len(calls) - 2, held  # rounds: minus labels0 and edges
+
+    short, long_ = run(4), run(8)
+    assert short[0] >= 3 and long_[0] > short[0], (short, long_)
+    assert short[1] == long_[1] == 2, (short, long_)
+
+
 class _UnreleasableCheckpoint:
     """A checkpoint frame whose RDD accessor fails, so its unpersist
     cannot succeed."""
