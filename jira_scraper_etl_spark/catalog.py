@@ -71,26 +71,13 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         # micro/milli directly; normalize to ntz for stable plans/hashes.
         df = spark.read.parquet(path)
         return df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
-    try:
-        df = spark.read.schema(EVENTS_RAW_SCHEMA).parquet(path)
-        # integer `div`, not `/`: double division loses microsecond
-        # precision on ~1.7e18 nanosecond values
-        return df.withColumn(
-            "ts",
-            F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz"),
-        )
-    except Exception:
-        # Fallback for sessions where the legacy conf is unavailable:
-        # arrow-side cast on the driver. Only viable at test scale; the
-        # primary path above is the scalable one.
-        import pyarrow.parquet as pq
-
-        tbl = pq.read_table(path)
-        import pyarrow as pa
-
-        ts = tbl.column("ts").cast(pa.timestamp("us"))
-        tbl = tbl.set_column(tbl.schema.get_field_index("ts"), "ts", ts)
-        return spark.createDataFrame(tbl.to_pandas())
+    df = spark.read.schema(EVENTS_RAW_SCHEMA).parquet(path)
+    # integer `div`, not `/`: double division loses microsecond
+    # precision on ~1.7e18 nanosecond values
+    return df.withColumn(
+        "ts",
+        F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz"),
+    )
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

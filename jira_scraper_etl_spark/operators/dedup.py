@@ -211,16 +211,13 @@ def _fits_broadcast(df: DataFrame) -> bool:
     the measured cached bytes) against the session's
     autoBroadcastJoinThreshold. Used to apply join-strategy hints only
     in the regime they were written for (non-broadcastable sides)."""
-    from .fanout import _parse_bytes, _plan_size_bytes
+    from .fanout import _plan_size_bytes
 
     size = _plan_size_bytes(df)
     if size is None:
         return False
-    try:
-        thr = _parse_bytes(
-            df.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold"))
-    except Exception:
-        thr = 10 * 1024 * 1024
+    thr = df.sparkSession._jsparkSession.sessionState().conf() \
+        .autoBroadcastJoinThreshold()
     return 0 < size < thr
 
 

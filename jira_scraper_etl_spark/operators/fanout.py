@@ -66,29 +66,8 @@ def fan_out(df: DataFrame, min_bytes: int = LIGHT) -> DataFrame:
         return df.repartition(par)
     if size < min_bytes:
         return df
-    try:
-        max_split = _parse_bytes(
-            spark.conf.get("spark.sql.files.maxPartitionBytes"))
-    except Exception:
-        max_split = 128 * 1024 * 1024
+    max_split = spark._jsparkSession.sessionState().conf() \
+        .filesMaxPartitionBytes()
     if size >= par * max_split:  # scan already ≥ par splits
         return df
     return df.repartition(par)
-
-
-_BYTE_SUFFIXES = {"b": 1, "k": 1 << 10, "kb": 1 << 10, "m": 1 << 20,
-                  "mb": 1 << 20, "g": 1 << 30, "gb": 1 << 30,
-                  "t": 1 << 40, "tb": 1 << 40, "p": 1 << 50, "pb": 1 << 50}
-
-
-def _parse_bytes(v: str) -> int:
-    """Spark byte-size conf values: bare digits or '<digits><unit>'
-    with unit in b/k/kb/m/mb/g/gb/t/tb (case-insensitive) — '128m' and
-    '134217728b' are both common spellings; mis-parsing one silently
-    falls back to the 128 MiB default and mis-sizes the wide-scan
-    check."""
-    s = v.strip().lower()
-    for suf in sorted(_BYTE_SUFFIXES, key=len, reverse=True):
-        if s.endswith(suf):
-            return int(s.removesuffix(suf)) * _BYTE_SUFFIXES[suf]
-    return int(s)

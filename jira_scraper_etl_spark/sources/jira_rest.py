@@ -116,7 +116,6 @@ class SourceConfig:
     timeout_seconds: float = 15.0
     verify_ssl: bool = True
     incremental: bool = False
-    lookback_days: int = 7
     checkpoint_dir: str | None = None
     pages_per_partition: int = 4
     max_partitions: int = 64
@@ -147,7 +146,6 @@ class SourceConfig:
             timeout_seconds=get("timeout_seconds", float, 15.0),
             verify_ssl=get("verify_ssl", truthy, True),
             incremental=get("incremental", truthy, False),
-            lookback_days=get("lookback_days", int, 7),
             checkpoint_dir=options.get("checkpoint_dir"),
             pages_per_partition=get("pages_per_partition", int, 4),
             max_partitions=get("max_partitions", int, 64),

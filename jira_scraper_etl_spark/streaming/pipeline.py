@@ -34,12 +34,14 @@ import time
 from dataclasses import dataclass, field as dc_field
 
 import pyspark.sql.functions as F
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 
 from ..operators.transform import SILVER_SCHEMA, transform_issues
 from ..sources import register_jira_source
 from ..sources import offsets as OFF
 from ..sources.jira_rest import ISSUE_SCHEMA
+from .events import drain_query
 
 
 @dataclass
@@ -56,7 +58,6 @@ class PipelineConfig:
     retry_backoff_base: float = 2.0
     max_retries: int = 5
     incremental: bool = False
-    lookback_days: int = 7
     verify_ssl: bool = True
     transport: str = "requests"
     synthetic_total: int = 200
@@ -83,7 +84,6 @@ def _source_options(cfg: PipelineConfig, project: str) -> dict:
         "retry_backoff_base": str(cfg.retry_backoff_base),
         "max_retries": str(cfg.max_retries),
         "incremental": str(cfg.incremental).lower(),
-        "lookback_days": str(cfg.lookback_days),
         "verify_ssl": str(cfg.verify_ssl).lower(),
         "checkpoint_dir": cfg.dir("checkpoints"),
         "transport": cfg.transport,
@@ -237,9 +237,12 @@ def stream_issues(spark: SparkSession, cfg: PipelineConfig, project: str) -> Dat
             .options(**_source_options(cfg, project)).load())
 
 
+# Upper bound on AvailableNow runs in one drain; each run takes one page.
+_STREAM_MAX_ROUNDS = 1000
+
+
 def run_streaming_silver(spark: SparkSession, cfg: PipelineConfig, project: str,
-                         timeout_seconds: float = 120.0,
-                         max_rounds: int = 1000) -> int:
+                         timeout_seconds: float = 120.0) -> int:
     """Drain the source as micro-batches: one page per batch through the
     silver transform into a parquet sink. Spark's checkpointLocation
     provides exactly-once *offsets* (§2.9 T2); the sink makes the
@@ -251,8 +254,11 @@ def run_streaming_silver(spark: SparkSession, cfg: PipelineConfig, project: str,
 
     ``SimpleDataSourceStreamReader`` under ``Trigger.AvailableNow``
     prefetches a single batch per query run, so draining an existing
-    backlog takes repeated runs; we loop until the sink stops growing
-    (each run resumes from the same checkpoint). Returns rows in sink.
+    backlog takes repeated runs; we loop until a run reads no input rows
+    (each run resumes from the same checkpoint). Every run goes through
+    ``events.drain_query``, so a run still active after
+    ``timeout_seconds`` raises ``TimeoutError`` instead of returning a
+    partial drain. Returns rows in sink.
     """
     out_path = cfg.dir("silver_stream", f"project={project}")
     ckpt = cfg.dir("stream_checkpoints", project)
@@ -264,24 +270,16 @@ def run_streaming_silver(spark: SparkSession, cfg: PipelineConfig, project: str,
         (transform_issues(batch_df).write.mode("overwrite")
          .parquet(os.path.join(out_path, f"batch_id={batch_id}")))
 
-    def sink_count() -> int:
-        try:
-            return spark.read.parquet(out_path).count()
-        except Exception:
-            return 0  # sink not created yet
-
-    prev = sink_count()
-    for _ in range(max_rounds):
-        q = (stream_issues(spark, cfg, project).writeStream
-             .foreachBatch(sink_batch)
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination(timeout_seconds)
-        if q.isActive:
-            q.stop()
-        cur = sink_count()
-        if cur == prev:
+    for _ in range(_STREAM_MAX_ROUNDS):
+        q = drain_query(lambda: (
+            stream_issues(spark, cfg, project).writeStream
+            .foreachBatch(sink_batch)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()), timeout_seconds)
+        if not sum(p["numInputRows"] for p in q.recentProgress):
             break
-        prev = cur
-    return prev
+    try:
+        return spark.read.parquet(out_path).count()
+    except AnalysisException:
+        return 0  # the source was empty: no batch ever wrote

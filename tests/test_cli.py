@@ -22,7 +22,9 @@ def write_config(tmp_path, **kw) -> str:
 
 
 def test_default_runs_both_phases(spark, tmp_path, capsys):
-    cfgp = write_config(tmp_path)
+    # lookback_days is no longer a config key; old files that carry it
+    # still load (unknown keys are dropped)
+    cfgp = write_config(tmp_path, lookback_days=7)
     ok = cli.pipeline_main(["--config", cfgp], spark=spark)
     assert ok
     captured = capsys.readouterr()

@@ -59,14 +59,3 @@ def test_wide_scan_skips_exchange(spark, tmp_path):
 def test_fan_out_preserves_rows(spark, tmp_path):
     d = _mid_size_df(spark, tmp_path)
     assert fan_out(d, HEAVY).count() == d.count()
-
-
-def test_parse_bytes_units():
-    from jira_scraper_etl_spark.operators.fanout import _parse_bytes
-
-    assert _parse_bytes("134217728b") == 128 * 1024 * 1024
-    assert _parse_bytes("128m") == 128 * 1024 * 1024
-    assert _parse_bytes("512M") == 512 * 1024 * 1024
-    assert _parse_bytes("1g") == 1 << 30
-    assert _parse_bytes("64k") == 64 * 1024
-    assert _parse_bytes("4096") == 4096

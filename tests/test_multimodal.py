@@ -388,6 +388,22 @@ def test_wav_sample_decode_exact():
     assert (d["sample_min"], d["sample_max"]) == (-32768, 32767)
 
 
+def test_wav_sample_stats_matches_python_decode(spark):
+    """The Spark pass over attach_pcm_wav rows returns exactly what
+    decode_wav_samples gives per row in Python (every sample count
+    8..16 appears across the 40 ids)."""
+    d = spark.range(0, 40, numPartitions=3).select(
+        F.col("id").alias("doc_id"))
+    wav = MM.attach_pcm_wav(d)
+    cols = [f.name for f in MM.SAMPLES_SCHEMA.fields if f.name != "doc_id"]
+    got = {r.doc_id: r.asDict() for r in MM.wav_sample_stats(wav).collect()}
+    want = {}
+    for r in wav.collect():
+        s = MM.decode_wav_samples(bytes(r.content))
+        want[r.doc_id] = {"doc_id": r.doc_id, **{c: s[c] for c in cols}}
+    assert len(want) == 40 and got == want
+
+
 def test_png_pixel_roundtrip_every_filter_type():
     """encode_png → decode_png_pixels is the identity on the raster,
     for each single filter type AND a mixed per-row sequence — the

@@ -198,3 +198,12 @@ def test_streaming_silver_drain_and_resume(spark, tmp_path):
     # rerun: checkpointed offsets mean no duplicate appends
     run_streaming_silver(spark, cfg, "SPARK")
     assert spark.read.parquet(cfg.dir("silver_stream", "project=SPARK")).count() == 120
+
+
+def test_streaming_silver_timeout_raises(spark, tmp_path):
+    """A run still active at the deadline raises instead of coming back
+    as a short row count."""
+    cfg = make_cfg(tmp_path, projects=["SPARK"], synthetic_total=120,
+                   max_results=50)
+    with pytest.raises(TimeoutError):
+        run_streaming_silver(spark, cfg, "SPARK", timeout_seconds=0.01)
