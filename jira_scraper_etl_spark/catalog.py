@@ -34,9 +34,6 @@ TABLES = [
     "orders", "lineitem", "events", "documents", "embeddings",
 ]
 
-# Tables small enough to broadcast at ANY scale factor (bounded-size dims).
-BROADCASTABLE = {"region", "nation"}
-
 EVENTS_RAW_SCHEMA = T.StructType([
     T.StructField("event_id", T.LongType()),
     T.StructField("ts", T.LongType()),  # nanos-as-long (see module doc)

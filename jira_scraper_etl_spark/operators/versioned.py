@@ -87,7 +87,15 @@ def write_version(df: DataFrame, table_dir: str,
 
 def load_manifest(table_dir: str, version: int) -> dict:
     """The committed manifest of ``version`` (raises if uncommitted)."""
-    return json.load(open(_manifest_path(table_dir, version)))
+    with open(_manifest_path(table_dir, version)) as f:
+        return json.load(f)
+
+
+def latest_batch_id(table_dir: str) -> int | None:
+    """The micro-batch id in the newest committed manifest (None for a
+    fresh table): the streaming sinks' replay watermark."""
+    ver = latest_version(table_dir)
+    return None if ver is None else load_manifest(table_dir, ver).get("batch_id")
 
 
 def effective_versions(table_dir: str) -> list[int]:

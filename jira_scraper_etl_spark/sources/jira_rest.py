@@ -33,9 +33,11 @@ as a parallel, partitioned scan:
   dedup-by-key; the saved ``start_at`` is used only to resume an
   interrupted *non-cutoff* scan (the reference combines both and
   silently fetches nothing after a completed full scan — a defect, not
-  parity worth keeping). Streaming mode implements
-  ``SimpleDataSourceStreamReader`` (one page per micro-batch, offsets
-  owned by Spark's checkpoint log once running).
+  parity worth keeping).
+* **One read path for batch and streaming** — the stream reader's
+  ``latestOffset`` is the batch scan's ``total`` probe and its
+  ``partitions`` are ``plan_ranges``, read on executors by
+  ``read_pages``; Spark's checkpoint log owns streaming offsets.
 
 Transports: ``requests`` for real HTTP (import-gated), and a
 deterministic ``synthetic`` in-process server for tests/benchmarks —
@@ -53,6 +55,7 @@ Usage::
 from __future__ import annotations
 
 import json
+import re
 import time
 from dataclasses import dataclass, field
 from typing import Any, Callable, Iterator, Sequence
@@ -60,12 +63,12 @@ from typing import Any, Callable, Iterator, Sequence
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
+    DataSourceStreamReader,
     EqualTo,
     Filter,
     GreaterThan,
     GreaterThanOrEqual,
     InputPartition,
-    SimpleDataSourceStreamReader,
 )
 from pyspark.sql import types as T
 
@@ -131,29 +134,29 @@ class SourceConfig:
 
     @classmethod
     def from_options(cls, options: dict) -> "SourceConfig":
-        def get(k, cast, default):
-            v = options.get(k)
-            return default if v is None else cast(v)
+        def get(k, cast, option=None):
+            v = options.get(option or k)
+            return getattr(cls, k) if v is None else cast(v)
         truthy = lambda v: str(v).lower() in ("1", "true", "yes")
         return cls(
-            base_url=get("url", str, cls.base_url).rstrip("/"),
-            project=get("project", str, cls.project),
-            max_results=get("max_results", int, cls.max_results),
-            polite_delay_seconds=get("polite_delay_seconds", float, 0.0),
-            rate_limit_sleep_seconds=get("rate_limit_sleep_seconds", float, 30.0),
-            retry_backoff_base=get("retry_backoff_base", float, 2.0),
-            max_retries=get("max_retries", int, 5),
-            timeout_seconds=get("timeout_seconds", float, 15.0),
-            verify_ssl=get("verify_ssl", truthy, True),
-            incremental=get("incremental", truthy, False),
-            checkpoint_dir=options.get("checkpoint_dir"),
-            pages_per_partition=get("pages_per_partition", int, 4),
-            max_partitions=get("max_partitions", int, 64),
-            transport=get("transport", str, "requests"),
-            total=get("total", int, 200),
-            updated_since=options.get("updated_since"),
-            record_params_path=options.get("record_params_path"),
-            flaky_dir=options.get("flaky_dir"),
+            base_url=get("base_url", str, "url").rstrip("/"),
+            project=get("project", str),
+            max_results=get("max_results", int),
+            polite_delay_seconds=get("polite_delay_seconds", float),
+            rate_limit_sleep_seconds=get("rate_limit_sleep_seconds", float),
+            retry_backoff_base=get("retry_backoff_base", float),
+            max_retries=get("max_retries", int),
+            timeout_seconds=get("timeout_seconds", float),
+            verify_ssl=get("verify_ssl", truthy),
+            incremental=get("incremental", truthy),
+            checkpoint_dir=get("checkpoint_dir", str),
+            pages_per_partition=get("pages_per_partition", int),
+            max_partitions=get("max_partitions", int),
+            transport=get("transport", str),
+            total=get("total", int),
+            updated_since=get("updated_since", str),
+            record_params_path=get("record_params_path", str),
+            flaky_dir=get("flaky_dir", str),
         )
 
 
@@ -240,15 +243,11 @@ def synthetic_issue(project: str, i: int) -> dict:
     }
 
 
-_JQL_CUTOFF_RE = None  # compiled lazily (module import stays regex-free)
+_JQL_CUTOFF_RE = re.compile(r"updated\s*>=\s*'([^']+)'")
 
 
 def _jql_cutoff(jql: str) -> str | None:
     """Extract the ``updated >= 'date'`` cutoff from a JQL string."""
-    global _JQL_CUTOFF_RE
-    if _JQL_CUTOFF_RE is None:
-        import re
-        _JQL_CUTOFF_RE = re.compile(r"updated\s*>=\s*'([^']+)'")
     m = _JQL_CUTOFF_RE.search(jql or "")
     return m.group(1) if m else None
 
@@ -392,7 +391,7 @@ def read_pages(cfg: SourceConfig, jql: str, start: int, end: int) -> Iterator[tu
 
 
 # ---------------------------------------------------------------------------
-# Batch reader
+# Planning, shared by the batch and streaming readers
 # ---------------------------------------------------------------------------
 
 @dataclass
@@ -400,6 +399,31 @@ class PageRange(InputPartition):
     start_at: int
     end_at: int  # exclusive
 
+
+def probe_total(cfg: SourceConfig, jql: str, start: int) -> int:
+    """The server's ``total`` for ``jql`` from a one-issue request — the
+    only transport call a driver makes (`extract.py:277`)."""
+    _, total = fetch_page(make_transport(cfg), cfg, jql, start,
+                          max_results=1)
+    return total
+
+
+def plan_ranges(cfg: SourceConfig, start: int, end: int) -> list[PageRange]:
+    """Issues ``[start, end)`` as ranges of ``pages_per_partition`` pages,
+    at most ``max_partitions`` of them (ranges grow instead, page-aligned:
+    bounded task count at any total). ``[]`` for an empty range."""
+    if end <= start:
+        return []
+    span = cfg.max_results * cfg.pages_per_partition
+    if -(-(end - start) // span) > cfg.max_partitions:
+        span = -(-(end - start) // cfg.max_partitions)
+        span = -(-span // cfg.max_results) * cfg.max_results  # page-align
+    return [PageRange(s, min(s + span, end)) for s in range(start, end, span)]
+
+
+# ---------------------------------------------------------------------------
+# Batch reader
+# ---------------------------------------------------------------------------
 
 class JiraRestReader(DataSourceReader):
     def __init__(self, options: dict):
@@ -444,23 +468,10 @@ class JiraRestReader(DataSourceReader):
                     (self.cfg.incremental and self._base_offset.last_updated))
 
     def partitions(self) -> Sequence[PageRange]:
-        """Driver-side plan: one cheap probe for ``total``, then page
-        ranges sized ``pages_per_partition``, capped at
-        ``max_partitions`` (ranges grow instead — bounded task count on
-        a 1000-executor cluster, arbitrarily large total)."""
-        cfg = self.cfg
+        """An exhausted source still gets one, empty, partition."""
         start = 0 if self._cutoff_active() else self._base_offset.start_at
-        _, total = fetch_page(make_transport(cfg), cfg, self._jql, start,
-                              max_results=1)
-        if total <= start:
-            return [PageRange(start, start)]
-        span = cfg.max_results * cfg.pages_per_partition
-        n_parts = -(-(total - start) // span)
-        if n_parts > cfg.max_partitions:
-            span = -(-(total - start) // cfg.max_partitions)
-            span = -(-span // cfg.max_results) * cfg.max_results  # page-align
-        return [PageRange(s, min(s + span, total))
-                for s in range(start, total, span)]
+        total = probe_total(self.cfg, self._jql, start)
+        return plan_ranges(self.cfg, start, total) or [PageRange(start, start)]
 
     def read(self, partition: PageRange) -> Iterator[tuple]:
         return read_pages(self.cfg, self._jql, partition.start_at,
@@ -471,10 +482,11 @@ class JiraRestReader(DataSourceReader):
 # Streaming reader (micro-batch page tailing; parity: §2.9 T1-T3)
 # ---------------------------------------------------------------------------
 
-class JiraRestStreamReader(SimpleDataSourceStreamReader):
-    """One page per micro-batch. Spark's checkpointLocation owns offset
-    durability; the project offset file only seeds ``initialOffset`` and
-    mirrors commits for operability (worker-status parity, §2.9 T7)."""
+class JiraRestStreamReader(DataSourceStreamReader):
+    """A micro-batch is every issue up to the probed ``total``. Spark's
+    checkpointLocation owns offset durability; the project offset file
+    only seeds ``initialOffset`` and mirrors commits for operability
+    (worker-status parity, §2.9 T7)."""
 
     def __init__(self, options: dict):
         self.cfg = SourceConfig.from_options(options)
@@ -486,30 +498,23 @@ class JiraRestStreamReader(SimpleDataSourceStreamReader):
             base = OFF.load(self.cfg.checkpoint_dir, self.cfg.project)
         return {"start_at": base.start_at}
 
-    def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
-        cfg = self.cfg
-        start_at = int(start["start_at"])
-        issues, total = fetch_page(make_transport(cfg), cfg, self._jql, start_at)
-        if not issues or start_at >= total:
-            return iter([]), {"start_at": start_at}
-        rows = [issue_to_row(raw) for raw in issues]
-        latest = max((r[10] for r in rows if r[10]), default=None)
-        if cfg.checkpoint_dir:
-            OFF.save(cfg.checkpoint_dir, cfg.project,
-                     OFF.Offset(start_at + len(rows), latest))
-        return iter(rows), {"start_at": start_at + len(rows)}
+    def latestOffset(self) -> dict:
+        return {"start_at": probe_total(self.cfg, self._jql, 0)}
 
-    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
-        """Deterministically re-read a committed-but-unprocessed batch
-        during failure recovery (Spark calls this when restarting from a
-        checkpoint mid-batch; the base class raises otherwise). The
-        paged source is deterministic by range, so this is the batch
-        page loop from ``start.start_at`` to ``end.start_at``."""
-        return read_pages(self.cfg, self._jql, int(start["start_at"]),
-                          int(end["start_at"]))
+    def partitions(self, start: dict, end: dict) -> Sequence[PageRange]:
+        return plan_ranges(self.cfg, int(start["start_at"]),
+                           int(end["start_at"]))
+
+    def read(self, partition: PageRange) -> Iterator[tuple]:
+        return read_pages(self.cfg, self._jql, partition.start_at,
+                          partition.end_at)
 
     def commit(self, end: dict) -> None:
-        pass  # offset file already mirrored in read(); Spark log is canonical
+        cfg = self.cfg
+        if cfg.checkpoint_dir:
+            saved = OFF.load(cfg.checkpoint_dir, cfg.project)
+            OFF.save(cfg.checkpoint_dir, cfg.project,
+                     OFF.Offset(int(end["start_at"]), saved.last_updated))
 
 
 # ---------------------------------------------------------------------------
@@ -529,7 +534,7 @@ class JiraRestDataSource(DataSource):
     def reader(self, schema: T.StructType) -> JiraRestReader:
         return JiraRestReader(dict(self.options))
 
-    def simpleStreamReader(self, schema: T.StructType) -> JiraRestStreamReader:
+    def streamReader(self, schema: T.StructType) -> JiraRestStreamReader:
         return JiraRestStreamReader(dict(self.options))
 
 

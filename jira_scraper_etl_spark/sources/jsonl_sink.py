@@ -186,11 +186,12 @@ class JsonlCommitWriter(DataSourceWriter):
 
 class JsonlCommitStreamWriter(DataSourceStreamWriter):
     """Streaming twin: per-microbatch exactly-once via batch-id
-    directories — the same idempotent-overwrite contract
-    ``streaming/pipeline.py::run_streaming_silver`` implements by hand
-    (``batch_id=N`` dirs), expressed through the DataSourceStreamWriter
-    protocol: a replayed batch id re-publishes the SAME directory, so
-    downstream readers never see duplicates.
+    directories — the ``batch_id=N`` overwrite contract of the
+    ``streaming/pipeline.py::run_streaming_silver`` sink (replay test:
+    ``test_pipeline.py::test_streaming_silver_recovers_lost_commit``),
+    expressed through the DataSourceStreamWriter protocol: a replayed
+    batch id re-publishes the SAME directory, so downstream readers
+    never see duplicates.
 
     A query killed between stage and publish may leave its
     ``_staging-<uid>`` dir behind; the orphan is inert (underscore

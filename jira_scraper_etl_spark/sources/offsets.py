@@ -8,9 +8,9 @@ fallback), and missing/corrupt files degrading to a zero offset.
 
 In Spark terms this is the batch analog of a Structured Streaming
 offset log: ``load`` is ``initialOffset``, ``save`` is ``commit``.
-The streaming reader (sources/jira_rest.py) uses it for its initial
-offset only — once a streaming query runs, Spark's own
-``checkpointLocation`` owns offset durability.
+The streaming reader (sources/jira_rest.py) seeds its initial offset
+from it and mirrors each commit into it — once a streaming query runs,
+Spark's own ``checkpointLocation`` owns offset durability.
 """
 
 from __future__ import annotations

@@ -60,8 +60,6 @@ Scale shape, per micro-batch:
 
 from __future__ import annotations
 
-import json
-import os
 from collections import defaultdict
 from collections.abc import Callable
 
@@ -122,8 +120,8 @@ def maybe_compact(spark: SparkSession, table_dir: str, batch_id: int,
     directory and readers keep the uncompacted read set — the content
     is REDUNDANT by construction, so deferring it to a later trigger
     changes nothing logically. It carries the committing batch's
-    ``batch_id`` so latest_admitted_batch (replay idempotence) sees the
-    same watermark whether or not the compaction landed.
+    ``batch_id`` so ``versioned.latest_batch_id`` (replay idempotence)
+    sees the same watermark whether or not the compaction landed.
 
     Cost shape at 100 TB: the corpus index is (doc_id, h, simhash) —
     ~40 B/doc, not the documents themselves — and one rewrite every
@@ -140,16 +138,6 @@ def maybe_compact(spark: SparkSession, table_dir: str, batch_id: int,
     return V.write_version(
         snapshot, table_dir,
         extra={"compacts_through": thru, "batch_id": batch_id})
-
-
-def latest_admitted_batch(table_dir: str) -> int | None:
-    """Micro-batch id recorded by the newest committed version."""
-    ver = V.latest_version(table_dir)
-    if ver is None:
-        return None
-    mf = json.load(open(os.path.join(table_dir, f"v={ver}",
-                                     "manifest.json")))
-    return mf.get("batch_id")
 
 
 def _nibble_blocks(fps: DataFrame, fp_col: str, *keep: str) -> DataFrame:
@@ -250,7 +238,7 @@ def foreach_batch_dedup(
     at-least-once window before the checkpoint commit."""
 
     def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        last = latest_admitted_batch(table_dir)
+        last = V.latest_batch_id(table_dir)
         if last is not None and batch_id <= last:
             return  # replay of an already-committed batch: no-op
         corpus = corpus_index(batch.sparkSession, table_dir)

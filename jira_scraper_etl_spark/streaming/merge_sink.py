@@ -35,8 +35,6 @@ file layout, not this sink's commit or idempotence protocol.
 
 from __future__ import annotations
 
-import json
-import os
 from collections.abc import Callable
 
 import pyspark.sql.functions as F
@@ -52,18 +50,6 @@ from ..operators import versioned as V
 # ~10^18 of headroom: a single key absorbing an entire 100 TB order
 # stream (~10^12 rows × ~10^4 avg price) still fits.
 BAL = "decimal(20,2)"
-
-
-def latest_merged_batch(table_dir: str) -> int | None:
-    """The micro-batch id recorded by the newest committed version, or
-    None for a fresh table. Torn (manifest-less) directories are
-    invisible here by the commit protocol."""
-    ver = V.latest_version(table_dir)
-    if ver is None:
-        return None
-    mf = json.load(open(os.path.join(table_dir, f"v={ver}",
-                                     "manifest.json")))
-    return mf.get("batch_id")
 
 
 def order_deltas(batch: DataFrame) -> DataFrame:
@@ -122,7 +108,7 @@ def foreach_batch_merge(
     time-travel window (versioned.gc_versions)."""
 
     def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        last = latest_merged_batch(table_dir)
+        last = V.latest_batch_id(table_dir)
         if last is not None and batch_id <= last:
             return  # replay of an already-committed batch: no-op
         prev = V.latest_version(table_dir)

@@ -237,28 +237,28 @@ def stream_issues(spark: SparkSession, cfg: PipelineConfig, project: str) -> Dat
             .options(**_source_options(cfg, project)).load())
 
 
-# Upper bound on AvailableNow runs in one drain; each run takes one page.
+# Upper bound on AvailableNow runs in one drain.
 _STREAM_MAX_ROUNDS = 1000
 
 
 def run_streaming_silver(spark: SparkSession, cfg: PipelineConfig, project: str,
                          timeout_seconds: float = 120.0) -> int:
-    """Drain the source as micro-batches: one page per batch through the
-    silver transform into a parquet sink. Spark's checkpointLocation
-    provides exactly-once *offsets* (§2.9 T2); the sink makes the
-    *writes* exactly-once too by writing every micro-batch to its own
-    ``batch_id=N`` partition directory with ``overwrite`` — a retried
-    batch (failure between sink write and offset commit) overwrites its
-    own directory instead of appending duplicates. Readers of the sink
-    path see ``batch_id`` as an ordinary partition column.
+    """Drain the source through the silver transform into a parquet
+    sink, each micro-batch read on executors like the batch scan.
+    Spark's checkpointLocation provides exactly-once *offsets* (§2.9
+    T2); the sink makes the *writes* exactly-once too by writing every
+    micro-batch to its own ``batch_id=N`` partition directory with
+    ``overwrite`` — a retried batch (failure between sink write and
+    offset commit) overwrites its own directory instead of appending
+    duplicates. Readers of the sink path see ``batch_id`` as an
+    ordinary partition column.
 
-    ``SimpleDataSourceStreamReader`` under ``Trigger.AvailableNow``
-    prefetches a single batch per query run, so draining an existing
-    backlog takes repeated runs; we loop until a run reads no input rows
-    (each run resumes from the same checkpoint). Every run goes through
-    ``events.drain_query``, so a run still active after
-    ``timeout_seconds`` raises ``TimeoutError`` instead of returning a
-    partial drain. Returns rows in sink.
+    A restart whose last commit was lost replays that batch, and the
+    ``Trigger.AvailableNow`` run ends there, so we loop until a run
+    reads no input rows (each resumes from the same checkpoint).
+    Every run goes through ``events.drain_query``, so a run still
+    active after ``timeout_seconds`` raises ``TimeoutError`` instead of
+    returning a partial drain. Returns rows in sink.
     """
     out_path = cfg.dir("silver_stream", f"project={project}")
     ckpt = cfg.dir("stream_checkpoints", project)

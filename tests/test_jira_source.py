@@ -145,6 +145,10 @@ def test_issue_to_row_null_safety():
 
 # -- partition planning ------------------------------------------------------
 
+def test_source_config_option_defaults():
+    assert J.SourceConfig.from_options({}) == J.SourceConfig()
+
+
 def test_partition_planning_page_ranges():
     r = J.JiraRestReader({"transport": "synthetic", "total": "437",
                           "max_results": "50", "pages_per_partition": "2"})
@@ -288,39 +292,41 @@ def test_spark_scan_filter_pushdown_still_correct(spark):
 def test_stream_reader_pages_and_offsets(tmp_path):
     r = J.JiraRestStreamReader({"transport": "synthetic", "total": "120",
                                 "max_results": "50",
+                                "pages_per_partition": "1",
                                 "checkpoint_dir": str(tmp_path)})
     assert r.initialOffset() == {"start_at": 0}
-    rows1, off1 = r.read({"start_at": 0})
-    assert len(list(rows1)) == 50 and off1 == {"start_at": 50}
-    rows3, off3 = r.read({"start_at": 100})
-    assert len(list(rows3)) == 20 and off3 == {"start_at": 120}
-    # exhausted: no rows, offset unchanged
-    rows4, off4 = r.read({"start_at": 120})
-    assert list(rows4) == [] and off4 == {"start_at": 120}
-    # offset file mirrored for operability
+    assert r.latestOffset() == {"start_at": 120}
+    parts = r.partitions({"start_at": 0}, {"start_at": 120})
+    assert [(p.start_at, p.end_at) for p in parts] == [
+        (0, 50), (50, 100), (100, 120)]
+    # exhausted: an empty offset range plans no partitions
+    assert r.partitions({"start_at": 120}, {"start_at": 120}) == []
+    assert len(list(r.read(parts[-1]))) == 20
+    # offset file mirrored on commit for operability
+    r.commit({"start_at": 120})
     assert OFF.load(str(tmp_path), "SPARK").start_at == 120
 
 
-def test_stream_read_between_offsets_recovery(monkeypatch):
-    """Failure recovery: Spark re-reads a committed-but-unprocessed
-    batch via readBetweenOffsets; the paged source is deterministic by
-    range, so the replay must equal the original read. The replay runs
-    the batch page loop, so it keeps the politeness delay too."""
+def test_stream_read_replays_partition(monkeypatch):
+    """Failure recovery: Spark replays a batch whose commit was lost by
+    planning and reading the same offset range again; the paged source
+    is deterministic by range, so the replay must equal the original
+    read. It runs the batch page loop, so it keeps the politeness delay
+    too."""
     r = J.JiraRestStreamReader({"transport": "synthetic", "total": "120",
                                 "max_results": "50"})
-    original, _ = r.read({"start_at": 50})
-    replay = r.readBetweenOffsets({"start_at": 50}, {"start_at": 100})
-    assert list(replay) == list(original)
-    # partial range replays exactly that slice
-    assert len(list(r.readBetweenOffsets({"start_at": 0}, {"start_at": 30}))) == 30
+    original = list(r.read(J.PageRange(50, 100)))
+    assert len(original) == 50
+    assert list(r.read(J.PageRange(50, 100))) == original
+    # partial range reads exactly that slice
+    assert len(list(r.read(J.PageRange(0, 30)))) == 30
     # empty range
-    assert list(r.readBetweenOffsets({"start_at": 10}, {"start_at": 10})) == []
+    assert list(r.read(J.PageRange(10, 10))) == []
     # three pages (50 + 50 + 20): a polite pause between pages, not after
     slept: list[float] = []
     monkeypatch.setattr(J.time, "sleep", slept.append)
     polite = J.JiraRestStreamReader({"transport": "synthetic", "total": "120",
                                      "max_results": "50",
                                      "polite_delay_seconds": "0.5"})
-    assert len(list(polite.readBetweenOffsets({"start_at": 0},
-                                              {"start_at": 120}))) == 120
+    assert len(list(polite.read(J.PageRange(0, 120)))) == 120
     assert slept == [0.5, 0.5]

@@ -154,6 +154,9 @@ def test_streaming_silver_soak_crash_every_batch(spark, tmp_path):
 
     prev, stable = sink_count(), 0
     for _ in range(20):  # each run = one query start from the checkpoint
+        # a micro-batch takes the whole backlog, so grow the source one
+        # page per new batch to get one crash per page
+        cfg.synthetic_total = min(150, 50 * (len(crashed) + 1))
         q = (P.stream_issues(spark, cfg, "SPARK").writeStream
              .foreachBatch(sink)
              .option("checkpointLocation", ckpt)
@@ -198,6 +201,28 @@ def test_streaming_silver_drain_and_resume(spark, tmp_path):
     # rerun: checkpointed offsets mean no duplicate appends
     run_streaming_silver(spark, cfg, "SPARK")
     assert spark.read.parquet(cfg.dir("silver_stream", "project=SPARK")).count() == 120
+
+
+def test_streaming_silver_recovers_lost_commit(spark, tmp_path):
+    """The production sink's replay: with the last checkpoint commit
+    lost, a restart replays that batch into its own ``batch_id`` dir,
+    and the issues that arrived since are still drained."""
+    import glob
+    import os
+
+    cfg = make_cfg(tmp_path, projects=["SPARK"], synthetic_total=120,
+                   max_results=50)
+    run_streaming_silver(spark, cfg, "SPARK")
+    commits = os.path.join(cfg.dir("stream_checkpoints", "SPARK"), "commits")
+    last = max((f for f in os.listdir(commits) if f.isdigit()), key=int)
+    os.remove(os.path.join(commits, last))
+    for crc in glob.glob(os.path.join(commits, f".{last}.crc")):
+        os.remove(crc)
+    cfg.synthetic_total = 170
+    run_streaming_silver(spark, cfg, "SPARK")
+    out = spark.read.parquet(cfg.dir("silver_stream", "project=SPARK"))
+    assert out.count() == 170
+    assert out.select("id").distinct().count() == 170
 
 
 def test_streaming_silver_timeout_raises(spark, tmp_path):

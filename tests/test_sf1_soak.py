@@ -553,7 +553,7 @@ def test_streaming_merge_crash_resume_soak(spark, tmp_path):
     with pytest.raises(Exception, match="injected crash"):
         MS.run_merge_stream(spark, d, table, ck, seed=seed,
                             crash_hook=crash_once, timeout_seconds=600)
-    assert MS.latest_merged_batch(table) == 1
+    assert V.latest_batch_id(table) == 1
     final = MS.run_merge_stream(spark, d, table, ck, timeout_seconds=600)
     want = MS.merge_balances(seed, MS.order_deltas(raw))
     got_c, want_c = final.count(), want.count()

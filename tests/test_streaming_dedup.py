@@ -99,7 +99,7 @@ def test_stream_converges_to_one_shot(spark, sf_dir, docs_dir, tmp_path):
     assert {tuple(r) for r in final.collect()} == one_shot_truth(spark, sf_dir)
     # delta-append layout: seed + one version per micro-batch
     assert len(V.committed_versions(table)) == 4
-    assert DS.latest_admitted_batch(table) == 2
+    assert V.latest_batch_id(table) == 2
 
 
 def test_crash_resume_converges_and_stays_idempotent(
@@ -119,7 +119,7 @@ def test_crash_resume_converges_and_stays_idempotent(
         DS.run_dedup_stream(spark, docs_dir, table, ck,
                             seed=DS.fingerprint_docs(old),
                             crash_hook=crash_once)
-    assert DS.latest_admitted_batch(table) == 1
+    assert V.latest_batch_id(table) == 1
     mid = corpus_set(spark, table)  # readable mid-crash, never torn
     assert mid
     final = DS.run_dedup_stream(spark, docs_dir, table, ck)
@@ -198,7 +198,7 @@ def test_compaction_bounds_read_set_and_converges(spark, sf_dir, tmp_path):
     assert len(committed) > len(eff)
     # the newest version carries the newest batch watermark regardless
     # of whether it is a delta or a compaction
-    assert DS.latest_admitted_batch(table) == 5
+    assert V.latest_batch_id(table) == 5
     # the read set's content is closed under supersession: reading ALL
     # deltas (ignoring compactions) gives the same logical corpus
     deltas = [v for v in committed
@@ -252,7 +252,7 @@ def test_crash_during_compaction_window_converges(spark, sf_dir, tmp_path):
                             seed=DS.fingerprint_docs(old),
                             crash_hook=crash_compacted, compact_every=2)
     assert seen  # the crash really hit the post-compaction seam
-    wm = DS.latest_admitted_batch(t2)
+    wm = V.latest_batch_id(t2)
     f2 = DS.run_dedup_stream(spark, d, t2, ck2, compact_every=2)
     assert {tuple(r) for r in f2.collect()} == truth
     assert wm == seen[0]  # the compaction carried the batch watermark
@@ -281,4 +281,4 @@ def test_gc_bounds_dedup_table_and_preserves_content(spark, sf_dir, tmp_path):
     assert set(eff) <= set(committed)
     assert len(committed) <= len(eff) + 3, committed
     # replay watermark still intact on the surviving newest version
-    assert DS.latest_admitted_batch(table) == 5
+    assert V.latest_batch_id(table) == 5

@@ -59,7 +59,7 @@ def test_stream_merge_equals_batch_merge(spark, sf_dir, orders_dir, tmp_path):
     # one committed version per micro-batch + the seed, ids monotone
     vs = V.committed_versions(table)
     assert len(vs) == 4
-    ids = [MS.latest_merged_batch(table)]
+    ids = [V.latest_batch_id(table)]
     assert ids == [2]
 
 
@@ -81,13 +81,13 @@ def test_crash_after_commit_before_checkpoint_replays_idempotently(
         MS.run_merge_stream(spark, orders_dir, table, ck, seed=seed,
                             crash_hook=crash_once)
     # batch 1's version IS committed (crash was post-commit)…
-    assert MS.latest_merged_batch(table) == 1
+    assert V.latest_batch_id(table) == 1
     mid = snap(spark, table)  # …and readable: the table is never torn
     assert mid
     # resume: batch 1 replays and is skipped, batch 2 applies
     final = MS.run_merge_stream(spark, orders_dir, table, ck)
     assert {tuple(r) for r in final.collect()} == batch_truth(spark, sf_dir)
-    assert MS.latest_merged_batch(table) == 2
+    assert V.latest_batch_id(table) == 2
     assert len(V.committed_versions(table)) == 4  # seed + 3 batches, no dupes
 
 
