@@ -17,7 +17,7 @@ mirror the same arithmetic digit-for-digit.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 
 from ..functions.hashing import shingles_from_tokens, word_tokens
 from .fanout import HEAVY, fan_out
@@ -87,16 +87,27 @@ def shingled_docs(df: DataFrame, id_col: str = "doc_id",
 MOD32 = 4294967296  # 2^32 — Kirsch-Mitzenmacher family modulus
 
 
+def km_signature(hp: DataFrame, id_col: str = "doc_id",
+                 k: int = N_HASHES) -> DataFrame:
+    """(id, mh0..mh{k-1}) from (id, h1, h2) rows: the Kirsch-Mitzenmacher
+    family ``mh_i = min((h1 + i·h2) mod 2³²)`` as k min-aggregates.
+
+    Each aggregate is one SQL string, parsed on the JVM side: building
+    the same expression from ``Column`` calls cost ~80 py4j round trips
+    per hash on the driver. Partial aggregation runs map-side, so the
+    shuffle carries k longs per doc whatever the document size."""
+    return hp.groupBy(id_col).agg(
+        *[F.expr(f"min((h1 + {i} * h2) % {MOD32}) AS mh{i}")
+          for i in range(k)])
+
+
 def minhash_signatures(docs: DataFrame, id_col: str = "doc_id",
                        k: int = N_HASHES) -> DataFrame:
     """(id, mh0..mh{k-1}) integer MinHash signature columns.
 
-    explode → ONE md5 per shingle → Kirsch-Mitzenmacher family
-    ``h_i = (h1 + i·h2) mod 2³²`` (h1/h2 = the md5's two 32-bit hex
-    halves) → k min-aggregates. One cryptographic hash instead of k
-    (was k seeded md5s: 2.3s → 0.3s at sf0.1), and the shuffle carries
-    k longs per doc, not k 32-char hex strings. Partial aggregation
-    runs map-side, so shuffle size is independent of document size.
+    explode → ONE md5 per shingle → h1/h2 = the md5's two 32-bit hex
+    halves → :func:`km_signature`. One cryptographic hash instead of k,
+    and the shuffle carries k longs per doc, not k hex strings.
 
     Staged as separate projections (md5, then halves) so the non-cheap
     md5/substring expressions are evaluated once, not once per
@@ -108,100 +119,58 @@ def minhash_signatures(docs: DataFrame, id_col: str = "doc_id",
         F.conv(F.substring("m", 1, 8), 16, 10).cast("bigint").alias("h1"),
         F.conv(F.substring("m", 9, 8), 16, 10).cast("bigint").alias("h2"),
     )
-    return hp.groupBy(id_col).agg(
-        *[F.min((F.col("h1") + F.lit(i) * F.col("h2")) % F.lit(MOD32)).alias(f"mh{i}")
-          for i in range(k)])
+    return km_signature(hp, id_col, k)
 
 
 def band_keys_df(sig: DataFrame, id_col: str = "doc_id",
                  bands: int = N_BANDS, rows: int = BAND_ROWS) -> DataFrame:
     """(id, key): one row per LSH band; key = xxhash64(band_index,
     band's signature rows) — an 8-byte long with the band index folded
-    in, so every downstream exchange carries one long instead of the
-    former (band int, 32-char md5 hex) pair. Band keys are engine-local
-    equivalence classes, never output values: the DuckDB oracle in
-    plans/llm_ops.py models the same classes with md5-of-concat, and
-    equal signature tuples produce equal keys under both (the exact
-    Jaccard verify stage makes sub-2⁻⁶⁴ cross-band collisions harmless).
-    This is the hash-compaction that took dedup_jaccard_prefix from
-    464 s to 33.9 s at sf1 (BASELINE.md), applied to the MinHash path."""
-    entries = F.array(*[
-        F.xxhash64(F.lit(b), *[F.col(f"mh{b * rows + r}") for r in range(rows)])
-        for b in range(bands)
-    ])
-    return sig.select(id_col, F.explode(entries).alias("key"))
+    in, so every downstream exchange carries one long instead of a
+    (band, hex digest) pair. Band keys are engine-local equivalence
+    classes, never output values: the DuckDB oracle in plans/llm_ops.py
+    models the same classes with md5-of-concat, and equal signature
+    tuples produce equal keys under both (the exact Jaccard verify makes
+    sub-2⁻⁶⁴ cross-band collisions harmless). Built as one SQL string
+    for the same driver-cost reason as :func:`km_signature`."""
+    keys = ", ".join(
+        f"xxhash64({b}, "
+        + ", ".join(f"mh{b * rows + r}" for r in range(rows)) + ")"
+        for b in range(bands))
+    return sig.selectExpr(f"`{id_col}`", f"explode(array({keys})) AS key")
 
 
 def candidate_pairs(banded: DataFrame, id_col: str = "doc_id",
                     max_bucket_size: int = 256,
                     chain_width: int = 2,
                     dedup: bool = True) -> DataFrame:
-    """Distinct (id_a < id_b) pairs sharing any LSH bucket. The join is
-    keyed on the 8-byte band key — bucket-local quadratic only.
+    """(id_a < id_b) pairs sharing an LSH bucket, from (id, key) rows
+    whose ids are unique within a key (a doc has one key per band).
 
-    Pathological buckets (boilerplate corpora: thousands of docs
-    sharing a band key) would make even the bucket-local join O(n²), so
-    buckets larger than ``max_bucket_size`` degrade to a *chain*: the
-    bucket's members are ranked by id and each pairs only with its next
-    ``chain_width`` neighbors — O(n·W) pairs, and every member still
-    lands in one connected component downstream (consecutive pairs keep
-    the bucket connected), which is what dedup clustering needs. Buckets
-    at or under the cap produce exactly the same pairs as the plain
-    self-join (the oracle models the uncapped form; measured max bucket
-    size at sf0.1 is far below the default cap, so both agree at test
-    scale).
+    One aggregation builds each bucket's sorted id list; singleton
+    buckets are dropped, and each member then pairs with a slice of the
+    members after it:
 
-    Shape: ONE window pass over key annotates every row with its
-    bucket size and in-bucket rank, and the annotated frame is a
-    PERSIST SEAM (round-13 optimization). The former shape relied on
-    Catalyst's ReusedExchange to share the window's exchange across
-    the four consumers below (small a/b, big probe/build) — but the
-    planner broadcast-hashes the self-join's build side at bench
-    scale, and a BroadcastExchange cannot reuse a shuffle exchange, so
-    the ENTIRE upstream signature pipeline (shingle explode → md5 →
-    k min-aggregates → band explode → window) re-ran once per branch:
-    4 copies, measured in the sf0.1 plan (guide §2.4 — remove
-    duplicated subtrees). The seam is narrow (key, id, bsz, rn ≈ 28
-    bytes × n·bands rows) and bounded at any corpus size; both window
-    functions share one (partitionBy key, orderBy id) spec so the
-    annotation is a single Window operator (bsz via the
-    unbounded-unbounded frame — identical value to the unordered
-    count, one less Sort pass)."""
-    from ..seams import persist_seam
+    - a bucket of at most ``max_bucket_size`` ids yields every i < j
+      pair (the plain bucket self-join the oracles model);
+    - a bigger bucket (boilerplate corpora: thousands of docs sharing a
+      band key) yields each member's next ``chain_width`` ids. That is
+      O(n·W) pairs instead of O(n²), and consecutive pairs keep the
+      bucket one connected component for dedup clustering.
 
-    w = Window.partitionBy("key").orderBy(id_col)
-    annotated = banded.select(
-        "key", F.col(id_col),
-        F.count("*").over(w.rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing))
-        .alias("bsz"),
-        F.row_number().over(w).alias("rn"),
-    )
-    annotated = persist_seam(annotated)
-    small = annotated.where(F.col("bsz") <= max_bucket_size)
-    a, b = small.alias("a"), small.alias("b")
-    small_pairs = (
-        a.join(b, (F.col("a.key") == F.col("b.key"))
-               & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-    )
-    big = annotated.where(F.col("bsz") > max_bucket_size)
-    probe = big.select(
-        "key", F.col(id_col).alias("id_a"),
-        F.explode(F.array(*[(F.col("rn") + j) for j in range(1, chain_width + 1)]))
-        .alias("rn_b"),
-    )
-    big_pairs = (
-        probe.join(big.select("key", F.col(id_col).alias("id_b"),
-                              F.col("rn").alias("rn_b")),
-                   ["key", "rn_b"])
-        .select("id_a", "id_b")
-    )
-    out = small_pairs.unionByName(big_pairs)
-    # ``dedup=False`` callers aggregate over the pair stream (MIN-id
-    # verdicts), which absorbs multi-band duplicates for free — they
-    # skip this full exchange of the candidate stream (the RP-verdict
-    # rationale, plans/llm_ops._rp_qualifying_pairs).
+    Pairs come from positions: the slice copies only the ids it emits,
+    so a hot bucket costs O(n·W) rows and bytes. ``dedup=False`` keeps
+    one row per bucket and pair; callers that aggregate over the pair
+    stream (MIN-id verdicts) absorb multi-band duplicates for free and
+    skip the full exchange that ``dropDuplicates`` costs."""
+    buckets = (banded.groupBy("key")
+               .agg(F.array_sort(F.collect_list(id_col)).alias("ids"))
+               .where(F.size("ids") > 1))
+    rest = "size(ids) - i - 1"
+    width = (f"IF(size(ids) <= {max_bucket_size}, {rest}, "
+             f"least({chain_width}, {rest}))")
+    out = (buckets.selectExpr("ids", "posexplode(ids) AS (i, id_a)")
+           .selectExpr("id_a", f"explode(slice(ids, i + 2, {width})) AS id_b"))
     return out.dropDuplicates(["id_a", "id_b"]) if dedup else out
 
 
@@ -244,7 +213,7 @@ def minhash_near_dup_pairs(df: DataFrame, id_col: str = "doc_id",
     the input. ``bands`` and ``rows`` must be passed together — the
     ladder derives them as a pair (signature width = bands*rows), so
     honoring one caller value while rederiving the other would
-    silently change the signature geometry (ADVICE r12)."""
+    silently change the signature geometry."""
     from ..seams import persist_seam
 
     if (bands is None) != (rows is None):
@@ -267,48 +236,23 @@ def minhash_near_dup_pairs(df: DataFrame, id_col: str = "doc_id",
     sig = minhash_signatures(docs, id_col, k=bands * rows)
     banded = band_keys_df(sig, id_col, bands=bands, rows=rows)
     cand = candidate_pairs(banded, id_col, dedup=dedup_candidates)
-    # join candidate ids back to shingle sets for the verify stage.
-    # SHUFFLE_HASH on the corpus sides (the RP family's sf100 lesson,
-    # relearned here at the sf300 decade): a sort-merge join SORTS both
-    # inputs, and the verify stream carries the WIDE shingle arrays —
-    # at sf300 (15M docs) the SMJ sorts spilled >50 GB of shingle
-    # payload and ENOSPC'd the probe box. A hash join builds on the
-    # corpus side (bounded by corpus size / partitions) and never
-    # sorts the pair stream.
-    #
-    # The hint is applied ONLY when the corpus side is past the
-    # session's broadcast threshold (round-13, guide §3.1): below it
-    # the planner broadcasts the corpus projection and the verify
-    # needs NO exchange at all — the unconditional hint was forcing
-    # two full corpus exchanges + per-partition hash builds to verify
-    # a few hundred pairs at bench scale (measured 2.0 s of the 3.5 s
-    # query). The hint exists to override SMJ, and SMJ is only ever
-    # picked when broadcast already doesn't apply — so hinting
-    # exactly the non-broadcastable regime preserves the sf300 fix.
-    #
-    # The verify payload is hash-compacted to 8-byte xxhash64 keys
-    # (round-13 optimization; the dedup_jaccard_prefix / substring
-    # hash64 precedent applied to this path): shingle strings average
-    # ~25 bytes, so the two verify exchanges AND both hash-relation
-    # builds shrink ~3-4×. Jaccard is a function of intersection /
-    # union SIZES over the per-doc-distinct shingle sets, so the value
-    # is bit-identical to the string form unless two distinct shingles
-    # of one compared pair collide in 64 bits (≈|union|²/2⁶⁵ per pair,
-    # ~10⁻¹² at decade scale — the string-based DuckDB oracle and the
-    # hashed-vs-string equality test would both surface one). Computed
-    # AFTER the persist seam, per side: a map-only projection over the
-    # cached corpus, so nothing upstream re-runs and the narrow form
-    # never widens the seam itself.
+    # Verify: join candidate ids back to each side's shingles, carried
+    # as 8-byte xxhash64 keys (~3-4× narrower than the strings in both
+    # exchanges and hash builds). Jaccard depends only on intersection
+    # and union sizes of the per-doc-distinct sets, so the value is the
+    # string form's unless two shingles of one pair collide in 64 bits
+    # (≈|union|²/2⁶⁵; the string-based oracle and the hashed-vs-string
+    # test would surface one). Hashing after the seam is a map-only
+    # projection of the cached corpus: nothing upstream re-runs.
     sh64 = F.transform(F.col("sh"), lambda s: F.xxhash64(s))
     sa = docs.select(F.col(id_col).alias("id_a"), sh64.alias("sh_a"))
     sb = docs.select(F.col(id_col).alias("id_b"), sh64.alias("sh_b"))
-    # size the HASHED projection, not the string seam (round-13 ADVICE
-    # #1): the join ships sa/sb, whose arrays are ~3-4× narrower than
-    # the cached strings — Catalyst's projection estimate scales the
-    # measured seam size by the schema-width ratio, so gating on sa
-    # matches the planner's own broadcast decision for the actual side
-    # (gating on docs forced two corpus exchanges in the window where
-    # the strings exceed the threshold but the hashed arrays fit).
+    # Below the broadcast threshold the planner broadcasts the corpus
+    # side and the pair stream never exchanges. Past it the planner
+    # would pick sort-merge, which sorts the pair stream and the wide
+    # arrays (at 15M docs those sorts spilled >50 GB), so the corpus
+    # sides are hinted to a hash join exactly there. The gate sizes the
+    # hashed projection the join ships, not the string seam.
     if not _fits_broadcast(sa):
         sa, sb = sa.hint("shuffle_hash"), sb.hint("shuffle_hash")
     return (

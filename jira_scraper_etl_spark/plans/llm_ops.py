@@ -205,7 +205,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: candidates come from a bucket join keyed on 8-byte
     xxhash64 band keys (band index folded in), never all-pairs; only
     bucket co-residents are verified, and hot buckets degrade to a
-    rank-keyed chain (operators/dedup.candidate_pairs). The oracle
+    chain over their sorted ids (operators/dedup.candidate_pairs). The oracle
     models the same band-equality classes with md5-of-concat, UNPIVOTED
     (one row per doc × family member, bands/rows from a CASE over
     COUNT(*)) so both engines derive the rung from the same count —
@@ -276,7 +276,7 @@ def dedup_minhash_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORACLE PRECONDITION (ADVICE r12): the candidate stage inherits
     candidate_pairs' hot-bucket chain degradation (buckets past
     max_bucket_size=256 pair each member only with its chain_width=2
-    rank-successors) while the DuckDB oracle always does the full
+    successors in id order) while the DuckDB oracle always does the full
     bucket-quadratic join. The min-id election makes any divergence
     LOUDER than in the pair listing — a doc's true minimum peer can
     fall outside the chain window. So oracle-checked fixtures must

@@ -250,23 +250,21 @@ def _minhash_candidates_hashed(docs: DataFrame) -> DataFrame:
     corpus (operators/dedup.minhash_near_dup_pairs would run the whole
     interpreted shingle pipeline a second time and persist a second
     copy). The Kirsch-Mitzenmacher family needs two 32-bit hashes per
-    shingle; the xxhash64 key's high and low halves serve (same
-    arithmetic as operators/dedup.minhash_signatures, different base
-    hash — band keys are engine-local equivalence classes, never
-    output values, and the exact verify downstream makes any band
-    collision harmless). Banding/capping is the shared
-    operators/dedup machinery: band_keys_df's 8-byte keys,
-    candidate_pairs' hot-bucket chain degradation — bucketed, never
-    all-pairs, O(n·W) even on the degenerate corpora that trip the
-    prefix guard."""
+    shingle; the xxhash64 key's high and low halves serve, fed to the
+    same aggregate builder as operators/dedup.minhash_signatures
+    (``km_signature``; a different base hash — band keys are
+    engine-local equivalence classes, never output values, and the
+    exact verify downstream makes any band collision harmless).
+    Banding/capping is the shared operators/dedup machinery:
+    band_keys_df's 8-byte keys, candidate_pairs' hot-bucket chain
+    degradation — bucketed, never all-pairs, O(n·W) even on the
+    degenerate corpora that trip the prefix guard."""
     ex = docs.select("doc_id", F.explode("sh").alias("s"))
     hp = ex.select(
         "doc_id",
         F.shiftrightunsigned("s", 32).alias("h1"),
         F.col("s").bitwiseAND(F.lit(0xFFFFFFFF)).alias("h2"))
-    sig = hp.groupBy("doc_id").agg(
-        *[F.min((F.col("h1") + F.lit(i) * F.col("h2")) % F.lit(OD.MOD32))
-          .alias(f"mh{i}") for i in range(OD.N_HASHES)])
+    sig = OD.km_signature(hp, "doc_id")
     banded = OD.band_keys_df(sig, "doc_id")
     return (OD.candidate_pairs(banded, "doc_id")
             .select(F.col("id_a").alias("doc_a"),

@@ -26,6 +26,7 @@ harmlessly — Spark's ``unpersist`` on a non-persisted frame is a no-op.
 
 from __future__ import annotations
 
+import sys
 import threading
 
 from pyspark.sql import DataFrame
@@ -44,18 +45,35 @@ _OUTSTANDING: dict[int, list[DataFrame]] = {}
 _OUTSTANDING_CP: dict[int, list[DataFrame]] = {}
 
 
+def _named_job(df: DataFrame, label: str, action):
+    """Run ``action()`` under the Spark job description ``label`` and
+    restore the previous description afterwards, so event logs and the
+    UI say which seam a job filled. Only ``spark.job.description`` is
+    set: the job group belongs to the caller (perfbench groups its
+    event-log rows by it)."""
+    sc = df.sparkSession.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(label)
+    try:
+        return action()
+    finally:
+        sc.setJobDescription(prev)
+
+
 def persist_seam(df: DataFrame, *, materialize: bool = True) -> DataFrame:
     """Persist ``df`` (MEMORY_AND_DISK) and register it for caller
     release. ``materialize=True`` fills the cache eagerly with a
-    ``count()``: concurrent first readers of a LAZY persist each
-    recompute the full upstream pipeline (measured 4× duplicate 1.6 s
-    shingle stages at sf0.1), so seams with fan-out consumers always
-    materialize before returning."""
+    ``count()``, run as job ``persist_seam:<calling function>``:
+    concurrent first readers of a LAZY persist each recompute the full
+    upstream pipeline (measured 4× duplicate 1.6 s shingle stages at
+    sf0.1), so seams with fan-out consumers always materialize before
+    returning."""
     df = df.persist(StorageLevel.MEMORY_AND_DISK)
     with _LOCK:
         _OUTSTANDING.setdefault(id(df.sparkSession), []).append(df)
     if materialize:
-        df.count()
+        caller = sys._getframe(1).f_code.co_name
+        _named_job(df, f"persist_seam:{caller}", df.count)
     return df
 
 
@@ -67,8 +85,10 @@ def checkpoint_seam(df: DataFrame) -> DataFrame:
     accumulated checkpoint blocks until a JVM GC let the ContextCleaner
     reclaim them. The checkpointed Dataset's analyzed plan is a
     LogicalRDD holding exactly those blocks; release_seams unpersists
-    that RDD directly."""
-    out = df.localCheckpoint()
+    that RDD directly. The checkpoint runs as job
+    ``checkpoint_seam:<calling function>``."""
+    caller = sys._getframe(1).f_code.co_name
+    out = _named_job(df, f"checkpoint_seam:{caller}", df.localCheckpoint)
     with _LOCK:
         _OUTSTANDING_CP.setdefault(id(out.sparkSession), []).append(out)
     return out

@@ -58,6 +58,68 @@ def test_small_buckets_exact_chain_only_above_cap(spark):
     assert capped == {(1, 2), (2, 3), (4, 5)}
 
 
+def _reference_pairs(buckets, cap, width):
+    """Pure-Python candidate_pairs: one Counter entry per (bucket, pair)
+    — every i < j pair of a bucket at or under ``cap``, each member's
+    next ``width`` ids in a bigger one."""
+    from collections import Counter
+
+    out = Counter()
+    for ids in buckets.values():
+        s = sorted(ids)
+        n = len(s)
+        for i in range(n):
+            hi = n if n <= cap else min(n, i + 1 + width)
+            out.update((s[i], s[j]) for j in range(i + 1, hi))
+    return out
+
+
+def test_candidate_pairs_matches_python_reference(spark):
+    """Differential check of the bucket-pair generator on seeded random
+    (key, id) rows: bucket sizes 1, 2, cap, cap+1 and 3×cap, ids drawn
+    from one shared pool (so a pair recurs across buckets, like a doc
+    pair sharing several bands), chain widths 1-3. ``dedup=True`` must
+    give the reference's pair set; ``dedup=False`` its multiset, one
+    row per bucket and pair."""
+    import random
+    from collections import Counter
+
+    cap = 6
+    for seed in (3, 17):
+        rng = random.Random(seed)
+        pool = range(1000, 1000 + 4 * cap)
+        buckets = {rng.getrandbits(62): rng.sample(pool, size)
+                   for size in (1, 2, cap, cap + 1, 3 * cap, 2, cap)}
+        rows = [(key, i) for key, ids in buckets.items() for i in ids]
+        rng.shuffle(rows)
+        banded = spark.createDataFrame(rows, "key long, doc_id long")
+        for width in (1, 2, 3):
+            want = _reference_pairs(buckets, cap, width)
+            assert sum(want.values()) > len(want)  # cross-bucket repeats
+            got = D.candidate_pairs(banded, max_bucket_size=cap,
+                                    chain_width=width, dedup=True).collect()
+            assert sorted((r.id_a, r.id_b) for r in got) == sorted(want), \
+                (seed, width)
+            got = D.candidate_pairs(banded, max_bucket_size=cap,
+                                    chain_width=width, dedup=False).collect()
+            assert Counter((r.id_a, r.id_b) for r in got) == want, \
+                (seed, width)
+
+
+def test_minhash_lsh_build_leaves_one_seam(spark, sf_dir):
+    """Building dedup_minhash_lsh persists only the shingled corpus,
+    whose three consumers fan out; the candidate stage has one consumer
+    and needs no seam."""
+    from jira_scraper_etl_spark import plans, seams
+
+    seams.release_seams()
+    try:
+        plans.QUERIES["dedup_minhash_lsh"].fn(spark, sf_dir)
+        assert seams.outstanding() == 1
+    finally:
+        seams.release_seams()
+
+
 def test_simhash_neighbor_stats_matches_bruteforce_random(spark):
     """Differential check of the contracted-graph neighbor math
     (clique sizes, second-min election, cross-clique adjacency): on

@@ -240,3 +240,43 @@ def test_concurrent_sessions_no_cross_release_exact_results(spark, sf_dir):
     assert seams.outstanding() == 0
     assert key(plans.QUERIES[QB].fn(s2, sf_dir).collect()) == base_b
     seams.release_seams()
+
+
+def test_seam_jobs_run_under_a_named_description(spark, monkeypatch):
+    """persist_seam's eager fill and checkpoint_seam's localCheckpoint
+    run as jobs described ``<seam>:<calling function>``; the caller's
+    description comes back afterwards and its job group is untouched."""
+    sc = spark.sparkContext
+    cls = type(spark.range(1))
+    seen = []
+
+    def spy(name):
+        orig = getattr(cls, name)
+
+        def wrapped(self, *a, **kw):
+            seen.append((sc.getLocalProperty("spark.job.description"),
+                         sc.getLocalProperty("spark.jobGroup.id")))
+            return orig(self, *a, **kw)
+        monkeypatch.setattr(cls, name, wrapped)
+
+    spy("count")
+    spy("localCheckpoint")
+
+    def fill_seams():
+        seams.persist_seam(spark.range(10))
+        seams.checkpoint_seam(spark.range(10))
+
+    sc.setLocalProperty("spark.jobGroup.id", "outer-group")
+    try:
+        for outer in ("outer", None):
+            seen.clear()
+            sc.setJobDescription(outer)
+            fill_seams()
+            assert seen == [("persist_seam:fill_seams", "outer-group"),
+                            ("checkpoint_seam:fill_seams", "outer-group")]
+            assert sc.getLocalProperty("spark.job.description") == outer
+            assert sc.getLocalProperty("spark.jobGroup.id") == "outer-group"
+    finally:
+        sc.setJobDescription(None)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        seams.release_seams()
