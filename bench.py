@@ -17,7 +17,7 @@ import time
 
 from jira_scraper_etl_spark import plans
 from jira_scraper_etl_spark.errors import RegimeRefused
-from jira_scraper_etl_spark.seams import release_seams
+from jira_scraper_etl_spark.seams import named_job, release_seams
 from jira_scraper_etl_spark.session import get_spark
 
 # Headline set: one per operator family — agg, join, window, event-time,
@@ -336,12 +336,15 @@ def run_suite(spark, sf_dir: str, headline: list[str],
         try:
             for _ in range(runs):
                 t0 = time.perf_counter()
-                df = fn(spark, sf_dir)
-                if name in FORCE_FULL_MATERIALIZE:
-                    df.write.format("noop").mode("overwrite").save()
-                    n = df.count()  # cheap: the count plan IS the scan
-                else:
-                    n = df.count()
+                # every job of the build and the action says which query
+                # ran (seam fills nest their own label inside this one)
+                with named_job(spark, name):
+                    df = fn(spark, sf_dir)
+                    if name in FORCE_FULL_MATERIALIZE:
+                        df.write.format("noop").mode("overwrite").save()
+                        n = df.count()  # cheap: the count plan IS the scan
+                    else:
+                        n = df.count()
                 measured.append(time.perf_counter() - t0)
         except RegimeRefused as e:
             refused[name] = str(e).split(" — ")[0]

@@ -141,11 +141,16 @@ def band_keys_df(sig: DataFrame, id_col: str = "doc_id",
 
 
 def candidate_pairs(banded: DataFrame, id_col: str = "doc_id",
-                    max_bucket_size: int = 256,
+                    max_bucket_size: int | None = 256,
                     chain_width: int = 2,
                     dedup: bool = True) -> DataFrame:
     """(id_a < id_b) pairs sharing an LSH bucket, from (id, key) rows
     whose ids are unique within a key (a doc has one key per band).
+    This is the candidate stage of every LSH family: MinHash bands,
+    sign-slice and random-hyperplane embedding keys, SimHash nibble
+    keys. Ids may be any orderable type; a struct id orders by its
+    first field, so ``struct(doc, payload)`` carries the payload
+    through with ``id_a.doc < id_b.doc``.
 
     One aggregation builds each bucket's sorted id list; singleton
     buckets are dropped, and each member then pairs with a slice of the
@@ -156,7 +161,10 @@ def candidate_pairs(banded: DataFrame, id_col: str = "doc_id",
     - a bigger bucket (boilerplate corpora: thousands of docs sharing a
       band key) yields each member's next ``chain_width`` ids. That is
       O(n·W) pairs instead of O(n²), and consecutive pairs keep the
-      bucket one connected component for dedup clustering.
+      bucket one connected component for dedup clustering;
+    - ``max_bucket_size=None`` yields every i < j pair of every bucket,
+      for families whose output must be the exact pair set (the
+      SimHash pigeonhole, the embedding listings and verdicts).
 
     Pairs come from positions: the slice copies only the ids it emits,
     so a hot bucket costs O(n·W) rows and bytes. ``dedup=False`` keeps
@@ -167,8 +175,9 @@ def candidate_pairs(banded: DataFrame, id_col: str = "doc_id",
                .agg(F.array_sort(F.collect_list(id_col)).alias("ids"))
                .where(F.size("ids") > 1))
     rest = "size(ids) - i - 1"
-    width = (f"IF(size(ids) <= {max_bucket_size}, {rest}, "
-             f"least({chain_width}, {rest}))")
+    width = rest if max_bucket_size is None else (
+        f"IF(size(ids) <= {max_bucket_size}, {rest}, "
+        f"least({chain_width}, {rest}))")
     out = (buckets.selectExpr("ids", "posexplode(ids) AS (i, id_a)")
            .selectExpr("id_a", f"explode(slice(ids, i + 2, {width})) AS id_b"))
     return out.dropDuplicates(["id_a", "id_b"]) if dedup else out
@@ -290,47 +299,44 @@ def _check_nibble_hamming(max_hamming: int) -> None:
             f"would silently drop pairs that share no nibble block")
 
 
+def nibble_keys(fps: DataFrame, fp_col: str) -> DataFrame:
+    """``fps`` plus ``key``: one row per 4-bit block of the 16-bit
+    fingerprint ``fp_col``, ``key = block·16 + nibble`` (64 buckets).
+    Two fingerprints share a key iff some block is equal, which every
+    pair at hamming ≤ 3 does (pigeonhole over 4 blocks)."""
+    keys = ", ".join(f"{16 * i} + (shiftright(`{fp_col}`, {4 * i}) & 15)"
+                     for i in range(4))
+    return fps.selectExpr("*", f"explode(array({keys})) AS key")
+
+
+def hamming(a: Column, b: Column) -> Column:
+    """Bit distance between two fingerprint columns."""
+    return F.bit_count(a.cast("long").bitwiseXOR(b.cast("long")))
+
+
 def simhash_fp_pairs(fps: DataFrame, col: str = "simhash",
                      max_hamming: int = 3) -> DataFrame:
-    """Near-dup pairs over DISTINCT fingerprint VALUES — the contracted
-    (≤ 2^16-node) form of the simhash graph, via the same lossless
-    nibble-block banding as :func:`simhash_near_dup_pairs`. This is the
-    graph dedup_cluster_canonical solves components on, and the
-    scale-sound way to audit simhash adjacency: the fingerprint graph
-    is bounded BY CONSTRUCTION regardless of corpus size, while the
-    doc-pair expansion is O(Σ|clique|²) and explodes on dup-dense or
-    fingerprint-saturated corpora (500k docs into 2^16 values ⇒
-    billions of doc pairs). Output: (fa, fb) with fa < fb, hamming ≤
-    ``max_hamming``."""
+    """Near-dup pairs over DISTINCT fingerprint VALUES: (fa, fb) with
+    fa < fb and hamming ≤ ``max_hamming``, from the nibble-key
+    candidates (:func:`candidate_pairs`, uncapped). This contracted
+    graph has at most 2^16 nodes whatever the corpus size, while the
+    doc-pair expansion is O(Σ|clique|²) (500k docs into 2^16 values ⇒
+    billions of doc pairs); dedup_cluster_canonical solves components
+    on it. ``fps`` must hold each fingerprint once."""
     _check_nibble_hamming(max_hamming)
-    blocks = fps.select(
-        col,
-        F.explode(F.array(*[
-            F.struct(F.lit(i).alias("blk"),
-                     F.shiftright(col, i * 4).bitwiseAND(F.lit(0xF))
-                     .alias("nib"))
-            for i in range(4)
-        ])).alias("b"),
-    ).select(col, "b.blk", "b.nib")
-    a, b = blocks.alias("a"), blocks.alias("b")
-    return (
-        a.join(b, (F.col("a.blk") == F.col("b.blk"))
-               & (F.col("a.nib") == F.col("b.nib"))
-               & (F.col(f"a.{col}") < F.col(f"b.{col}")))
-        .select(F.col(f"a.{col}").alias("fa"), F.col(f"b.{col}").alias("fb"))
-        .dropDuplicates(["fa", "fb"])
-        .where(F.bit_count(F.col("fa").cast("long")
-                           .bitwiseXOR(F.col("fb").cast("long")))
-               <= max_hamming)
-    )
+    pairs = candidate_pairs(nibble_keys(fps.select(col), col), col,
+                            max_bucket_size=None).toDF("fa", "fb")
+    return pairs.where(hamming(F.col("fa"), F.col("fb")) <= max_hamming)
 
 
 def simhash_near_dup_pairs(df: DataFrame, id_col: str = "doc_id",
                            text_col: str = "text",
                            max_hamming: int = 3) -> DataFrame:
-    """SimHash near-dup pairs at hamming ≤ max_hamming via lossless
-    nibble-block banding (pigeonhole over 4 blocks ⇒ exact for ≤ 3).
-    Output: (doc_a, doc_b, hamming).
+    """SimHash near-dup pairs at hamming ≤ max_hamming: (doc_a, doc_b,
+    hamming) with doc_a < doc_b. Candidates share a nibble key, which is
+    exact for hamming ≤ 3 by pigeonhole. Each id is
+    ``struct(doc, simhash)``, so the fingerprint rides through
+    :func:`candidate_pairs` and the verify needs no join back.
 
     SCALE WARNING: the output is the PAIR LISTING — O(Σ|clique|²) rows
     on dup-dense corpora (>1 GiB of result at the sf1 soak's 31-token
@@ -343,26 +349,17 @@ def simhash_near_dup_pairs(df: DataFrame, id_col: str = "doc_id",
     # (same rationale as minhash_near_dup_pairs)
     fp = simhash_fingerprints(
         fan_out(df.select(id_col, text_col), HEAVY), id_col, text_col)
-    blocks = fp.select(
-        id_col, "simhash",
-        F.explode(F.array(*[
-            F.struct(F.lit(i).alias("blk"),
-                     F.shiftright("simhash", i * 4).bitwiseAND(F.lit(0xF)).alias("nib"))
-            for i in range(4)
-        ])).alias("b"),
-    ).select(id_col, "simhash", "b.blk", "b.nib")
-    a, b = blocks.alias("a"), blocks.alias("b")
-    hamming = F.bit_count(F.col("sh_a").cast("long").bitwiseXOR(F.col("sh_b").cast("long")))
+    keyed = nibble_keys(fp, "simhash").select(
+        F.struct(id_col, "simhash").alias("id"), "key")
+    pairs = candidate_pairs(keyed, "id", max_bucket_size=None)
     return (
-        a.join(b, (F.col("a.blk") == F.col("b.blk")) & (F.col("a.nib") == F.col("b.nib"))
-               & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .select(F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b"),
-                F.col("a.simhash").alias("sh_a"), F.col("b.simhash").alias("sh_b"))
-        .dropDuplicates(["doc_a", "doc_b"])
-        .withColumn("hamming", hamming.cast("int"))
+        pairs.select(F.col(f"id_a.{id_col}").alias("doc_a"),
+                     F.col(f"id_b.{id_col}").alias("doc_b"),
+                     hamming(F.col("id_a.simhash"), F.col("id_b.simhash"))
+                     .cast("int").alias("hamming"))
         .where(F.col("hamming") <= max_hamming)
-        .select("doc_a", "doc_b", "hamming")
     )
+
 
 def simhash_neighbor_stats(df: DataFrame, id_col: str = "doc_id",
                            text_col: str = "text",
@@ -377,8 +374,8 @@ def simhash_neighbor_stats(df: DataFrame, id_col: str = "doc_id",
     ≤ 2¹⁶ nodes at any corpus size — the dedup_cluster_canonical
     contraction argument). Per-fingerprint clique stats (size, two
     smallest ids) come from two keyed aggregations over the fingerprint
-    column; cross-fingerprint adjacency from the lossless nibble-band
-    join over DISTINCT fingerprints only. A doc's neighbor count is
+    column; cross-fingerprint adjacency from :func:`simhash_fp_pairs`
+    over DISTINCT fingerprints only. A doc's neighbor count is
     then (own clique − 1) + Σ sizes of adjacent cliques, and its min
     neighbor the least of the adjacent cliques' minima and its own
     clique's min (second-min when the doc IS the min). Every stage is

@@ -351,10 +351,10 @@ def dedup_incremental_novel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Per new doc: ``exact_novel`` — its normalized content hash appears
     nowhere in the old corpus; ``near_novel`` — no old SimHash
-    fingerprint within hamming ≤ 3 (lossless nibble banding, same
-    pigeonhole argument as dedup_simhash, but the bucket join is
-    new×old instead of a self-join — candidate volume scales with the
-    BATCH, not the corpus).
+    fingerprint within hamming ≤ 3 (lossless nibble keys, same
+    pigeonhole argument as dedup_simhash, but the key join is new×old
+    instead of a self-join — candidate volume scales with the BATCH,
+    not the corpus).
 
     Scale shape: the old side reduces to two compact indexes (distinct
     16-byte hashes; ≤ 2^16 distinct fingerprints after collapsing) that
@@ -374,6 +374,7 @@ def dedup_incremental_novel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..functions import textstats as TS
     from ..functions.hashing import simhash16, word_tokens
+    from ..operators.dedup import hamming, nibble_keys
     from ..seams import persist_seam
     from .curation import doc_bucket
 
@@ -396,27 +397,12 @@ def dedup_incremental_novel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # collapse the old corpus to its DISTINCT fingerprints: the near-dup
     # test only depends on fingerprint values (≤ 2^16 of them)
-    fp_old = old.select("simhash").distinct()
+    fp_old = old.select(F.col("simhash").alias("old_sh")).distinct()
     fp_new = new.select("doc_id", "simhash")
-
-    def blocks(fp, cols):
-        return fp.select(
-            *cols,
-            F.explode(F.array(*[
-                F.struct(F.lit(i).alias("blk"),
-                         F.shiftright("simhash", i * 4).bitwiseAND(F.lit(0xF))
-                         .alias("nib"))
-                for i in range(4)
-            ])).alias("bb"),
-        ).select(*cols, "bb.blk", "bb.nib")
-
-    nb = blocks(fp_new, ["doc_id", "simhash"])
-    ob = (blocks(fp_old, ["simhash"])
-          .select(F.col("simhash").alias("old_sh"), "blk", "nib"))
     matched = (
-        nb.join(ob, (nb.blk == ob.blk) & (nb.nib == ob.nib))
-        .where(F.bit_count(F.col("simhash").cast("long")
-                           .bitwiseXOR(F.col("old_sh").cast("long"))) <= 3)
+        nibble_keys(fp_new, "simhash")
+        .join(nibble_keys(fp_old, "old_sh"), "key")
+        .where(hamming(F.col("simhash"), F.col("old_sh")) <= 3)
         .select("doc_id").distinct()
         .withColumn("hit", F.lit(1)))
     near = (fp_new.join(matched, "doc_id", "left")

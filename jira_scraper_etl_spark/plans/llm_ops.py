@@ -357,16 +357,17 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "lsh"),
 )
 def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup PAIR LISTING on a bounded slice (doc_id < 200)
-    — the parameterized variant of the former headline entry, kept for
-    verify stages and diagnostics where the explicit pairs matter. The
-    slice gate bounds the worst-case output the way dedup_ngram_jaccard
-    gates its all-pairs ground truth; unsliced corpora should use
-    dedup_simhash (per-doc stats) or dedup_cluster_canonical (labels).
+    """SimHash near-dup PAIR LISTING on a bounded slice (doc_id < 200),
+    for verify stages and diagnostics where the explicit pairs matter.
+    The slice gate bounds the worst-case output the way
+    dedup_ngram_jaccard gates its all-pairs ground truth; unsliced
+    corpora should use dedup_simhash (per-doc stats) or
+    dedup_cluster_canonical (labels).
 
-    Nibble-banded LSH: hamming ≤ 3 guarantees (pigeonhole) an identical
-    nibble block, so the 4-way bucket join finds exactly the oracle's
-    pairs — no O(n²) anywhere, shuffle keyed on (block_idx, nibble).
+    Nibble-key LSH: hamming ≤ 3 guarantees (pigeonhole) an identical
+    nibble block, so the candidates sharing a nibble key
+    (operators/dedup.nibble_keys → candidate_pairs) hold exactly the
+    oracle's pairs — no O(n²) anywhere, one exchange keyed on the key.
     """
     d = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 200)
     return D.simhash_near_dup_pairs(d, "doc_id", "text", max_hamming=3)
@@ -503,16 +504,14 @@ SQL_EMB_BANDS = """
 
 
 def emb_candidates(base: DataFrame, bands: int, bits: int) -> DataFrame:
-    """Distinct (va < vb) candidate pairs from the sign-LSH bucket join
-    over a (vec_id, q) frame — only (vec_id, band_key) rows move."""
-    slim = base.select("vec_id", F.explode(emb_band_keys(bands, bits)).alias("bk"))
-    x, y = slim.alias("x"), slim.alias("y")
-    return (
-        x.join(y, (F.col("x.bk") == F.col("y.bk"))
-               & (F.col("x.vec_id") < F.col("y.vec_id")))
-        .select(F.col("x.vec_id").alias("va"), F.col("y.vec_id").alias("vb"))
-        .distinct()
-    )
+    """(va < vb) candidate pairs, each once: vectors of a (vec_id, q)
+    frame that share a sign-LSH band key. Only (vec_id, key) rows move;
+    :func:`operators.dedup.candidate_pairs` uncapped yields every
+    in-bucket pair, as the oracle's bucket self-join does."""
+    keyed = base.select("vec_id",
+                        F.explode(emb_band_keys(bands, bits)).alias("key"))
+    return D.candidate_pairs(keyed, "vec_id",
+                             max_bucket_size=None).toDF("va", "vb")
 
 
 @register(
@@ -542,17 +541,17 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str,
     with quantized cosine ≥ 0.45 verified *within buckets only*.
 
     The scale path: ``bands`` disjoint slices of ``bits`` sign bits
-    produce one short band key per (vector, band); candidates are a
-    bucket equi-join on that key carrying only (vec_id, bk) — never the
-    vectors — followed by DISTINCT on the id pair and two keyed joins
-    back to the quantized vectors for the cosine verify. No all-pairs
-    product anywhere: every shuffle is keyed and AQE-splittable.
+    produce one short band key per (vector, band); candidates are the
+    distinct id pairs sharing a key (``emb_candidates``, one sorted-id
+    aggregation per bucket carrying only ids — never the vectors), then
+    two keyed joins back to the quantized vectors for the cosine
+    verify. No all-pairs product anywhere: every shuffle is keyed.
 
     Banding is AUTO-DERIVED from the corpus size by default
     (``derive_banding``: bits grows with log2(n) so per-bucket occupancy
-    — and with it candidate volume per row — stays constant; the 100×
-    operator needs no hand retuning per scale, the round-3 lesson from
-    the sf1 soak where fixed (16,4) cost 30× runtime for 10× rows).
+    — and with it candidate volume per row — stays constant, and the
+    operator needs no hand retuning per scale; fixed bits let candidate
+    volume grow ~n²/2^bits).
     The oracle SQL derives identical parameters from COUNT(*), so both
     engines band identically at every scale factor. Explicit
     ``bands``/``bits`` kwargs remain as the manual override dial.
@@ -1450,7 +1449,7 @@ def dedup_embedding_cosine_rp(spark: SparkSession, sf_dir: str,
     a BLAS-shaped product no 512-column expression tree can match: the
     expression path drops out of whole-stage codegen into interpreted
     evaluation, measured 558 s vs sub-second at the sf10 soak), then
-    candidates/verify are the same keyed bucket-join +
+    candidates/verify are the same ``candidate_pairs`` +
     fixed-point-cosine stages as the slice variant. Everything after
     key generation is identical plan shape; only the key family
     changed. Integer arithmetic end to end, so the Arrow path is
@@ -1464,7 +1463,7 @@ def _rp_qualifying_pairs(spark: SparkSession, sf_dir: str,
                          bands: int | None, bits: int | None,
                          dedup_candidates: bool) -> DataFrame:
     """The shared RP-LSH candidate+verify pipeline: banded key build,
-    bucket self-join, fixed-point cosine verify, τ=0.45 filter.
+    bucket candidate pairs, fixed-point cosine verify, τ=0.45 filter.
     Returns (vec_a, vec_b, cos_sim) with vec_a < vec_b.
 
     ``dedup_candidates``: the pair-LISTING query needs each qualifying
@@ -1503,31 +1502,19 @@ def _rp_qualifying_pairs(spark: SparkSession, sf_dir: str,
     # (rp_band_key_table): the 512-expression projection path is
     # interpreted-evaluation-bound at scale (see its docstring).
     keys = checkpoint_seam(rp_band_key_table(base, bands, bits))
-    # merge hint: at any real scale the key table is broadcast-
-    # ineligible; broadcasting would also rebuild it on the driver
-    slim = keys.select(
-        "vec_id", F.explode("bks").alias("bk")
-    ).hint("merge")
-    x, y = slim.alias("x"), slim.alias("y")
-    cand = (
-        x.join(y, (F.col("x.bk") == F.col("y.bk"))
-               & (F.col("x.vec_id") < F.col("y.vec_id")))
-        .select(F.col("x.vec_id").alias("va"), F.col("y.vec_id").alias("vb"))
-    )
-    if dedup_candidates:
-        cand = cand.distinct()
+    # bks[b] embeds the table offset b·2^bits, so a vector has one key
+    # per table and one key column buckets (table, code) at once
+    cand = D.candidate_pairs(
+        keys.select("vec_id", F.explode("bks").alias("key")), "vec_id",
+        max_bucket_size=None, dedup=dedup_candidates).toDF("va", "vb")
     # SHUFFLE_HASH on the corpus side of both verify joins: the pair
     # stream is orders of magnitude wider than the per-partition
     # corpus build (n·~150 B / shuffle.partitions), and a sort-merge
     # join would SORT the wide stream — the other half of the sf100
-    # disk blow-up. A hash build never sorts the stream side.
-    # Round-13 note: the minhash verify's broadcast-below-threshold
-    # adaptation (operators/dedup._fits_broadcast) was A/B-tested here
-    # too and REJECTED — the packed-smallint base is so narrow that
-    # the hash build beats the per-run driver broadcast rebuild at
-    # bench scale (warm medians 1.75 s hinted vs 2.4 s broadcast for
-    # the listing; a wash for the verdict), so the unconditional hint
-    # stays.
+    # disk blow-up. A hash build never sorts the stream side. It is
+    # unconditional, unlike the minhash verify's broadcast-below-
+    # threshold gate: the packed-smallint base is narrow enough that
+    # the hash build beats a per-run broadcast at bench scale.
     a, b = base.hint("shuffle_hash").alias("a"), \
         base.hint("shuffle_hash").alias("b")
     cos = (V.qdot_wide(F.col("a.q"), F.col("b.q")).cast("double")

@@ -28,8 +28,9 @@ from __future__ import annotations
 
 import sys
 import threading
+from contextlib import contextmanager
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
 # Keyed per SparkSession (id) so concurrent callers on DIFFERENT
@@ -45,17 +46,20 @@ _OUTSTANDING: dict[int, list[DataFrame]] = {}
 _OUTSTANDING_CP: dict[int, list[DataFrame]] = {}
 
 
-def _named_job(df: DataFrame, label: str, action):
-    """Run ``action()`` under the Spark job description ``label`` and
-    restore the previous description afterwards, so event logs and the
-    UI say which seam a job filled. Only ``spark.job.description`` is
-    set: the job group belongs to the caller (perfbench groups its
-    event-log rows by it)."""
-    sc = df.sparkSession.sparkContext
+@contextmanager
+def named_job(spark: SparkSession, label: str):
+    """Run the enclosed Spark jobs under the job description ``label``
+    and restore the previous description afterwards, so event logs and
+    the UI say which query or seam a job ran for. Labels nest: a seam
+    filled inside a registry query runs as the seam, and the query's
+    label comes back after it. Only ``spark.job.description`` is set:
+    the job group belongs to the caller (perfbench groups its event-log
+    rows by it)."""
+    sc = spark.sparkContext
     prev = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription(label)
     try:
-        return action()
+        yield
     finally:
         sc.setJobDescription(prev)
 
@@ -73,7 +77,8 @@ def persist_seam(df: DataFrame, *, materialize: bool = True) -> DataFrame:
         _OUTSTANDING.setdefault(id(df.sparkSession), []).append(df)
     if materialize:
         caller = sys._getframe(1).f_code.co_name
-        _named_job(df, f"persist_seam:{caller}", df.count)
+        with named_job(df.sparkSession, f"persist_seam:{caller}"):
+            df.count()
     return df
 
 
@@ -88,7 +93,8 @@ def checkpoint_seam(df: DataFrame) -> DataFrame:
     that RDD directly. The checkpoint runs as job
     ``checkpoint_seam:<calling function>``."""
     caller = sys._getframe(1).f_code.co_name
-    out = _named_job(df, f"checkpoint_seam:{caller}", df.localCheckpoint)
+    with named_job(df.sparkSession, f"checkpoint_seam:{caller}"):
+        out = df.localCheckpoint()
     with _LOCK:
         _OUTSTANDING_CP.setdefault(id(out.sparkSession), []).append(out)
     return out

@@ -49,7 +49,7 @@ Scale shape, per micro-batch:
 * the exact check is ONE anti-join keyed on the 16-byte hash;
 * the near check never touches doc pairs: both sides contract to
   DISTINCT fingerprint values first (≤ 2^16 by construction — the
-  dedup_cluster_canonical argument), so the nibble-band join and the
+  dedup_cluster_canonical argument), so the nibble-key join and the
   within-batch greedy graph are bounded regardless of corpus or batch
   size, and the driver-side greedy walk moves ≤ 2^16 nodes;
 * the corpus-side indexes (distinct hashes, distinct fingerprints) are
@@ -68,7 +68,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..functions import textstats as TS
 from ..operators import versioned as V
-from ..operators.dedup import simhash_fingerprints
+from ..operators.dedup import (hamming, nibble_keys, simhash_fingerprints,
+                               simhash_fp_pairs)
 
 MAX_HAMMING = 3  # 4-nibble banding is lossless exactly up to 3
 
@@ -140,24 +141,6 @@ def maybe_compact(spark: SparkSession, table_dir: str, batch_id: int,
         extra={"compacts_through": thru, "batch_id": batch_id})
 
 
-def _nibble_blocks(fps: DataFrame, fp_col: str, *keep: str) -> DataFrame:
-    """Explode a fingerprint column into its 4 nibble bands — the
-    lossless hamming≤3 candidate key (operators/dedup.py pigeonhole
-    argument)."""
-    return fps.select(
-        *keep, F.col(fp_col),
-        F.explode(F.array(*[
-            F.struct(F.lit(i).alias("blk"),
-                     F.shiftright(F.col(fp_col), i * 4)
-                     .bitwiseAND(F.lit(0xF)).alias("nib"))
-            for i in range(4)])).alias("bb"),
-    ).select(*keep, F.col(fp_col), "bb.blk", "bb.nib")
-
-
-def _hamming_le(a, b, radius: int = MAX_HAMMING):
-    return F.bit_count(a.cast("long").bitwiseXOR(b.cast("long"))) <= radius
-
-
 def admit_batch(batch_fp: DataFrame, corpus: DataFrame) -> DataFrame:
     """Greedy admission of one batch's fingerprint rows against the
     standing corpus index. Returns the admitted (doc_id, h, simhash)
@@ -167,14 +150,13 @@ def admit_batch(batch_fp: DataFrame, corpus: DataFrame) -> DataFrame:
     fresh = batch_fp.join(corpus.select("h").distinct(), "h", "left_anti")
 
     # (b) near novelty vs corpus: contract both sides to distinct
-    # fingerprints, band-join, reject matched values
-    corpus_fps = corpus.select("simhash").distinct()
+    # fingerprints, join on the nibble key, reject matched values
+    corpus_fps = corpus.select(F.col("simhash").alias("old_fp")).distinct()
     batch_fps = fresh.select("simhash").distinct()
-    nb = _nibble_blocks(batch_fps, "simhash")
-    ob = _nibble_blocks(corpus_fps.withColumnRenamed("simhash", "old_fp"),
-                        "old_fp")
-    hit_fps = (nb.join(ob, ["blk", "nib"])
-               .where(_hamming_le(F.col("simhash"), F.col("old_fp")))
+    hit_fps = (nibble_keys(batch_fps, "simhash")
+               .join(nibble_keys(corpus_fps, "old_fp"), "key")
+               .where(hamming(F.col("simhash"), F.col("old_fp"))
+                      <= MAX_HAMMING)
                .select("simhash").distinct())
     fresh = fresh.join(hit_fps, "simhash", "left_anti")
 
@@ -187,23 +169,18 @@ def admit_batch(batch_fp: DataFrame, corpus: DataFrame) -> DataFrame:
 
     # (d) within-batch near-dup greedy on the CONTRACTED graph: one
     # representative (min doc_id) per distinct fingerprint, edges =
-    # banded hamming≤3 pairs over fingerprint VALUES, greedy walk in
-    # representative order on the driver (bounded at 2^16 nodes — the
-    # dedup_cluster_canonical bound)
+    # hamming≤3 pairs over fingerprint VALUES (simhash_fp_pairs),
+    # greedy walk in representative order on the driver (bounded at
+    # 2^16 nodes — the dedup_cluster_canonical bound)
     reps = (fresh.groupBy("simhash")
             .agg(F.min("doc_id").alias("rep_doc")))
-    ra = _nibble_blocks(reps, "simhash", "rep_doc")
-    rb = (_nibble_blocks(reps.select(F.col("simhash").alias("fp_b")), "fp_b"))
-    edges = (ra.join(rb, ["blk", "nib"])
-             .where((F.col("simhash") < F.col("fp_b"))
-                    & _hamming_le(F.col("simhash"), F.col("fp_b")))
-             .select("simhash", "fp_b").distinct())
+    edges = simhash_fp_pairs(reps.select("simhash"), max_hamming=MAX_HAMMING)
 
     nodes = [(r.simhash, r.rep_doc) for r in reps.collect()]
     adj: dict[int, set[int]] = defaultdict(set)
     for r in edges.collect():
-        adj[r.simhash].add(r.fp_b)
-        adj[r.fp_b].add(r.simhash)
+        adj[r.fa].add(r.fb)
+        adj[r.fb].add(r.fa)
     admitted_fps: set[int] = set()
     for fp, _rep in sorted(nodes, key=lambda t: t[1]):
         if not any(nb_fp in admitted_fps for nb_fp in adj[fp]):

@@ -5,10 +5,11 @@ oracle compare can't express as a hash)."""
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import pyspark.sql.functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from jira_scraper_etl_spark import plans
 

@@ -8,13 +8,14 @@ import json
 import os
 import subprocess
 import sys
+from pathlib import Path
 
 
 def test_bench_emits_single_json_line_on_stdout():
     env = dict(os.environ, SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001")
     out = subprocess.run(
         [sys.executable, "bench.py"], capture_output=True, text=True,
-        cwd="/root/repo", env=env, timeout=420)
+        cwd=Path(__file__).resolve().parents[1], env=env, timeout=420)
     assert out.returncode == 0, out.stderr[-2000:]
     lines = [l for l in out.stdout.splitlines() if l.strip()]
     assert len(lines) == 1, lines
@@ -80,6 +81,53 @@ def test_run_suite_crashes_on_genuine_valueerror(spark):
                             ["dedup_jaccard_prefix"])
     finally:
         q.fn = orig
+
+
+def test_run_suite_names_each_query_job(spark, sf_dir, monkeypatch):
+    """run_suite runs each registry entry's build and action under the
+    job description <query name>; a seam filled inside the build nests
+    its own label, the query's comes back after it, and the caller's
+    description and job group are restored at the end."""
+    import types
+
+    import bench
+    from jira_scraper_etl_spark import plans, seams
+
+    sc = spark.sparkContext
+    seen = []
+    cls = type(spark.range(1))
+    orig_count = cls.count
+
+    def count(self):
+        seen.append(("count", sc.getLocalProperty("spark.job.description")))
+        return orig_count(self)
+
+    def fake(s, d):
+        seen.append(("fn", sc.getLocalProperty("spark.job.description")))
+        seams.persist_seam(s.range(5))
+        seen.append(("fn", sc.getLocalProperty("spark.job.description")))
+        return s.range(3)
+
+    monkeypatch.setattr(cls, "count", count)
+    monkeypatch.setattr(bench, "GC_PAUSE", 0.0)
+    monkeypatch.setitem(plans.QUERIES, "fake_named_query",
+                        types.SimpleNamespace(fn=fake))
+    sc.setLocalProperty("spark.jobGroup.id", "outer-group")
+    sc.setJobDescription("outer")
+    try:
+        timings, refused = bench.run_suite(
+            spark, sf_dir, ["fake_named_query"], runs=1)
+        assert "fake_named_query" in timings and not refused
+        assert seen == [("fn", "fake_named_query"),
+                        ("count", "persist_seam:fake"),
+                        ("fn", "fake_named_query"),
+                        ("count", "fake_named_query")]
+        assert sc.getLocalProperty("spark.job.description") == "outer"
+        assert sc.getLocalProperty("spark.jobGroup.id") == "outer-group"
+    finally:
+        sc.setJobDescription(None)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        seams.release_seams()
 
 
 def test_every_registry_output_survives_driver_canonicalization(spark, sf_dir):

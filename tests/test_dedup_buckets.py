@@ -60,8 +60,9 @@ def test_small_buckets_exact_chain_only_above_cap(spark):
 
 def _reference_pairs(buckets, cap, width):
     """Pure-Python candidate_pairs: one Counter entry per (bucket, pair)
-    — every i < j pair of a bucket at or under ``cap``, each member's
-    next ``width`` ids in a bigger one."""
+    — every i < j pair of a bucket at or under ``cap`` (of every bucket
+    when ``cap`` is None), each member's next ``width`` ids in a bigger
+    one."""
     from collections import Counter
 
     out = Counter()
@@ -69,7 +70,7 @@ def _reference_pairs(buckets, cap, width):
         s = sorted(ids)
         n = len(s)
         for i in range(n):
-            hi = n if n <= cap else min(n, i + 1 + width)
+            hi = n if cap is None or n <= cap else min(n, i + 1 + width)
             out.update((s[i], s[j]) for j in range(i + 1, hi))
     return out
 
@@ -78,9 +79,12 @@ def test_candidate_pairs_matches_python_reference(spark):
     """Differential check of the bucket-pair generator on seeded random
     (key, id) rows: bucket sizes 1, 2, cap, cap+1 and 3×cap, ids drawn
     from one shared pool (so a pair recurs across buckets, like a doc
-    pair sharing several bands), chain widths 1-3. ``dedup=True`` must
-    give the reference's pair set; ``dedup=False`` its multiset, one
-    row per bucket and pair."""
+    pair sharing several bands), chain widths 1-3, and the uncapped
+    mode. ``dedup=True`` must give the reference's pair set;
+    ``dedup=False`` its multiset, one row per bucket and pair. Ids are
+    longs or ``struct(id, payload)`` with the payload falling as the id
+    rises: struct ids must order by their first field (the SimHash
+    pair listing carries its fingerprint that way)."""
     import random
     from collections import Counter
 
@@ -88,22 +92,63 @@ def test_candidate_pairs_matches_python_reference(spark):
     for seed in (3, 17):
         rng = random.Random(seed)
         pool = range(1000, 1000 + 4 * cap)
-        buckets = {rng.getrandbits(62): rng.sample(pool, size)
-                   for size in (1, 2, cap, cap + 1, 3 * cap, 2, cap)}
-        rows = [(key, i) for key, ids in buckets.items() for i in ids]
-        rng.shuffle(rows)
-        banded = spark.createDataFrame(rows, "key long, doc_id long")
-        for width in (1, 2, 3):
-            want = _reference_pairs(buckets, cap, width)
-            assert sum(want.values()) > len(want)  # cross-bucket repeats
-            got = D.candidate_pairs(banded, max_bucket_size=cap,
-                                    chain_width=width, dedup=True).collect()
-            assert sorted((r.id_a, r.id_b) for r in got) == sorted(want), \
-                (seed, width)
-            got = D.candidate_pairs(banded, max_bucket_size=cap,
-                                    chain_width=width, dedup=False).collect()
-            assert Counter((r.id_a, r.id_b) for r in got) == want, \
-                (seed, width)
+        drawn = {rng.getrandbits(62): rng.sample(pool, size)
+                 for size in (1, 2, cap, cap + 1, 3 * cap, 2, cap)}
+        for id_type in ("long", "struct<id: long, payload: long>"):
+            buckets = (drawn if id_type == "long" else
+                       {k: [(i, 5000 - i) for i in ids]
+                        for k, ids in drawn.items()})
+            rows = [(key, i) for key, ids in buckets.items() for i in ids]
+            rng.shuffle(rows)
+            banded = spark.createDataFrame(rows, f"key long, doc_id {id_type}")
+            for max_size, widths in ((cap, (1, 2, 3)), (None, (2,))):
+                for width in widths:
+                    want = _reference_pairs(buckets, max_size, width)
+                    assert sum(want.values()) > len(want)  # cross-bucket repeats
+                    got = D.candidate_pairs(banded, max_bucket_size=max_size,
+                                            chain_width=width, dedup=True).collect()
+                    got = [(r.id_a, r.id_b) if id_type == "long" else
+                           (tuple(r.id_a), tuple(r.id_b)) for r in got]
+                    assert sorted(got) == sorted(want), \
+                        (seed, id_type, max_size, width)
+                    got = D.candidate_pairs(banded, max_bucket_size=max_size,
+                                            chain_width=width, dedup=False).collect()
+                    got = [(r.id_a, r.id_b) if id_type == "long" else
+                           (tuple(r.id_a), tuple(r.id_b)) for r in got]
+                    assert Counter(got) == want, \
+                        (seed, id_type, max_size, width)
+
+
+def test_nibble_keys_share_a_key_iff_a_block_is_equal(spark):
+    """Seeded 16-bit fingerprint pairs at hamming 0-4: two fingerprints
+    share a nibble key exactly when one of their four 4-bit blocks is
+    equal, so every pair at hamming <= 3 shares a key."""
+    import random
+
+    rng = random.Random(11)
+    pairs = []
+    for _ in range(300):
+        a, h = rng.getrandbits(16), rng.randint(0, 4)
+        b = a
+        for bit in rng.sample(range(16), h):
+            b ^= 1 << bit
+        pairs.append((a, b, h))
+    fps = spark.createDataFrame(
+        [(fp, fp % 7) for fp in {x for a, b, _ in pairs for x in (a, b)}],
+        "simhash int, other int")
+    keys: dict[int, set[int]] = {}
+    for r in D.nibble_keys(fps, "simhash").collect():
+        assert r.other == r.simhash % 7  # the input columns ride along
+        keys.setdefault(r.simhash, set()).add(r.key)
+    assert all(len(k) == 4 and k <= set(range(64)) for k in keys.values())
+    missed = 0
+    for a, b, h in pairs:
+        block_equal = any((a >> 4 * i) & 15 == (b >> 4 * i) & 15
+                          for i in range(4))
+        assert bool(keys[a] & keys[b]) == block_equal, (a, b, h)
+        assert h > 3 or block_equal, (a, b, h)
+        missed += not block_equal
+    assert missed  # some hamming-4 pair shares no block
 
 
 def test_minhash_lsh_build_leaves_one_seam(spark, sf_dir):

@@ -8,10 +8,11 @@ from __future__ import annotations
 import json
 import os
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from jira_scraper_etl_spark.sources.jsonl_sink import register_jsonl_sink
 

@@ -6,9 +6,11 @@ overruns, stale waivers, row-Python) without a full registry sweep."""
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
+sys.path.insert(0, str(ROOT / "tools"))
 
 import plan_audit as PA  # noqa: E402
 from jira_scraper_etl_spark import plans  # noqa: E402

@@ -5,10 +5,12 @@ exact regime when the vocabulary fits the counter budget."""
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import pyspark.sql.functions as F
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from jira_scraper_etl_spark import plans
 from jira_scraper_etl_spark.functions import hashing as H
@@ -119,7 +121,7 @@ def test_check_oracle_sampled_verifiers_catch_corruption(spark, sf_dir):
     """The harness-side sampled verifiers (tools/check_oracle.py,
     round-10 verdict #7) must pass on the real query outputs AND fail
     on corrupted ones — a verifier that never fails verifies nothing."""
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, str(ROOT / "tools"))
     import check_oracle as CO
 
     out = plans.QUERIES["text_winnow_fingerprints_fast"].fn(spark, sf_dir)

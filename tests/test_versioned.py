@@ -7,11 +7,12 @@ from __future__ import annotations
 import json
 import os
 import sys
+from pathlib import Path
 
 import pyspark.sql.functions as F
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from jira_scraper_etl_spark.operators import versioned as V
 

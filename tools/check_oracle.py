@@ -13,10 +13,11 @@ import math
 import sys
 import time
 from decimal import Decimal
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from jira_scraper_etl_spark import plans  # noqa: E402
 from jira_scraper_etl_spark.catalog import TABLES  # noqa: E402

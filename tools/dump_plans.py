@@ -10,8 +10,9 @@ from __future__ import annotations
 
 import os
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from jira_scraper_etl_spark import plans  # noqa: E402
 from jira_scraper_etl_spark.seams import release_seams  # noqa: E402

@@ -14,8 +14,9 @@ import json
 import statistics
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from jira_scraper_etl_spark import plans  # noqa: E402
 from jira_scraper_etl_spark.errors import RegimeRefused  # noqa: E402

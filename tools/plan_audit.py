@@ -13,8 +13,9 @@ from __future__ import annotations
 
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from jira_scraper_etl_spark import plans  # noqa: E402
 from jira_scraper_etl_spark.session import get_spark  # noqa: E402

@@ -18,8 +18,9 @@ from __future__ import annotations
 import json
 import os
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 # Scale-appropriate heap for the decade probe: the bench default (8g,
 # a sf0.1-dataset setting) gives 32 local-mode task threads ~250 MB

@@ -15,8 +15,9 @@ from __future__ import annotations
 import json
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from jira_scraper_etl_spark import plans  # noqa: E402
 from jira_scraper_etl_spark.errors import RegimeRefused  # noqa: E402
