@@ -22,6 +22,7 @@ and pick the matching scan:
 from __future__ import annotations
 
 import os
+import stat
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -42,6 +43,44 @@ EVENTS_RAW_SCHEMA = T.StructType([
     T.StructField("value", T.DoubleType()),
     T.StructField("props", T.StringType()),
 ])
+
+
+# Session confs that change the schema Spark infers from a parquet footer.
+_INFERENCE_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+)
+# abspath -> (file stat key + inference confs, schema Spark inferred)
+_SCHEMAS: dict[str, tuple[tuple, T.StructType]] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring a local file's schema once.
+
+    Inference runs one Spark job to read the footer (0.09-0.11 s warm,
+    against 0.016-0.02 s for a load with the schema passed). A local
+    regular file's inferred schema is kept while its
+    ``(st_mtime_ns, st_size, st_ino)`` and the inference confs stay the
+    same, so a rewritten file is inferred again. Directories and
+    non-local paths always infer.
+    """
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)
+    if not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    key = (st.st_mtime_ns, st.st_size, st.st_ino,
+           *(spark.conf.get(k, None) for k in _INFERENCE_CONFS))
+    path = os.path.abspath(path)
+    hit = _SCHEMAS.get(path)
+    if hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[path] = (key, df.schema)
+    return df
 
 
 def _events_ts_unit(path: str) -> str:
@@ -66,7 +105,7 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     if _events_ts_unit(path) != "ns":
         # Native-unit timestamps: Spark's vectorized reader handles
         # micro/milli directly; normalize to ntz for stable plans/hashes.
-        df = spark.read.parquet(path)
+        df = _read_parquet(spark, path)
         return df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
     df = spark.read.schema(EVENTS_RAW_SCHEMA).parquet(path)
     # integer `div`, not `/`: double division loses microsecond
@@ -80,5 +119,5 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         return load_events(spark, sf_dir)
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
 

@@ -1,17 +1,23 @@
-"""Events loader unit-detection tests: the driver's generator has
-emitted ``ts`` as TIMESTAMP(NANOS) in some rounds and TIMESTAMP(MICROS)
-in others; ``load_events`` must read both to identical timestamp_ntz
-values (nanos truncate to micros, matching DuckDB)."""
+"""Catalog loader tests.
+
+The driver's generator has emitted ``ts`` as TIMESTAMP(NANOS) in some
+rounds and TIMESTAMP(MICROS) in others; ``load_events`` must read both
+to identical timestamp_ntz values (nanos truncate to micros, matching
+DuckDB). ``load_table`` infers a table file's schema once and reuses it
+until the file changes."""
 
 from __future__ import annotations
 
 import datetime
+import time
+import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from jira_scraper_etl_spark.catalog import _events_ts_unit, load_events
+from jira_scraper_etl_spark.catalog import (
+    _events_ts_unit, load_events, load_table)
 from jira_scraper_etl_spark.streaming import events as SE
 
 TS = [
@@ -48,6 +54,57 @@ def test_load_events_any_unit(spark, tmp_path, unit):
     else:
         want = TS
     assert got == want
+
+
+def _jobs_in_group(spark, action) -> int:
+    """Jobs ``action()`` starts, counted by job group once the listener
+    has seen a marker job submitted after it."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group, marker = f"load-{uuid.uuid4()}", f"marker-{uuid.uuid4()}"
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    try:
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        action()
+        sc.setLocalProperty("spark.jobGroup.id", marker)
+        sc.parallelize([1], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    deadline = time.time() + 30
+    while not tracker.getJobIdsForGroup(marker) and time.time() < deadline:
+        time.sleep(0.05)
+    assert tracker.getJobIdsForGroup(marker)
+    return len(tracker.getJobIdsForGroup(group))
+
+
+def test_load_table_infers_a_file_schema_once(spark, tmp_path):
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": pa.array([1, 2], pa.int64())}), path)
+    assert _jobs_in_group(
+        spark, lambda: load_table(spark, str(tmp_path), "t")) >= 1
+    holder = {}
+    assert _jobs_in_group(spark, lambda: holder.update(
+        df=load_table(spark, str(tmp_path), "t"))) == 0
+    assert sorted(r.a for r in holder["df"].collect()) == [1, 2]
+
+    # same path, new schema: the loader sees the change and infers again
+    pq.write_table(pa.table({"a": pa.array([3], pa.int64()),
+                             "b": pa.array([b"x"], pa.binary())}), path)
+    df = load_table(spark, str(tmp_path), "t")
+    assert df.schema.fieldNames() == ["a", "b"]
+    assert [tuple(r) for r in df.collect()] == [(3, bytearray(b"x"))]
+
+    # an inference conf change infers again too
+    conf = "spark.sql.parquet.binaryAsString"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "true")
+    try:
+        df = load_table(spark, str(tmp_path), "t")
+        assert df.schema["b"].dataType.typeName() == "string"
+    finally:
+        spark.conf.set(conf, prev)
+    assert load_table(spark, str(tmp_path), "t").schema["b"] \
+        .dataType.typeName() == "binary"
 
 
 @pytest.mark.parametrize("unit", ["ns", "us"])
