@@ -1,17 +1,23 @@
 """Versioned snapshot tables: manifest-committed versions with
 time-travel reads and keyed snapshot diffs — the miniature of the
 lakehouse table-format contract (Delta/Iceberg snapshot isolation)
-this engine's maintenance operators assume.
+this engine's maintenance operators assume. This is the engine's one
+commit protocol: every exactly-once write (the streaming silver,
+MERGE and dedup sinks) commits through ``write_version``.
 
-Commit protocol (the same manifest-last rule as the jsonl_commit
-sink): a version directory ``v=N`` becomes visible ONLY when its
-``manifest.json`` exists — data files land first, the manifest is
+Commit protocol: a version directory ``v=N`` becomes visible ONLY when
+its ``manifest.json`` exists — data files land first, the manifest is
 written last via atomic rename. A crash mid-write leaves a manifest-
 less directory that every reader (and ``latest_version``) ignores, so
 readers always see a complete snapshot or the previous one. Versions
 are immutable once committed; ``read_version`` loads exactly the files
 the manifest names, which is what makes old versions stable under
 concurrent new commits (time travel).
+
+Replay: Structured Streaming's ``foreachBatch`` re-runs a micro-batch
+(same id) after a crash between the sink's commit and the checkpoint's.
+Each sink records the id in its manifest (``extra={"batch_id": id}``)
+and skips a batch for which ``committed(table_dir, id)`` holds.
 """
 
 from __future__ import annotations
@@ -22,7 +28,7 @@ import re
 import shutil
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 _V_RE = re.compile(r"^v=(\d+)$")
 
@@ -54,8 +60,10 @@ def write_version(df: DataFrame, table_dir: str,
     """Commit ``df`` as the next version. Data first, manifest last
     (atomic rename), so a crash at any point leaves either the previous
     latest version or the new one — never a torn table. ``extra``
-    merges caller metadata into the manifest (the streaming MERGE sink
-    records the micro-batch id there for idempotent replay)."""
+    merges caller metadata into the manifest (the streaming sinks
+    record the micro-batch id there for idempotent replay). The row
+    count comes from an ``Observation`` on the data write, so the
+    commit runs no read-back job."""
     prev = latest_version(table_dir)
     # allocate past EVERY existing v= dir, committed or torn — a
     # crashed attempt's directory is invisible to readers but its slot
@@ -67,13 +75,14 @@ def write_version(df: DataFrame, table_dir: str,
     version = max(occupied) + 1 if occupied else 0
     vdir = os.path.join(table_dir, f"v={version}")
     data_dir = os.path.join(vdir, "data")
-    df.write.mode("errorifexists").parquet(data_dir)
+    seen = Observation()
+    (df.observe(seen, F.count(F.lit(1)).alias("n"))
+     .write.mode("errorifexists").parquet(data_dir))
     files = sorted(f for f in os.listdir(data_dir) if f.endswith(".parquet"))
-    n_rows = (df.sparkSession.read.parquet(data_dir)).count()
     manifest = {
         "version": version,
         "parent": prev,
-        "n_rows": n_rows,
+        "n_rows": seen.get["n"],
         "schema": df.schema.jsonValue(),
         "files": files,
         **(extra or {}),
@@ -98,11 +107,18 @@ def latest_batch_id(table_dir: str) -> int | None:
     return None if ver is None else load_manifest(table_dir, ver).get("batch_id")
 
 
+def committed(table_dir: str, batch_id: int) -> bool:
+    """Whether micro-batch ``batch_id`` is already committed to the
+    table: the replay rule every streaming sink checks first. Batch ids
+    only grow, so an id at or below the watermark is a replay."""
+    last = latest_batch_id(table_dir)
+    return last is not None and batch_id <= last
+
+
 def effective_versions(table_dir: str) -> list[int]:
     """The read set of a DELTA-APPEND table under compaction
-    supersession (round-12 verdict #1): the newest compaction version —
-    the committed version with the largest ``compacts_through`` in its
-    manifest — plus every committed version numbered PAST that
+    supersession: the newest compaction version — the committed
+    version with the largest ``compacts_through`` in its manifest — plus every committed version numbered PAST that
     threshold. A compaction's content is, by the writer protocol
     (streaming/dedup_sink.maybe_compact), exactly the union of the
     read set at its commit time, and its ``compacts_through`` is the
@@ -130,12 +146,10 @@ def effective_versions(table_dir: str) -> list[int]:
 
 def read_table(spark: SparkSession, table_dir: str) -> DataFrame | None:
     """The table's current logical content: ONE multi-path parquet scan
-    over every file of the effective read set (round-12 verdict #1 —
-    replaces the one-``unionByName``-per-version plan, whose depth grew
-    with commit count and whose analysis cost the driver paid every
-    micro-batch). Requires the table's versions to share one schema,
-    which delta-append tables do by construction (every version is
-    rows of the same logical table). Returns None for an empty table
+    over every file of the effective read set, so plan depth does not
+    grow with commit count. Requires the table's versions to share one
+    schema, which delta-append tables do by construction (every version
+    is rows of the same logical table). Returns None for an empty table
     so callers can supply their own empty frame with the right schema.
     """
     paths = []
@@ -167,8 +181,8 @@ def read_version(spark: SparkSession, table_dir: str,
 
 
 def gc_versions(table_dir: str, retain_last: int) -> list[int]:
-    """Version/manifest GC (round-12 verdict #7): delete superseded
-    version directories outside the time-travel window.
+    """Version/manifest GC: delete superseded version directories
+    outside the time-travel window.
 
     Keeps (a) the effective read set — it IS the table's current
     content, never deletable — and (b) the newest ``retain_last``

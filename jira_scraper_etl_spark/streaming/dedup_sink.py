@@ -1,10 +1,10 @@
 """Streaming incremental-dedup sink: continuous corpus ingestion where
 each micro-batch admits only NOVEL documents — exact-hash anti-lookup
 plus SimHash near-dup rejection against everything admitted so far —
-and appends the admitted rows as a new committed version (round-10
-verdict #6: the production shape of continuous corpus ingestion,
-composing dedup_incremental_novel's batch novelty semantics with the
-merge_sink versioned-table ``foreachBatch`` pattern).
+and appends the admitted rows as a new committed version (the
+production shape of continuous corpus ingestion, composing
+dedup_incremental_novel's batch novelty semantics with the merge_sink
+versioned-table ``foreachBatch`` pattern).
 
 Reference analog: the reference pipeline re-extracts and rewrites its
 whole corpus per run (``main.py`` phase loop; ``transformer.py:359``
@@ -21,12 +21,12 @@ UNION of committed versions, read through the compaction-bounded
 effective read set (every COMPACT_EVERY commits the writer folds the
 read set into one superseding compaction version, so readers scan at
 most COMPACT_EVERY+1 version directories however long the table has
-lived — round-12 verdict #1). The manifest-last commit protocol and
-batch-id idempotence are identical to merge_sink:
+lived). The manifest-last commit protocol and batch-id idempotence are
+identical to merge_sink:
 
 * ``foreachBatch`` replays a batch after a crash between the version
-  commit and the checkpoint commit — a replayed ``batch_id`` ≤ the
-  latest committed one is a no-op.
+  commit and the checkpoint commit — a replayed ``batch_id``
+  (``versioned.committed``) is a no-op.
 * A crash MID-commit leaves a manifest-less ``v=N`` directory invisible
   to every reader; the replay re-admits the same batch against the
   same corpus prefix and commits into a fresh slot.
@@ -94,11 +94,9 @@ def corpus_index(spark: SparkSession, table_dir: str) -> DataFrame:
     """The standing corpus: the union of committed versions, read as
     ONE multi-path parquet scan over the effective read set (newest
     compaction + later deltas — operators/versioned.effective_versions).
-    Round-12 verdict #1: the previous per-version ``unionByName`` loop
-    re-planned a B-deep union after B batches — O(corpus·batches) read
-    cost over the table's life; with the compaction cadence the scan
-    covers at most COMPACT_EVERY+1 version directories however many
-    batches have committed. Time-travel safe — a concurrent in-flight
+    With the compaction cadence the scan covers at most
+    COMPACT_EVERY+1 version directories however many batches have
+    committed. Time-travel safe — a concurrent in-flight
     commit is invisible until its manifest lands."""
     df = V.read_table(spark, table_dir)
     if df is None:
@@ -121,7 +119,7 @@ def maybe_compact(spark: SparkSession, table_dir: str, batch_id: int,
     directory and readers keep the uncompacted read set — the content
     is REDUNDANT by construction, so deferring it to a later trigger
     changes nothing logically. It carries the committing batch's
-    ``batch_id`` so ``versioned.latest_batch_id`` (replay idempotence)
+    ``batch_id`` so ``versioned.committed`` (replay idempotence)
     sees the same watermark whether or not the compaction landed.
 
     Cost shape at 100 TB: the corpus index is (doc_id, h, simhash) —
@@ -215,9 +213,8 @@ def foreach_batch_dedup(
     at-least-once window before the checkpoint commit."""
 
     def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        last = V.latest_batch_id(table_dir)
-        if last is not None and batch_id <= last:
-            return  # replay of an already-committed batch: no-op
+        if V.committed(table_dir, batch_id):
+            return
         corpus = corpus_index(batch.sparkSession, table_dir)
         admitted = admit_batch(fingerprint_docs(batch), corpus)
         V.write_version(admitted, table_dir, extra={"batch_id": batch_id})
@@ -234,8 +231,7 @@ def foreach_batch_dedup(
                 # GC on, the manifest directory itself stays bounded,
                 # so effective_versions' per-batch manifest scan is
                 # O(window) instead of creeping O(all-commits) over
-                # the stream's life (the verdict-#1 shape one level
-                # down: first the union PLAN, now the dir listing).
+                # the stream's life.
                 V.gc_versions(table_dir, gc_retain)
 
     return apply_batch

@@ -1,11 +1,10 @@
 """Streaming MERGE INTO a versioned snapshot table — the canonical
-lakehouse CDC sink (round-9 verdict #5): ``foreachBatch`` applies each
-micro-batch of change rows as a keyed upsert against the latest
-committed snapshot and commits the merged result as the next version.
-Reference analog: the T4 full-rewrite at
-``/root/reference/transformer.py:359`` — where the reference rewrites
-whole JSONL outputs per run, this sink rewrites whole SNAPSHOTS per
-micro-batch with manifest-committed visibility.
+lakehouse CDC sink: ``foreachBatch`` applies each micro-batch of
+change rows as a keyed upsert against the latest committed snapshot
+and commits the merged result as the next version. Reference analog:
+the T4 full-rewrite at the reference's ``transformer.py:359`` — where
+the reference rewrites whole JSONL outputs per run, this sink rewrites
+whole SNAPSHOTS per micro-batch with manifest-committed visibility.
 
 Exactly-once, built from two at-least-once halves:
 
@@ -13,7 +12,7 @@ Exactly-once, built from two at-least-once halves:
   ``batch_id``) after any crash between the sink's commit and the
   checkpoint's — so the sink is IDEMPOTENT BY BATCH ID: every committed
   version records the micro-batch id that produced it, and a replayed
-  id ≤ the latest committed one is a no-op.
+  id (``versioned.committed``) is a no-op.
 * A crash MID-commit leaves a manifest-less ``v=N`` directory that
   every reader ignores (operators/versioned.py protocol: data first,
   manifest last via atomic rename) — the previous snapshot stays
@@ -23,7 +22,7 @@ Convergence: the merge's value updates are exact-DECIMAL additions and
 integer counts — associative and commutative — so any micro-batch
 slicing of the change stream converges to the one-shot batch MERGE
 (the crash-resume differential in tests/test_streaming_merge.py pins
-this, the jsonl_commit soak pattern).
+this).
 
 Scale shape: the per-batch delta aggregation is map-side combined; the
 upsert is ONE full-outer shuffle join per micro-batch (the
@@ -44,9 +43,9 @@ from ..operators import versioned as V
 
 # The accumulator type is deliberately WIDER than the source column's
 # decimal(12,2): a running balance absorbs unbounded stream volume, and
-# a hot key concentrates it — the r11 skew-stress soak (90% of 1.5M
-# change rows on one key) overflowed decimal(12,2) at 6.7e10 under ANSI
-# mode, failing the batch instead of corrupting it. decimal(20,2) gives
+# a hot key concentrates it — a skew-stress soak (90% of 1.5M change
+# rows on one key) overflowed decimal(12,2) at 6.7e10 under ANSI mode,
+# failing the batch instead of corrupting it. decimal(20,2) gives
 # ~10^18 of headroom: a single key absorbing an entire 100 TB order
 # stream (~10^12 rows × ~10^4 avg price) still fits.
 BAL = "decimal(20,2)"
@@ -100,17 +99,16 @@ def foreach_batch_merge(
 
     Every merged version is a FULL snapshot, so it is manifest-tagged
     ``compacts_through`` = the version it merged on top of — the same
-    supersession vocabulary as the dedup sink's compactions (round-12
-    verdict #7). That makes the effective read set exactly [latest
-    snapshot] and lets ``gc_retain`` (opt-in) reap snapshots older
-    than the newest N after each commit, bounding version-directory
-    accumulation over an unbounded stream while keeping an N-deep
-    time-travel window (versioned.gc_versions)."""
+    supersession vocabulary as the dedup sink's compactions. That
+    makes the effective read set exactly [latest snapshot] and lets
+    ``gc_retain`` (opt-in) reap snapshots older than the newest N
+    after each commit, bounding version-directory accumulation over an
+    unbounded stream while keeping an N-deep time-travel window
+    (versioned.gc_versions)."""
 
     def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        last = V.latest_batch_id(table_dir)
-        if last is not None and batch_id <= last:
-            return  # replay of an already-committed batch: no-op
+        if V.committed(table_dir, batch_id):
+            return
         prev = V.latest_version(table_dir)
         target = V.read_version(batch.sparkSession, table_dir, prev)
         merged = merge_balances(target, order_deltas(batch))

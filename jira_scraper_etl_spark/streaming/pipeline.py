@@ -16,7 +16,8 @@ jobs:
 * ``run_streaming_silver`` — the Structured Streaming analog (§2.9):
   ``readStream`` over the jira_rest source, ``foreachBatch`` silver
   transform, ``Trigger.AvailableNow``-style drain with Spark's
-  checkpointLocation owning offsets (exactly-once sink appends).
+  checkpointLocation owning offsets and each micro-batch committed as
+  a version of a ``versioned`` table (exactly-once at rest).
 
 Scale notes: each project's extract is an independent partitioned scan
 (pages fan out across executors); bronze and silver are parquet with a
@@ -34,9 +35,9 @@ import time
 from dataclasses import dataclass, field as dc_field
 
 import pyspark.sql.functions as F
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 
+from ..operators import versioned as V
 from ..operators.transform import SILVER_SCHEMA, transform_issues
 from ..sources import register_jira_source
 from ..sources import offsets as OFF
@@ -237,49 +238,55 @@ def stream_issues(spark: SparkSession, cfg: PipelineConfig, project: str) -> Dat
             .options(**_source_options(cfg, project)).load())
 
 
+def foreach_batch_silver(table_dir: str):
+    """Build the ``foreachBatch`` function: each micro-batch's silver
+    rows commit as the next version of the versioned table at
+    ``table_dir``, tagged with the micro-batch id. A replayed id (a
+    crash between this commit and the checkpoint's) is already
+    committed and is skipped, so the at-least-once ``foreachBatch``
+    writes every issue exactly once."""
+
+    def apply_batch(batch: DataFrame, batch_id: int) -> None:
+        if V.committed(table_dir, batch_id):
+            return
+        V.write_version(transform_issues(batch), table_dir,
+                        extra={"batch_id": batch_id})
+
+    return apply_batch
+
+
 # Upper bound on AvailableNow runs in one drain.
 _STREAM_MAX_ROUNDS = 1000
 
 
 def run_streaming_silver(spark: SparkSession, cfg: PipelineConfig, project: str,
                          timeout_seconds: float = 120.0) -> int:
-    """Drain the source through the silver transform into a parquet
-    sink, each micro-batch read on executors like the batch scan.
-    Spark's checkpointLocation provides exactly-once *offsets* (§2.9
-    T2); the sink makes the *writes* exactly-once too by writing every
-    micro-batch to its own ``batch_id=N`` partition directory with
-    ``overwrite`` — a retried batch (failure between sink write and
-    offset commit) overwrites its own directory instead of appending
-    duplicates. Readers of the sink path see ``batch_id`` as an
-    ordinary partition column.
+    """Drain the source through the silver transform into a versioned
+    table (``foreach_batch_silver``), each micro-batch read on
+    executors like the batch scan. Spark's checkpointLocation provides
+    exactly-once *offsets* (§2.9 T2); the sink's manifest commit and
+    batch-id replay check make the *writes* exactly-once too. Read the
+    table with ``versioned.read_table``.
 
     A restart whose last commit was lost replays that batch, and the
     ``Trigger.AvailableNow`` run ends there, so we loop until a run
-    reads no input rows (each resumes from the same checkpoint).
+    covers no offsets (each resumes from the same checkpoint). Input
+    rows would not do: the replayed batch is skipped unread.
     Every run goes through ``events.drain_query``, so a run still
     active after ``timeout_seconds`` raises ``TimeoutError`` instead of
-    returning a partial drain. Returns rows in sink.
+    returning a partial drain. Returns rows in the table.
     """
-    out_path = cfg.dir("silver_stream", f"project={project}")
+    table_dir = cfg.dir("silver_stream", f"project={project}")
     ckpt = cfg.dir("stream_checkpoints", project)
-
-    def sink_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # Idempotent per-batch write: deterministic directory keyed by
-        # batch_id, overwritten on retry — at-least-once foreachBatch
-        # becomes exactly-once at rest.
-        (transform_issues(batch_df).write.mode("overwrite")
-         .parquet(os.path.join(out_path, f"batch_id={batch_id}")))
-
     for _ in range(_STREAM_MAX_ROUNDS):
         q = drain_query(lambda: (
             stream_issues(spark, cfg, project).writeStream
-            .foreachBatch(sink_batch)
+            .foreachBatch(foreach_batch_silver(table_dir))
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()), timeout_seconds)
-        if not sum(p["numInputRows"] for p in q.recentProgress):
+        if all(s["startOffset"] == s["endOffset"]
+               for p in q.recentProgress for s in p["sources"]):
             break
-    try:
-        return spark.read.parquet(out_path).count()
-    except AnalysisException:
-        return 0  # the source was empty: no batch ever wrote
+    out = V.read_table(spark, table_dir)
+    return 0 if out is None else out.count()

@@ -9,8 +9,6 @@ until the file changes."""
 from __future__ import annotations
 
 import datetime
-import time
-import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -56,34 +54,12 @@ def test_load_events_any_unit(spark, tmp_path, unit):
     assert got == want
 
 
-def _jobs_in_group(spark, action) -> int:
-    """Jobs ``action()`` starts, counted by job group once the listener
-    has seen a marker job submitted after it."""
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    group, marker = f"load-{uuid.uuid4()}", f"marker-{uuid.uuid4()}"
-    prev = sc.getLocalProperty("spark.jobGroup.id")
-    try:
-        sc.setLocalProperty("spark.jobGroup.id", group)
-        action()
-        sc.setLocalProperty("spark.jobGroup.id", marker)
-        sc.parallelize([1], 1).count()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", prev)
-    deadline = time.time() + 30
-    while not tracker.getJobIdsForGroup(marker) and time.time() < deadline:
-        time.sleep(0.05)
-    assert tracker.getJobIdsForGroup(marker)
-    return len(tracker.getJobIdsForGroup(group))
-
-
-def test_load_table_infers_a_file_schema_once(spark, tmp_path):
+def test_load_table_infers_a_file_schema_once(spark, tmp_path, count_jobs):
     path = str(tmp_path / "t.parquet")
     pq.write_table(pa.table({"a": pa.array([1, 2], pa.int64())}), path)
-    assert _jobs_in_group(
-        spark, lambda: load_table(spark, str(tmp_path), "t")) >= 1
+    assert count_jobs(lambda: load_table(spark, str(tmp_path), "t")) >= 1
     holder = {}
-    assert _jobs_in_group(spark, lambda: holder.update(
+    assert count_jobs(lambda: holder.update(
         df=load_table(spark, str(tmp_path), "t"))) == 0
     assert sorted(r.a for r in holder["df"].collect()) == [1, 2]
 

@@ -5,11 +5,14 @@ lifecycle (SURVEY.md §3)."""
 
 from __future__ import annotations
 
+import glob
 import json
+import os
 import threading
 
 import pytest
 
+from jira_scraper_etl_spark.operators import versioned as V
 from jira_scraper_etl_spark.sources import offsets as OFF
 from jira_scraper_etl_spark.streaming import (
     PipelineConfig,
@@ -53,8 +56,6 @@ def test_incremental_empty_leg_keeps_offset(spark, tmp_path):
     return 0 rows: the write observations report a count of 0 and a
     null max(updated), so the offset stays as saved, and both outputs
     are still written, empty."""
-    import os
-
     from jira_scraper_etl_spark.operators.transform import SILVER_SCHEMA
 
     cfg = make_cfg(tmp_path, projects=["SPARK"], incremental=True)
@@ -120,17 +121,19 @@ def test_worker_stop_event(spark, tmp_path):
     assert status["message"] == "worker stopped"
 
 
+def silver_stream_rows(spark, out_path: str) -> int:
+    out = V.read_table(spark, out_path)
+    return 0 if out is None else out.count()
+
+
 def test_streaming_silver_soak_crash_every_batch(spark, tmp_path):
     """End-to-end streaming soak: drain a 3-page backlog where EVERY
-    micro-batch's first attempt dies between the sink write and the
-    offset commit (the worst at-least-once window), and every batch
-    boundary is a full query kill + checkpoint restart. Exactly-once
-    must still hold: each record lands in exactly one batch_id dir,
-    no duplicates, and the committed offsets advance page by page to
-    the end of the backlog."""
-    import glob
-    import os
-
+    micro-batch's first attempt dies between the production sink's
+    commit and the offset commit (the worst at-least-once window), and
+    every batch boundary is a full query kill + checkpoint restart.
+    Exactly-once must still hold: each record lands in exactly one
+    committed version, no duplicates, and the committed offsets advance
+    page by page to the end of the backlog."""
     from jira_scraper_etl_spark.streaming import pipeline as P
 
     cfg = make_cfg(tmp_path, projects=["SPARK"], synthetic_total=150,
@@ -138,21 +141,15 @@ def test_streaming_silver_soak_crash_every_batch(spark, tmp_path):
     out_path = cfg.dir("silver_stream", "project=SPARK")
     ckpt = cfg.dir("stream_checkpoints", "SPARK")
     crashed: list[int] = []
+    commit = P.foreach_batch_silver(out_path)
 
     def sink(batch_df, batch_id: int) -> None:
-        (P.transform_issues(batch_df).write.mode("overwrite")
-         .parquet(os.path.join(out_path, f"batch_id={batch_id}")))
+        commit(batch_df, batch_id)
         if batch_id not in crashed:
             crashed.append(batch_id)
             raise RuntimeError("injected crash before offset commit")
 
-    def sink_count() -> int:
-        try:
-            return spark.read.parquet(out_path).count()
-        except Exception:
-            return 0
-
-    prev, stable = sink_count(), 0
+    prev, stable = silver_stream_rows(spark, out_path), 0
     for _ in range(20):  # each run = one query start from the checkpoint
         # a micro-batch takes the whole backlog, so grow the source one
         # page per new batch to get one crash per page
@@ -167,20 +164,20 @@ def test_streaming_silver_soak_crash_every_batch(spark, tmp_path):
             pass  # the injected crash surfaces here; restart resumes
         if q.isActive:
             q.stop()
-        cur = sink_count()
+        cur = silver_stream_rows(spark, out_path)
         stable = stable + 1 if cur == prev else 0
         if stable >= 2:  # two clean no-growth rounds → fully drained
             break
         prev = cur
 
-    out = spark.read.parquet(out_path)
+    out = V.read_table(spark, out_path)
     assert out.count() == 150
     assert out.select("id").distinct().count() == 150
-    # each record in exactly one batch dir, and >=3 data batches crashed
-    # once and were replayed into the same directory
-    per_batch = {os.path.basename(d): None
-                 for d in glob.glob(os.path.join(out_path, "batch_id=*"))}
-    assert len(per_batch) >= 3
+    # one committed version per data batch, and >=3 data batches crashed
+    # once and were replayed as no-ops
+    batch_ids = [V.load_manifest(out_path, v)["batch_id"]
+                 for v in V.committed_versions(out_path)]
+    assert len(batch_ids) == len(set(batch_ids)) >= 3
     assert len(crashed) == len(set(crashed)) and len(crashed) >= 3
     # committed offsets advanced to the end of the backlog
     offset_files = sorted(
@@ -195,21 +192,19 @@ def test_streaming_silver_drain_and_resume(spark, tmp_path):
     cfg = make_cfg(tmp_path, projects=["SPARK"], synthetic_total=120,
                    max_results=50)
     run_streaming_silver(spark, cfg, "SPARK")
-    out = spark.read.parquet(cfg.dir("silver_stream", "project=SPARK"))
+    out = V.read_table(spark, cfg.dir("silver_stream", "project=SPARK"))
     assert out.count() == 120
     assert out.select("id").distinct().count() == 120
     # rerun: checkpointed offsets mean no duplicate appends
     run_streaming_silver(spark, cfg, "SPARK")
-    assert spark.read.parquet(cfg.dir("silver_stream", "project=SPARK")).count() == 120
+    assert silver_stream_rows(
+        spark, cfg.dir("silver_stream", "project=SPARK")) == 120
 
 
 def test_streaming_silver_recovers_lost_commit(spark, tmp_path):
     """The production sink's replay: with the last checkpoint commit
-    lost, a restart replays that batch into its own ``batch_id`` dir,
-    and the issues that arrived since are still drained."""
-    import glob
-    import os
-
+    lost, a restart replays that batch, which is already committed and
+    is skipped, and the issues that arrived since are still drained."""
     cfg = make_cfg(tmp_path, projects=["SPARK"], synthetic_total=120,
                    max_results=50)
     run_streaming_silver(spark, cfg, "SPARK")
@@ -220,9 +215,48 @@ def test_streaming_silver_recovers_lost_commit(spark, tmp_path):
         os.remove(crc)
     cfg.synthetic_total = 170
     run_streaming_silver(spark, cfg, "SPARK")
-    out = spark.read.parquet(cfg.dir("silver_stream", "project=SPARK"))
+    out = V.read_table(spark, cfg.dir("silver_stream", "project=SPARK"))
     assert out.count() == 170
     assert out.select("id").distinct().count() == 170
+
+
+def test_streaming_silver_torn_commit_replays_once(spark, tmp_path,
+                                                   monkeypatch):
+    """A crash between a micro-batch's data write and its manifest
+    leaves the previous version as the table; the replayed batch then
+    commits once, into a fresh version slot."""
+    cfg = make_cfg(tmp_path, projects=["SPARK"], synthetic_total=50,
+                   max_results=50)
+    table = cfg.dir("silver_stream", "project=SPARK")
+    assert run_streaming_silver(spark, cfg, "SPARK") == 50
+    assert V.committed_versions(table) == [0]
+
+    class TornOs:
+        """``os`` for versioned.py, except that the manifest rename dies."""
+
+        def __getattr__(self, name):
+            return getattr(os, name)
+
+        def replace(self, src, dst):
+            raise RuntimeError("injected crash before the manifest")
+
+    monkeypatch.setattr(V, "os", TornOs())
+    cfg.synthetic_total = 120
+    with pytest.raises(Exception, match="injected crash"):
+        run_streaming_silver(spark, cfg, "SPARK")
+    monkeypatch.undo()
+    # batch 1's data landed in v=1, but without a manifest v=0 is the table
+    assert any(f.endswith(".parquet")
+               for f in os.listdir(os.path.join(table, "v=1", "data")))
+    assert V.committed_versions(table) == [0]
+    assert silver_stream_rows(spark, table) == 50
+
+    assert run_streaming_silver(spark, cfg, "SPARK") == 120
+    out = V.read_table(spark, table)
+    assert out.count() == 120
+    assert out.select("id").distinct().count() == 120
+    assert V.committed_versions(table) == [0, 2]
+    assert [V.load_manifest(table, v)["batch_id"] for v in (0, 2)] == [0, 1]
 
 
 def test_streaming_silver_timeout_raises(spark, tmp_path):

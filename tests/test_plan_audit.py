@@ -26,6 +26,36 @@ def test_audit_one_detects_cartesian(spark):
     assert feats["nested_loop"] >= 1
 
 
+def test_audit_one_counts_and_releases_seams(spark):
+    """An entry that fills seams inside fn() shows them in its ``seams``
+    feature and is flagged PARTIAL (its shuffles before the seams are
+    not in the returned plan); the audit releases them afterwards."""
+    import pyspark.sql.functions as F
+
+    from jira_scraper_etl_spark.seams import (checkpoint_seam, outstanding,
+                                              persist_seam)
+
+    def grouped(s, d):
+        return s.range(100).groupBy((F.col("id") % 7).alias("k")).count()
+
+    def seamed(s, d):
+        return persist_seam(checkpoint_seam(grouped(s, d))).select("k")
+
+    before = outstanding()
+    feats = PA.audit_one(spark, "synthetic_seamed", seamed,
+                         "/root/testdata/sf0.001")
+    assert feats["seams"] == 2
+    assert feats["exchanges"] == 0  # the groupBy shuffle ran before the plan
+    assert outstanding() == before
+    flags, violations = PA.check_features("synthetic_seamed", feats)
+    assert flags == ["PARTIAL"] and not violations
+
+    plain = PA.audit_one(spark, "synthetic_plain", grouped,
+                         "/root/testdata/sf0.001")
+    assert plain["seams"] == 0 and plain["exchanges"] >= 1
+    assert PA.check_features("synthetic_plain", plain) == ([], [])
+
+
 def test_unwaived_nested_loop_is_a_violation():
     feats = {"nested_loop": 1, "py_eval": 0}
     flags, violations = PA.check_features("not_on_any_list", feats)

@@ -51,6 +51,15 @@ def test_write_read_and_time_travel_isolation(spark, table):
     assert mf["parent"] == 0 and mf["n_rows"] == v1_df.count()
 
 
+def test_write_version_runs_one_job(spark, tmp_path, count_jobs):
+    """A commit is the data write alone: the manifest's row count comes
+    from an Observation on that write, not from reading it back."""
+    d = str(tmp_path / "t")
+    df = spark.range(10).selectExpr("id", "id * 2 AS v")
+    assert count_jobs(lambda: V.write_version(df, d)) == 1
+    assert V.load_manifest(d, 0)["n_rows"] == 10
+
+
 def test_uncommitted_version_is_invisible(spark, table):
     d, base = table
     V.write_version(base, d)

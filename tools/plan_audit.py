@@ -3,6 +3,12 @@ the plan features that matter at 100 TB — exchange (shuffle) count,
 sorts, join strategies, scans, and red flags (cartesian products,
 row-at-a-time Python UDFs).
 
+The counts read the returned frame's plan. An entry that fills a
+``persist_seam`` or ``checkpoint_seam`` inside ``fn()`` ran part of its
+work before that plan, as separate jobs; its ``seams`` column is > 0
+and its row is flagged PARTIAL (the shuffles before the seams are not
+counted).
+
 Usage: python tools/plan_audit.py [sf_dir] [out_md]
 Writes PLANS.md (default) — a committed snapshot reviewers can diff:
 a new Exchange in a query's row is a plan regression you can see in
@@ -17,7 +23,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
-from jira_scraper_etl_spark import plans  # noqa: E402
+from jira_scraper_etl_spark import plans, seams  # noqa: E402
 from jira_scraper_etl_spark.session import get_spark  # noqa: E402
 
 # The only entries allowed nested-loop/cartesian plan nodes, each with
@@ -140,8 +146,16 @@ def _session_pushdown_filters(plan: str) -> int:
 
 
 def audit_one(spark, name: str, fn, sf_dir: str) -> dict:
-    df = fn(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    """Plan features of ``fn(spark, sf_dir)``; ``seams`` is how many
+    seams ``fn()`` left outstanding. They are released before
+    returning."""
+    before = seams.outstanding()
+    try:
+        df = fn(spark, sf_dir)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        n_seams = seams.outstanding() - before
+    finally:
+        seams.release_seams(spark)
     feats = {
         "exchanges": len(re.findall(r"\bExchange\b", plan)),
         "sorts": len(re.findall(r"\bSort \[", plan)),
@@ -155,14 +169,18 @@ def audit_one(spark, name: str, fn, sf_dir: str) -> dict:
             r"ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas", plan)),
         "hof_scan_filter": _hof_scan_filters(plan),
         "session_pushdown": _session_pushdown_filters(plan),
+        "seams": n_seams,
     }
     return feats
 
 
 def check_features(name: str, f: dict) -> tuple[list[str], list[str]]:
     """Pure violation rules over one query's plan features — factored
-    out so the synthetic-violation test can drive them directly."""
+    out so the synthetic-violation test can drive them directly. A
+    PARTIAL flag (seams filled inside ``fn()``) is not a violation."""
     flags, violations = [], []
+    if f.get("seams", 0):
+        flags.append("PARTIAL")
     tag, budget = ALLOWED_NESTED_LOOP.get(name, (None, 0))
     if f["nested_loop"] > budget:
         flags.append("UNEXPECTED-NESTED-LOOP")
@@ -233,18 +251,22 @@ def main() -> int:
             "timings. A diff in a row = a plan change to review. "
             "`nested-loop` is only legal for the gated ground-truth "
             "twins and 1-row broadcast calibration joins "
-            "(ALLOWED_NESTED_LOOP in the tool).\n\n"
+            "(ALLOWED_NESTED_LOOP in the tool). `seams` counts the "
+            "seams an entry fills inside fn(); such a row is PARTIAL: "
+            "the shuffles before its seams ran as separate jobs and are "
+            "not in its counts.\n\n"
             "| query | exchanges | sorts | BHJ | SMJ | nested-loop | "
-            "scans | arrow-py | flags |\n"
-            "|---|---|---|---|---|---|---|---|---|\n")
+            "scans | arrow-py | seams | flags |\n"
+            "|---|---|---|---|---|---|---|---|---|---|\n")
         for name, f, flags in rows:
             if f is None:
-                fh.write(f"| {name} | — | — | — | — | — | — | — | {flags} |\n")
+                fh.write(f"| {name} | — | — | — | — | — | — | — | — "
+                         f"| {flags} |\n")
                 continue
             fh.write(
                 f"| {name} | {f['exchanges']} | {f['sorts']} | {f['bhj']} "
                 f"| {f['smj']} | {f['nested_loop']} | {f['scans']} "
-                f"| {f['arrow_py']} | {flags} |\n")
+                f"| {f['arrow_py']} | {f['seams']} | {flags} |\n")
         unused = sorted(
             name for name, f, _ in rows
             if f is not None and name in ALLOWED_NESTED_LOOP
