@@ -20,7 +20,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 from ..functions.hashing import shingles_from_tokens, word_tokens
-from .fanout import HEAVY, fan_out
+from .fanout import fan_out
 
 N_HASHES, N_BANDS, BAND_ROWS = 16, 4, 4
 
@@ -72,14 +72,13 @@ def shingled_docs(df: DataFrame, id_col: str = "doc_id",
     #
     # The conditional exchange sits on the RAW text: a small corpus is
     # one file split, and anything computed pre-exchange runs on one
-    # core (HEAVY preset: the md5-per-shingle pipeline costs ~6 s/MB
-    # single-core; a wide warehouse scan skips the exchange entirely).
+    # core (see operators/fanout).
     # Tokenize and shingle are separate post-exchange projections;
     # CollapseProject leaves them alone (the token array is non-cheap
     # and referenced ~6× by the shingle expression), so tokenization is
     # evaluated once per row.
     raw = fan_out(df.where(F.col(text_col).isNotNull())
-                  .select(id_col, text_col), HEAVY)
+                  .select(id_col, text_col))
     toks = raw.select(id_col, word_tokens(F.col(text_col)).alias("toks"))
     return toks.select(id_col, shingles_from_tokens(F.col("toks"), n).alias("sh"))
 
@@ -348,7 +347,7 @@ def simhash_near_dup_pairs(df: DataFrame, id_col: str = "doc_id",
     # fan out of the single-file scan partition before per-token hashing
     # (same rationale as minhash_near_dup_pairs)
     fp = simhash_fingerprints(
-        fan_out(df.select(id_col, text_col), HEAVY), id_col, text_col)
+        fan_out(df.select(id_col, text_col)), id_col, text_col)
     keyed = nibble_keys(fp, "simhash").select(
         F.struct(id_col, "simhash").alias("id"), "key")
     pairs = candidate_pairs(keyed, "id", max_bucket_size=None)
@@ -389,7 +388,7 @@ def simhash_neighbor_stats(df: DataFrame, id_col: str = "doc_id",
     # at warehouse scale this seam is a parquet materialization
     from ..seams import checkpoint_seam
     fp = checkpoint_seam(simhash_fingerprints(
-        fan_out(df.select(id_col, text_col), HEAVY), id_col, text_col))
+        fan_out(df.select(id_col, text_col)), id_col, text_col))
     cl = fp.groupBy("simhash").agg(
         F.count(F.lit(1)).alias("n_docs"), F.min(id_col).alias("m1"))
     # second-smallest id per clique (NULL for singleton cliques): one

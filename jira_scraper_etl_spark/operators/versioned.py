@@ -29,6 +29,7 @@ import shutil
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql.types import StructType
 
 _V_RE = re.compile(r"^v=(\d+)$")
 
@@ -149,17 +150,18 @@ def read_table(spark: SparkSession, table_dir: str) -> DataFrame | None:
     over every file of the effective read set, so plan depth does not
     grow with commit count. Requires the table's versions to share one
     schema, which delta-append tables do by construction (every version
-    is rows of the same logical table). Returns None for an empty table
-    so callers can supply their own empty frame with the right schema.
+    is rows of the same logical table); the scan takes the newest
+    manifest's schema. Returns None for an empty table so callers can
+    supply their own empty frame with the right schema.
     """
-    paths = []
+    paths, mf = [], None
     for v in effective_versions(table_dir):
         mf = load_manifest(table_dir, v)
         data_dir = os.path.join(table_dir, f"v={v}", "data")
         paths.extend(os.path.join(data_dir, f) for f in mf["files"])
     if not paths:
         return None
-    return spark.read.parquet(*paths)
+    return _read_files(spark, mf, paths)
 
 
 def read_version(spark: SparkSession, table_dir: str,
@@ -177,7 +179,15 @@ def read_version(spark: SparkSession, table_dir: str,
     manifest = json.load(open(mf))
     data_dir = os.path.join(table_dir, f"v={version}", "data")
     paths = [os.path.join(data_dir, f) for f in manifest["files"]]
-    return spark.read.parquet(*paths)
+    return _read_files(spark, manifest, paths)
+
+
+def _read_files(spark: SparkSession, manifest: dict,
+                paths: list[str]) -> DataFrame:
+    """Scan ``paths`` with the schema ``manifest`` stores, so the read
+    starts no footer-inference job."""
+    schema = StructType.fromJson(manifest["schema"])
+    return spark.read.schema(schema).parquet(*paths)
 
 
 def gc_versions(table_dir: str, retain_last: int) -> list[int]:

@@ -28,7 +28,7 @@ from ..seams import persist_seam
 from ..catalog import load_table
 from ..functions import hashing as H
 from ..operators import multimodal as MM
-from ..operators.fanout import HEAVY, LIGHT, fan_out
+from ..operators.fanout import fan_out
 from .llm_ops import SQL_TOKS
 from .multimodal import SQL_FRAME_BYTES, SQL_FRAME_DIGESTS, SQL_MEDIA_TYPE, SQL_NFRAMES
 from .registry import money, one_minus_rate, register
@@ -84,7 +84,7 @@ def text_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = load_table(spark, sf_dir, "documents")
     toks = H.word_tokens(F.col("text"))
-    t = (fan_out(d.select("doc_id", "lang", toks.alias("toks")), LIGHT)
+    t = (fan_out(d.select("doc_id", "lang", toks.alias("toks")))
          .select("doc_id", "lang", F.explode("toks").alias("tok")))
     tf = persist_seam(t.groupBy("doc_id", "lang", "tok")
                       .agg(F.count(F.lit(1)).alias("tf")))
@@ -741,11 +741,10 @@ def mm_dedup_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     back as an explicit broadcast — no shuffle of the corpus at any
     data size. Integer division only; no float thresholds to drift.
     """
-    # fan out before the Python byte scan (round-13, the
-    # plans/multimodal.py fix): the pruned doc_id scan is 1-2 splits,
-    # so the per-row feature pass ran single-task
+    # fan out before the Python byte scan: the pruned doc_id scan is
+    # 1-2 splits, so the per-row feature pass would run single-task
     d = fan_out(load_table(spark, sf_dir, "documents")
-                .select("doc_id"), HEAVY)
+                .select("doc_id"))
     feats = MM.media_features(MM.attach_media(d))
 
     def level(h: str) -> F.Column:

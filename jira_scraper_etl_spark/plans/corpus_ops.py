@@ -40,7 +40,7 @@ from ..seams import persist_seam
 
 from ..catalog import load_table
 from ..functions import hashing as H
-from ..operators.fanout import HEAVY, LIGHT, fan_out
+from ..operators.fanout import fan_out
 from ..functions import vectors as V
 from .curation import SQL_DOC_BUCKET
 from .llm_ops import SQL_QUANT, SQL_SIMHASH, SQL_TOKHASH, SQL_TOKS, _doc_shingled
@@ -173,11 +173,8 @@ def span_dedup(d: DataFrame) -> DataFrame:
     by the composed curate_corpus_v2 pipeline."""
     # fan the per-doc tokenize/explode work out of the (few) scan
     # partitions before the heavy map stage — a single-file scan would
-    # otherwise run the whole explode+md5 pass in one task (measured
-    # 4.5× scaling sf0.1→sf1 before, near-linear after). Conditional
-    # (LIGHT preset): a wide warehouse scan skips the exchange, and so
-    # does a sub-MB input where the single-task pass beats the shuffle
-    # (0.44 s vs 1.13 s at sf0.1 — the round-3 bench regression).
+    # otherwise run the whole explode+md5 pass in one task; skipped on
+    # wide scans and toy inputs (see operators/fanout).
     toks = H.word_tokens(F.col("text"))
     # the no-empty-docs gate is the CHEAP source predicate (has a
     # non-whitespace char <=> word_tokens nonempty, nulls drop both
@@ -185,7 +182,7 @@ def span_dedup(d: DataFrame) -> DataFrame:
     # HOF into the scan's DataFilters below the fan-out exchange —
     # duplicate work with one copy serialized (HOF-SCAN-FILTER)
     t = fan_out(d.where(F.col("text").rlike(r"\S"))
-                .select("doc_id", toks.alias("toks")), LIGHT)
+                .select("doc_id", toks.alias("toks")))
     n_chunks = F.ceil(F.size("toks") / F.lit(float(SPAN))).cast("int")
     spans = F.transform(
         F.sequence(F.lit(0), n_chunks - 1),
@@ -248,8 +245,8 @@ def text_corpus_freq_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = H.word_tokens(F.col("text"))
     # conditional fan-out before the interpreted split/explode: a
     # single-file scan otherwise runs the explode on one core; skipped
-    # on wide scans and sub-MB inputs (see operators/fanout)
-    t = (fan_out(d.select("doc_id", toks.alias("toks")), LIGHT)
+    # on wide scans and toy inputs (see operators/fanout)
+    t = (fan_out(d.select("doc_id", toks.alias("toks")))
          .select("doc_id", F.explode("toks").alias("tok")))
     # Eager persist: tf feeds BOTH the vocabulary aggregation and the
     # scoring join, and Catalyst does not reuse the exchange across the
@@ -380,7 +377,7 @@ def dedup_incremental_novel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     feat = persist_seam(
-        fan_out(d.select("doc_id", "text"), HEAVY).select(
+        fan_out(d.select("doc_id", "text")).select(
             "doc_id",
             doc_bucket(F.col("doc_id")).alias("bucket"),
             F.md5(TS.normalize_for_fingerprint(F.col("text"))).alias("h"),
@@ -457,7 +454,7 @@ def text_bigram_assoc(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = H.word_tokens(F.col("text"))
     # fan the cached token arrays across cores: three consumer stages
     # read this cache, so 1-2 cache partitions would serialize them all
-    t = persist_seam(fan_out(d.select(toks.alias("toks")), HEAVY))
+    t = persist_seam(fan_out(d.select(toks.alias("toks"))))
     uni = t.select(F.explode("toks").alias("tok"))
     uc = uni.groupBy("tok").agg(F.count(F.lit(1)).alias("c"))
     tot = uni.agg(F.count(F.lit(1)).alias("n"))
@@ -705,7 +702,7 @@ def text_char_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     # Fan the 37-scan fold out of the (few) scan partitions; skipped on
     # wide scans and toy inputs (see operators/fanout).
-    d = fan_out(d, HEAVY)
+    d = fan_out(d)
     # One struct-fold over the count array: four separate aggregate
     # expressions would each re-evaluate the 37-replace cnt computation
     # (higher-order folds are independent expression trees — measured
@@ -837,7 +834,7 @@ def curate_corpus_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     # content hash) out of the (few) scan partitions — the span_dedup
     # argument: a single-file scan runs the whole pass in one task;
     # skipped on wide scans and toy inputs (see operators/fanout).
-    d = fan_out(d, HEAVY)
+    d = fan_out(d)
     # Single struct-fold (see _char_stats_col) so the 37-scan count
     # array is computed once per row, not once per consuming expression.
     base = d.select(
@@ -981,7 +978,7 @@ def chunk_documents_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # HOF into the scan's DataFilters below the fan-out exchange —
     # duplicate work with one copy serialized (HOF-SCAN-FILTER)
     t = fan_out(d.where(F.col("text").rlike(r"\S"))
-                .select("doc_id", toks.alias("toks")), LIGHT)
+                .select("doc_id", toks.alias("toks")))
     n_chunks = F.when(
         F.size("toks") <= CHUNK_TOKENS, F.lit(1)
     ).otherwise(
@@ -1057,7 +1054,7 @@ def text_bigram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     bigram-less docs (<2 tokens) with NULL novelty."""
     d = load_table(spark, sf_dir, "documents")
     toks = H.word_tokens(F.col("text"))
-    t = fan_out(d.select("doc_id", toks.alias("toks")), LIGHT)
+    t = fan_out(d.select("doc_id", toks.alias("toks")))
     k = F.size("toks")
     pl = F.slice("toks", 1, F.greatest(k - 1, F.lit(0)))
     pr = F.slice("toks", 2, F.greatest(k - 1, F.lit(0)))
@@ -1181,7 +1178,7 @@ def substring_dup_stats(d: DataFrame, L: int = SUBSTR_L,
     """
     toks = H.word_tokens(F.col("text"))
     t = fan_out(d.where(F.col("text").rlike(r"\S"))
-                .select("doc_id", toks.alias("toks")), LIGHT)
+                .select("doc_id", toks.alias("toks")))
     base = persist_seam(
         t.select("doc_id", F.size("toks").cast("bigint").alias("n_tokens"),
                  "toks"))
@@ -1338,9 +1335,8 @@ def text_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     g = (d.where(F.col("text").rlike(r"\S"))
          .select("doc_id", _gtext_col().alias("text")))
-    t = fan_out(
-        g.select("doc_id", "text", H.word_tokens(F.col("text")).alias("toks")),
-        LIGHT)
+    t = fan_out(g.select("doc_id", "text",
+                         H.word_tokens(F.col("text")).alias("toks")))
     n_words = F.size("toks").cast("bigint")
     sum_len = F.aggregate("toks", F.lit(0).cast("bigint"),
                           lambda a, w: a + F.length(w))
@@ -1476,7 +1472,7 @@ def text_repetition_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     toks = H.word_tokens(F.col("text"))
     t = fan_out(d.where(F.col("text").rlike(r"\S"))
-                .select("doc_id", toks.alias("toks")), LIGHT)
+                .select("doc_id", toks.alias("toks")))
     base = persist_seam(
         t.select("doc_id", F.size("toks").cast("bigint").alias("n_tokens"),
                  "toks"))
@@ -1643,7 +1639,7 @@ def text_c4_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = (d.where(F.col("text").rlike(r"\S"))
          .select("doc_id", _c4text_col().alias("text")))
     t = fan_out(g.select("doc_id", "text",
-                         F.split("text", "\n").alias("lines")), LIGHT)
+                         F.split("text", "\n").alias("lines")))
     low = F.lower(F.col("text"))
     n_lines = F.size("lines").cast("bigint")
     n_term = F.size(F.filter(
@@ -1735,8 +1731,7 @@ def curate_source_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = fan_out(
         d.where(F.col("text").isNotNull())
         .select("doc_id", "source", "lang", F.md5("text").alias("h"),
-                F.size(H.word_tokens(F.col("text"))).alias("n_toks")),
-        LIGHT)
+                F.size(H.word_tokens(F.col("text"))).alias("n_toks")))
     t = persist_seam(t)
     base = t.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
@@ -1855,7 +1850,7 @@ def curate_fineweb_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = fan_out(d.where(F.col("text").rlike(r"\S"))
                 .select("doc_id", "text",
                         H.word_tokens(F.col("text")).alias("toks"),
-                        F.md5("text").alias("h")), LIGHT)
+                        F.md5("text").alias("h")))
     base = persist_seam(
         t.select("doc_id", "text", "toks", "h",
                  F.size("toks").cast("bigint").alias("n_tokens")))

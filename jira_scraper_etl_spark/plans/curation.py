@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..catalog import load_table
 from ..functions import hashing as H
-from ..operators.fanout import HEAVY, fan_out
+from ..operators.fanout import fan_out
 from ..functions import vectors as V
 from .llm_ops import SQL_QDOT_AB, SQL_QUANT, SQL_TOKS, _HITS, _doc_shingled
 from .registry import register
@@ -192,7 +192,7 @@ def decontaminate_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = load_table(spark, sf_dir, "documents")
     sh = (fan_out(d.where(F.col("text").isNotNull())
-                  .select("doc_id", "text"), HEAVY)
+                  .select("doc_id", "text"))
           .select("doc_id", H.word_shingles(F.col("text"), 3).alias("sh")))
     eval_grams = (sh.where(F.col("doc_id") < 10)
                   .select(F.explode("sh").alias("t")).distinct())
@@ -264,7 +264,7 @@ def decontaminate_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = load_table(spark, sf_dir, "documents")
     sh = (fan_out(d.where(F.col("text").isNotNull())
-                  .select("doc_id", "text"), HEAVY)
+                  .select("doc_id", "text"))
           .select("doc_id", H.word_shingles(F.col("text"), 3).alias("sh")))
     eval_grams = (sh.where(F.col("doc_id") < 10)
                   .select(F.explode("sh").alias("t")).distinct())
@@ -386,7 +386,7 @@ def text_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = load_table(spark, sf_dir, "documents")
     toks = (fan_out(d.where(F.col("text").isNotNull())
-                    .select("doc_id", "text"), HEAVY)
+                    .select("doc_id", "text"))
             .select("doc_id", H.word_tokens(F.col("text")).alias("toks")))
     tok_counts = (toks.select("doc_id", F.explode("toks").alias("w"))
                   .groupBy("doc_id", "w").agg(F.count(F.lit(1)).alias("c")))
@@ -846,7 +846,7 @@ def curate_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..seams import persist_seam
     toks = persist_seam(
         fan_out(d.where(F.col("text").isNotNull())
-                .select("doc_id", "text"), HEAVY)
+                .select("doc_id", "text"))
         .select("doc_id",
                 (doc_bucket(F.col("doc_id")) < 10).alias("is_target"),
                 F.explode(H.word_tokens(F.col("text"))).alias("t"))

@@ -35,7 +35,7 @@ from ..functions import hashing as H
 from ..functions import textstats as TS
 from ..functions import vectors as V
 from ..operators import dedup as D
-from ..operators.fanout import HEAVY, fan_out
+from ..operators.fanout import fan_out
 from .registry import register
 
 # ---------------------------------------------------------------------------
@@ -1164,10 +1164,9 @@ def text_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = load_table(spark, sf_dir, "documents")
     # fan the single-file scan out before interpreted tokenization
-    # (same rationale + measurement as operators/dedup.shingled_docs:
-    # 5.6s -> sub-second at sf0.1 when tokenize runs on all cores;
-    # skipped automatically on wide scans / toy inputs)
-    toks = (fan_out(d.select("text"), HEAVY)
+    # (same rationale as operators/dedup.shingled_docs; skipped on
+    # wide scans and toy inputs, see operators/fanout)
+    toks = (fan_out(d.select("text"))
             .select(F.explode(H.word_tokens(F.col("text"))).alias("token")))
     return (toks.groupBy("token").agg(F.count(F.lit(1)).alias("n"))
             .orderBy(F.desc("n"), F.asc("token")).limit(100))
@@ -1204,7 +1203,7 @@ def text_char_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct pair per partition — the pair alphabet is tiny) →
     TakeOrderedAndProject. No global sort, no shuffle of raw text."""
     d = load_table(spark, sf_dir, "documents")
-    toks = (fan_out(d.select("text"), HEAVY)
+    toks = (fan_out(d.select("text"))
             .select(F.explode(H.word_tokens(F.col("text"))).alias("t"))
             .where(F.length("t") >= 2))
     # substring with a non-literal start position needs the SQL form
@@ -1366,7 +1365,7 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str,
     # nibble banding. Components of docs == components of fingerprints,
     # because doc adjacency depends only on the fingerprints.
     fp = checkpoint_seam(D.simhash_fingerprints(
-        fan_out(d.select("doc_id", "text"), HEAVY)))
+        fan_out(d.select("doc_id", "text"))))
     nodes = fp.groupBy("simhash").agg(F.min("doc_id").alias("fp_min"),
                                       F.count(F.lit(1)).alias("n_docs"))
     fp_pairs = D.simhash_fp_pairs(nodes.select("simhash"))

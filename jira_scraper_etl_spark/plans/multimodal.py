@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import load_table
 from ..operators import multimodal as MM
-from ..operators.fanout import HEAVY, fan_out
+from ..operators.fanout import fan_out
 from .registry import register
 
 # -- shared DuckDB fragments (mirror operators/multimodal.py exactly) -------
@@ -34,6 +34,14 @@ SQL_FRAME_DIGESTS = ("list_transform(generate_series(0, nf - 1), "
 _HEXD = "(strpos('0123456789abcdef', substring(m, {p}, 1)) - 1)"
 SQL_FRAME_BYTES = ("list_transform(generate_series(1, 16), "
                    f"k -> {_HEXD.format(p='2*k-1')} * 16 + {_HEXD.format(p='2*k')})")
+
+
+def _media_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ``doc_id`` frame every media entry decodes from, fanned out
+    before the per-row Python decode: the pruned doc_id scan is 1-2
+    splits, so without the exchange the whole decode runs single-task
+    (see operators/fanout)."""
+    return fan_out(load_table(spark, sf_dir, "documents").select("doc_id"))
 
 
 @register(
@@ -61,14 +69,7 @@ def mm_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/multimodal.py — the synthetic table is all FAKE
     containers, so the dimension columns are null here and the oracle
     models the header arithmetic). Map-only at any scale."""
-    # fan out before the Python decode (round-13): the pruned
-    # doc_id scan is 1-2 splits, so the whole per-row decode ran
-    # single-task (measured: mm_jpeg 13.8 s at sf1 = exactly its
-    # 0.27 ms/doc single-core cost). HEAVY preset: per-row Python
-    # decode is cryptographic-hash-class work per input byte.
-    d = fan_out(load_table(spark, sf_dir, "documents")
-                .select("doc_id"), HEAVY)
-    return MM.decode_media(MM.attach_media(d))
+    return MM.decode_media(MM.attach_media(_media_ids(spark, sf_dir)))
 
 
 @register(
@@ -98,14 +99,7 @@ def mm_byte_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     4-bin histogram per row, computed with numpy over Arrow batches —
     the exact shape of a real pixel/sample feature pass. The oracle
     rebuilds the identical bytes from md5 hex digits."""
-    # fan out before the Python decode (round-13): the pruned
-    # doc_id scan is 1-2 splits, so the whole per-row decode ran
-    # single-task (measured: mm_jpeg 13.8 s at sf1 = exactly its
-    # 0.27 ms/doc single-core cost). HEAVY preset: per-row Python
-    # decode is cryptographic-hash-class work per input byte.
-    d = fan_out(load_table(spark, sf_dir, "documents")
-                .select("doc_id"), HEAVY)
-    return MM.media_features(MM.attach_media(d))
+    return MM.media_features(MM.attach_media(_media_ids(spark, sf_dir)))
 
 
 @register(
@@ -125,14 +119,7 @@ def mm_resize_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image resize planning: source/target dims + scale factors for
     every image row (pixel kernel is a documented stub — no codecs in
     this container). Pure columnar arithmetic, pushdown-friendly."""
-    # fan out before the Python decode (round-13): the pruned
-    # doc_id scan is 1-2 splits, so the whole per-row decode ran
-    # single-task (measured: mm_jpeg 13.8 s at sf1 = exactly its
-    # 0.27 ms/doc single-core cost). HEAVY preset: per-row Python
-    # decode is cryptographic-hash-class work per input byte.
-    d = fan_out(load_table(spark, sf_dir, "documents")
-                .select("doc_id"), HEAVY)
-    return MM.resize_plan(MM.attach_media(d), 32, 32)
+    return MM.resize_plan(MM.attach_media(_media_ids(spark, sf_dir)), 32, 32)
 
 
 @register(
@@ -153,14 +140,8 @@ def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     → one row per sampled frame with the frame bytes hex-encoded. The
     ``mapInPandas`` pass multiplies rows within partitions (UDTF shape,
     no shuffle) — the 100 TB path for frame extraction."""
-    # fan out before the Python decode (round-13): the pruned
-    # doc_id scan is 1-2 splits, so the whole per-row decode ran
-    # single-task (measured: mm_jpeg 13.8 s at sf1 = exactly its
-    # 0.27 ms/doc single-core cost). HEAVY preset: per-row Python
-    # decode is cryptographic-hash-class work per input byte.
-    d = fan_out(load_table(spark, sf_dir, "documents")
-                .select("doc_id"), HEAVY)
-    return MM.sample_frames(MM.attach_media(d), every=2)
+    return MM.sample_frames(MM.attach_media(_media_ids(spark, sf_dir)),
+                            every=2)
 
 
 @register(
@@ -207,7 +188,7 @@ def curate_multimodal_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars")
     feats = MM.media_features(MM.attach_media(
-        fan_out(d.select("doc_id"), HEAVY)))
+        fan_out(d.select("doc_id"))))
     kept = (
         d.join(feats, "doc_id")
         .where(F.col("mean_byte").between(100, 160)
@@ -275,14 +256,7 @@ def mm_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays the identical raster bytes from the md5 hex digests that
     generated them (the mm_byte_stats pattern) — so a header-parse or
     stride bug on the Spark side cannot hash-match."""
-    # fan out before the Python decode (round-13): the pruned
-    # doc_id scan is 1-2 splits, so the whole per-row decode ran
-    # single-task (measured: mm_jpeg 13.8 s at sf1 = exactly its
-    # 0.27 ms/doc single-core cost). HEAVY preset: per-row Python
-    # decode is cryptographic-hash-class work per input byte.
-    d = fan_out(load_table(spark, sf_dir, "documents")
-                .select("doc_id"), HEAVY)
-    return MM.pixel_stats(MM.attach_ppm(d))
+    return MM.pixel_stats(MM.attach_ppm(_media_ids(spark, sf_dir)))
 
 
 @register(
@@ -329,14 +303,7 @@ def mm_wav_sample_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     energy, the loudness-feature primitives, with zero float drift).
     The oracle rebuilds the sample stream byte-for-byte from the
     generating digests including the signed int16 reinterpretation."""
-    # fan out before the Python decode (round-13): the pruned
-    # doc_id scan is 1-2 splits, so the whole per-row decode ran
-    # single-task (measured: mm_jpeg 13.8 s at sf1 = exactly its
-    # 0.27 ms/doc single-core cost). HEAVY preset: per-row Python
-    # decode is cryptographic-hash-class work per input byte.
-    d = fan_out(load_table(spark, sf_dir, "documents")
-                .select("doc_id"), HEAVY)
-    return MM.wav_sample_stats(MM.attach_pcm_wav(d))
+    return MM.wav_sample_stats(MM.attach_pcm_wav(_media_ids(spark, sf_dir)))
 
 
 # PNG raster bytes: md5('pg:{doc_id}:{j}') digests truncated to w·h·3
@@ -389,14 +356,7 @@ def mm_png_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-match. With this, the multimodal payload caveat narrows to
     entropy-coded codecs only (JPEG/MP4). Arrow-batched mapInPandas
     end-to-end; the binary column never crosses a shuffle."""
-    # fan out before the Python decode (round-13): the pruned
-    # doc_id scan is 1-2 splits, so the whole per-row decode ran
-    # single-task (measured: mm_jpeg 13.8 s at sf1 = exactly its
-    # 0.27 ms/doc single-core cost). HEAVY preset: per-row Python
-    # decode is cryptographic-hash-class work per input byte.
-    d = fan_out(load_table(spark, sf_dir, "documents")
-                .select("doc_id"), HEAVY)
-    return MM.pixel_stats(MM.attach_png(d))
+    return MM.pixel_stats(MM.attach_png(_media_ids(spark, sf_dir)))
 
 
 # Baseline-JPEG fixtures (round-12 verdict #8): 128 digest bytes per
@@ -492,11 +452,4 @@ def mm_jpeg_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference analog: none — transformer.py has no media handling;
     this exceeds parity (SURVEY §2 multimodal family)."""
-    # fan out before the Python decode (round-13): the pruned
-    # doc_id scan is 1-2 splits, so the whole per-row decode ran
-    # single-task (measured: mm_jpeg 13.8 s at sf1 = exactly its
-    # 0.27 ms/doc single-core cost). HEAVY preset: per-row Python
-    # decode is cryptographic-hash-class work per input byte.
-    d = fan_out(load_table(spark, sf_dir, "documents")
-                .select("doc_id"), HEAVY)
-    return MM.jpeg_pixel_stats(MM.attach_jpeg(d))
+    return MM.jpeg_pixel_stats(MM.attach_jpeg(_media_ids(spark, sf_dir)))

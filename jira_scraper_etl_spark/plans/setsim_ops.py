@@ -25,7 +25,7 @@ from ..catalog import load_table
 from ..errors import RegimeRefused
 from ..functions import hashing as H
 from ..operators import dedup as OD
-from ..operators.fanout import HEAVY, LIGHT, fan_out
+from ..operators.fanout import fan_out
 from .llm_ops import SQL_SHINGLES, SQL_TOKS
 from .registry import register
 
@@ -143,7 +143,7 @@ def dedup_jaccard_prefix(spark: SparkSession, sf_dir: str,
     # shingling)
     docs = persist_seam(
         fan_out(d.select("doc_id", H.word_shingles(F.col("text"), 3)
-                         .alias("sh")), LIGHT)
+                         .alias("sh")))
         .select("doc_id",
                 F.transform("sh", lambda s: F.xxhash64(s)).alias("sh")))
     flat = docs.select("doc_id", F.explode("sh").alias("tok"))
@@ -370,22 +370,16 @@ def text_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     selected keys; the ~|text| gram stream never explodes through a
     shuffle). The fan_out seam matters here more than anywhere: the
     per-row work is ~|text| md5 calls, so a single-file scan whose row
-    groups land in one task serializes the whole corpus — measured at
-    the sf10 decade as a 13-of-14-tasks-idle straggler running ~10 min
-    while the balanced form takes seconds (round-3 finding 5, same fix
-    as dedup_span_exact). The rightmost-min tie-break folds into a
-    single lexicographic array_min over slice() windows via the key
-    encoding above (md5 hex ∥ zero-padded 10⁹−pos) — no struct
-    comparators, so the whole pass stays in whole-stage codegen.
+    groups land in one task serializes the whole corpus. The
+    rightmost-min tie-break folds into a single lexicographic array_min
+    over slice() windows via the key encoding above (md5 hex ∥
+    zero-padded 10⁹−pos) — no struct comparators, so the whole pass
+    stays in whole-stage codegen.
     Documents shorter than k + w − 1 chars emit nothing (below the
     guarantee threshold — the paper's contract, documented rather than
     padded)."""
-    # HEAVY preset: one md5 per character position is cryptographic-
-    # hash-per-token-class work (~5-10 s/MB single-core), so fan out
-    # beyond toy scale — measured 4.9 s single-task vs sub-second
-    # fanned at sf0.1's 0.6 MB corpus
     d = fan_out(load_table(spark, sf_dir, "documents")
-                .select("doc_id", "text"), HEAVY)
+                .select("doc_id", "text"))
     # (md5(gram) ∥ pad(POS_BASE − i)) per position; substring needs a
     # Column start index inside the lambda — F.expr keeps it terse
     keys = F.expr(
@@ -549,7 +543,7 @@ def text_winnow_fingerprints_fast(spark: SparkSession, sf_dir: str) -> DataFrame
     any shared substring of length ≥ w + k − 1 shares ≥ 1 selected
     fingerprint."""
     d = fan_out(load_table(spark, sf_dir, "documents")
-                .select("doc_id", "text"), HEAVY)
+                .select("doc_id", "text"))
     return winnow_fast_frame(d)
 
 
@@ -593,8 +587,7 @@ def ngram_count_of_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     any corpus size. r* is one integer product and one IEEE division —
     bit-identical cross-engine."""
     d = load_table(spark, sf_dir, "documents")
-    toks = (fan_out(d.select(H.word_tokens(F.col("text")).alias("toks")),
-                    LIGHT)
+    toks = (fan_out(d.select(H.word_tokens(F.col("text")).alias("toks")))
             .select(F.explode("toks").alias("tok")))
     tf = toks.groupBy("tok").agg(F.count(F.lit(1)).cast("long").alias("r"))
     spectrum = tf.groupBy("r").agg(
@@ -848,7 +841,6 @@ def text_heavy_hitters_mg(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sketches import mg_topk
 
     d = load_table(spark, sf_dir, "documents")
-    toks = (fan_out(d.select(H.word_tokens(F.col("text")).alias("toks")),
-                    LIGHT)
+    toks = (fan_out(d.select(H.word_tokens(F.col("text")).alias("toks")))
             .select(F.explode("toks").alias("tok")))
     return mg_topk(toks, "tok", k=64, topk=50)

@@ -30,7 +30,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..catalog import load_table
-from ..operators.fanout import LIGHT, fan_out
+from ..operators.fanout import fan_out
 from ..seams import persist_seam
 from .registry import register
 
@@ -396,14 +396,13 @@ def embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions import vectors as V
 
     e = load_table(spark, sf_dir, "embeddings")
-    # fan out + seam (round-13, the _km_train shape): the pruned scan
-    # is 1-2 splits, so the Gram partials and the projection each ran
-    # single-task AND re-evaluated the quantize pipeline; the seam
+    # fan out + seam (the _km_train shape): the pruned scan is 1-2
+    # splits, so the Gram partials and the projection would each run
+    # single-task AND re-evaluate the quantize pipeline; the seam
     # fills under the gram collect (materialize=False, no extra job)
     q = persist_seam(
         fan_out(e.select("vec_id",
-                         V.quantize(F.col("embedding")).alias("q")),
-                LIGHT),
+                         V.quantize(F.col("embedding")).alias("q"))),
         materialize=False)
     dim = len(e.select("embedding").head()[0])
     G = np.zeros((dim, dim), dtype=np.int64)
@@ -449,8 +448,7 @@ def embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fan out + seam — same rationale as embedding_pca_power above
     q = persist_seam(
         fan_out(e.select("vec_id",
-                         V.quantize(F.col("embedding")).alias("q")),
-                LIGHT),
+                         V.quantize(F.col("embedding")).alias("q"))),
         materialize=False)
     dim = len(e.select("embedding").head()[0])
     g_rows = [r.asDict() for r in gram_matrix(q).collect()]
@@ -670,8 +668,7 @@ def _km_train(spark: SparkSession, sf_dir: str,
     # rows buys 5 balanced cached passes.
     q = persist_seam(
         fan_out(e.select("vec_id",
-                         V.quantize(F.col("embedding")).alias("q")),
-                LIGHT),
+                         V.quantize(F.col("embedding")).alias("q"))),
         materialize=False)
     if k is None:
         k = derive_semdedup_k(q.count())

@@ -1,6 +1,5 @@
 """Regime tests for operators/fanout.fan_out — the conditional exchange
-that fixed the round-3 sf0.1 bench regression while keeping the sf1
-fan-out. Three regimes, each pinned:
+in front of interpreted per-row map stages. Three regimes, each pinned:
 
 * toy input  -> no exchange (single-task pass beats the shuffle)
 * mid-size narrow scan -> repartition to defaultParallelism
@@ -9,25 +8,26 @@ fan-out. Three regimes, each pinned:
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
 
-from jira_scraper_etl_spark.operators.fanout import HEAVY, LIGHT, fan_out
+from jira_scraper_etl_spark.operators.fanout import MIN_FAN_OUT_BYTES, fan_out
 
 
 def test_toy_input_skips_exchange(spark, sf_dir):
     d = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    assert fan_out(d, HEAVY).rdd.getNumPartitions() == d.rdd.getNumPartitions()
-    assert fan_out(d, LIGHT).rdd.getNumPartitions() == d.rdd.getNumPartitions()
+    assert fan_out(d).rdd.getNumPartitions() == d.rdd.getNumPartitions()
 
 
-def _mid_size_df(spark, tmp_path):
-    p = str(tmp_path / "mid.parquet")
-    # md5-derived text so the parquet is incompressible and the file
-    # lands solidly above the LIGHT (2 MiB) threshold
+def _mid_size_df(spark, tmp_path, n_rows=30000):
+    p = str(tmp_path / f"docs_{n_rows}.parquet")
+    # md5-derived text so the parquet is incompressible and its size
+    # scales with the row count (30000 rows: several MB)
     text = F.concat_ws(" ", *[
         F.md5(F.concat(F.col("id").cast("string"), F.lit(f":{i}")))
         for i in range(10)])
-    (spark.range(0, 30000)
+    (spark.range(0, n_rows)
      .select(F.col("id").alias("doc_id"), text.alias("text"))
      .coalesce(1).write.mode("overwrite").parquet(p))
     return spark.read.parquet(p).select("doc_id", "text")
@@ -37,8 +37,18 @@ def test_mid_size_narrow_scan_fans_out(spark, tmp_path):
     d = _mid_size_df(spark, tmp_path)
     par = spark.sparkContext.defaultParallelism
     assert d.rdd.getNumPartitions() < par  # single-file narrow scan
-    assert fan_out(d, HEAVY).rdd.getNumPartitions() == par
-    assert fan_out(d, LIGHT).rdd.getNumPartitions() == par
+    assert fan_out(d).rdd.getNumPartitions() == par
+
+
+def test_token_projection_sized_scan_fans_out(spark, tmp_path):
+    # ~200 KB, the size of the sf0.1 token projections: above the
+    # 64 KiB floor, so it fans out like any larger narrow scan
+    d = _mid_size_df(spark, tmp_path, n_rows=1200)
+    (path,) = d.inputFiles()
+    size = os.path.getsize(path.removeprefix("file://"))
+    assert 4 * MIN_FAN_OUT_BYTES < size < 400 * 1024
+    assert fan_out(d).rdd.getNumPartitions() == \
+        spark.sparkContext.defaultParallelism
 
 
 def test_wide_scan_skips_exchange(spark, tmp_path):
@@ -48,7 +58,7 @@ def test_wide_scan_skips_exchange(spark, tmp_path):
     old = spark.conf.get("spark.sql.files.maxPartitionBytes")
     try:
         spark.conf.set("spark.sql.files.maxPartitionBytes", "65536b")
-        out = fan_out(d, HEAVY)
+        out = fan_out(d)
         # same DataFrame object back - no Repartition node added
         assert "Repartition" not in out._jdf.queryExecution() \
             .optimizedPlan().toString()
@@ -58,4 +68,4 @@ def test_wide_scan_skips_exchange(spark, tmp_path):
 
 def test_fan_out_preserves_rows(spark, tmp_path):
     d = _mid_size_df(spark, tmp_path)
-    assert fan_out(d, HEAVY).count() == d.count()
+    assert fan_out(d).count() == d.count()

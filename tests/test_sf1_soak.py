@@ -574,11 +574,11 @@ def test_cluster_canonical_sampled_bfs_equality(spark):
     from collections import deque
 
     from jira_scraper_etl_spark.operators import dedup as D
-    from jira_scraper_etl_spark.operators.fanout import HEAVY, fan_out
+    from jira_scraper_etl_spark.operators.fanout import fan_out
 
     d = spark.read.parquet(f"{SF1}/documents.parquet")
     fp = D.simhash_fingerprints(
-        fan_out(d.select("doc_id", "text"), HEAVY)).localCheckpoint()
+        fan_out(d.select("doc_id", "text"))).localCheckpoint()
     nodes = {r.simhash: (r.fp_min, r.n_docs) for r in
              fp.groupBy("simhash")
              .agg(F.min("doc_id").alias("fp_min"),

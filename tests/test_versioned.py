@@ -60,6 +60,27 @@ def test_write_version_runs_one_job(spark, tmp_path, count_jobs):
     assert V.load_manifest(d, 0)["n_rows"] == 10
 
 
+def test_warm_reads_start_no_job(spark, table, count_jobs):
+    """Reads take the schema the manifest stores: no footer-inference
+    job, and the same columns, types and nullability as an inferred
+    read of the same files."""
+    d, base = table
+    for k in range(3):
+        # a non-nullable literal column: the stored schema says
+        # nullable=false, the inferred read says true
+        V.write_version(base.where(f"c_custkey % 3 = {k}")
+                        .withColumn("part", F.lit(k)), d)
+    V.read_table(spark, d), V.read_version(spark, d, 1)  # warm-up
+    assert count_jobs(lambda: V.read_table(spark, d)) == 0
+    assert count_jobs(lambda: V.read_version(spark, d)) == 0
+    assert count_jobs(lambda: V.read_version(spark, d, 1)) == 0
+    files = [os.path.join(d, f"v={v}", "data", f)
+             for v in V.committed_versions(d)
+             for f in V.load_manifest(d, v)["files"]]
+    assert V.read_table(spark, d).schema == spark.read.parquet(*files).schema
+    assert V.read_table(spark, d).drop("part").exceptAll(base).count() == 0
+
+
 def test_uncommitted_version_is_invisible(spark, table):
     d, base = table
     V.write_version(base, d)
