@@ -250,10 +250,10 @@ def churn_normalized_ratios(current: dict[str, float],
     }
 
 
-# Drain-pause seconds per gc() call; scaled to the scale factor by
-# select_gc_pause below (the ContextCleaner debt a query leaves behind
-# grows with data size), overridable for experiments.
-GC_PAUSE = float(os.environ.get("SPARK_GRAFT_GC_PAUSE", "1.0"))
+# Drain-pause seconds per gc() call; main() scales it to the scale
+# factor with select_gc_pause below (the ContextCleaner debt a query
+# leaves behind grows with data size).
+GC_PAUSE = 1.0
 
 
 def select_gc_pause(sf: str) -> float:
@@ -265,9 +265,7 @@ def select_gc_pause(sf: str) -> float:
     bpe 1.85 s). At sf0.001 the per-query debt is tiny (the suite ran
     clean there in every round BEFORE gc_quiesce existed), so the
     contract test's 49-query run keeps the short pause and stays well
-    inside its 420 s budget. $SPARK_GRAFT_GC_PAUSE overrides both."""
-    if "SPARK_GRAFT_GC_PAUSE" in os.environ:
-        return GC_PAUSE
+    inside its 420 s budget."""
     try:
         return 1.0 if float(sf) >= 0.01 else 0.25
     except ValueError:
@@ -308,7 +306,7 @@ def gc_quiesce(spark, pause: float | None = None) -> None:
 
 
 def run_suite(spark, sf_dir: str, headline: list[str],
-              clear_seams: bool = True, runs: int = 3) -> tuple[dict, dict]:
+              runs: int = 3) -> tuple[dict, dict]:
     """Measure each headline query (median-of-``runs``, default 3:
     single measurements swing ~30% run-to-run on a shared machine —
     BENCH_r02→r03 showed a 1.45× driver-to-driver swing on unchanged
@@ -363,15 +361,11 @@ def run_suite(spark, sf_dir: str, headline: list[str],
         # (minhash shingles, RP keys, …) accumulate three copies per
         # query plus one per warm run (ADVICE r8) — drop them before
         # the next query so a 39-query suite doesn't hoard memory.
-        # clear_seams=False exists for the noise-floor protocol
-        # (BASELINE.md): one run with accumulation priced the
-        # methodology change in isolation.
-        if clear_seams:
-            release_seams()
-            # measurement isolation (round-13): reclaim this query's
-            # shuffle/broadcast garbage NOW, between timed regions, so
-            # the next query's jobs don't pay for it (see gc_quiesce).
-            gc_quiesce(spark)
+        release_seams()
+        # measurement isolation (round-13): reclaim this query's
+        # shuffle/broadcast garbage NOW, between timed regions, so the
+        # next query's jobs don't pay for it (see gc_quiesce).
+        gc_quiesce(spark)
     return timings, refused
 
 

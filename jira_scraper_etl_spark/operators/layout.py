@@ -67,10 +67,10 @@ def zorder_write(df: DataFrame, x: Column, y: Column, path: str,
     Each dimension is first min-max scaled onto the full bit budget
     (see scale_to_bits — unscaled dims of unequal spans degenerate to
     a plain sort on the wider one), with the global min/max arriving
-    as a 1-row broadcast, not a driver collect. Then one
-    repartitionByRange exchange on the interleaved code (Spark samples
-    the code distribution, so files stay row-balanced under skew) + a
-    partition-local sort so row groups within each file are
+    as a 1-row join (Catalyst broadcasts it), not a driver collect.
+    Then one repartitionByRange exchange on the interleaved code (Spark
+    samples the code distribution, so files stay row-balanced under
+    skew) + a partition-local sort so row groups within each file are
     curve-ordered too (row-group-level stats pruning inside files).
     No global sort; at warehouse scale the min/max row comes free from
     table-level column stats."""
@@ -79,7 +79,7 @@ def zorder_write(df: DataFrame, x: Column, y: Column, path: str,
                   F.min("_zy").alias("_ylo"), F.max("_zy").alias("_yhi"))
     sx = scale_to_bits(F.col("_zx"), F.col("_xlo"), F.col("_xhi"), bits)
     sy = scale_to_bits(F.col("_zy"), F.col("_ylo"), F.col("_yhi"), bits)
-    (d.join(F.broadcast(stats))
+    (d.join(stats)
        .withColumn("_z", morton_interleave(sx, sy, bits))
        .repartitionByRange(n_files, "_z")
        .sortWithinPartitions("_z")

@@ -110,7 +110,7 @@ def mg_topk(tokens: DataFrame, col: str = "tok", k: int = 64,
     err = (partials.groupBy("pid").agg(F.first("d").alias("d"))
            .agg(F.coalesce(F.sum("d"), F.lit(0)).alias("E")))
     return (
-        merged.join(F.broadcast(err))
+        merged.join(err)
         .select(
             "tok", "lb", (F.col("lb") + F.col("E")).alias("ub"),
             (F.col("lb") > F.col("E")).alias("guaranteed"))

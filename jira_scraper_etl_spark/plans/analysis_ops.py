@@ -76,11 +76,11 @@ def text_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     token-keyed stage; the persisted tf seam feeds both the document-
     frequency aggregation and the scoring join (Catalyst won't reuse
     the exchange across the two subtrees). The corpus size N arrives as
-    a 1-row broadcast — no driver-side collect. The final per-language
-    ranking windows over post-aggregation (lang, tok) rows; in a
-    billion-token-vocabulary regime the window input would first be
-    pruned with a per-partition top-k pre-pass, which composes on top
-    of this plan without changing results.
+    a 1-row join, which Catalyst broadcasts — no driver-side collect.
+    The final per-language ranking windows over post-aggregation (lang,
+    tok) rows; in a billion-token-vocabulary regime the window input
+    would first be pruned with a per-partition top-k pre-pass, which
+    composes on top of this plan without changing results.
     """
     d = load_table(spark, sf_dir, "documents")
     toks = H.word_tokens(F.col("text"))
@@ -89,13 +89,13 @@ def text_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf = persist_seam(t.groupBy("doc_id", "lang", "tok")
                       .agg(F.count(F.lit(1)).alias("tf")))
     df = tf.groupBy("tok").agg(F.count(F.lit(1)).cast("long").alias("df"))
-    n = d.groupBy().agg(F.count(F.lit(1)).alias("n_docs"))  # 1-row broadcast
+    n = d.groupBy().agg(F.count(F.lit(1)).alias("n_docs"))
     scored = (
         tf.join(df, "tok")
         .groupBy("lang", "tok")
         .agg(F.first("df").alias("df"),
              F.sum("tf").cast("long").alias("sum_tf"))
-        .join(F.broadcast(n))
+        .join(n)
         .withColumn("score",
                     (F.col("sum_tf") * F.col("n_docs")).cast("double")
                     / F.col("df"))
@@ -666,9 +666,9 @@ def events_zorder_code(spark: SparkSession, sf_dir: str) -> DataFrame:
     1024-file layout would use; the writer range-partitions on the
     full code instead so file sizes stay balanced under skew.
 
-    One 1-row stats broadcast + a map-only 32-term shift/mask/or
-    expression per row, fully inside whole-stage codegen; no shuffle
-    of the fact table, no UDF. Exact integer arithmetic on both
+    One 1-row stats join (Catalyst broadcasts it) + a map-only 32-term
+    shift/mask/or expression per row, fully inside whole-stage codegen;
+    no shuffle of the fact table, no UDF. Exact integer arithmetic on both
     engines (integral `div`; see operators/layout.py::scale_to_bits).
     """
     from ..operators.layout import morton_interleave, scale_to_bits
@@ -684,7 +684,7 @@ def events_zorder_code(spark: SparkSession, sf_dir: str) -> DataFrame:
     zx = scale_to_bits(F.col("x"), F.col("xlo"), F.col("xhi"))
     zy = scale_to_bits(F.col("y"), F.col("ylo"), F.col("yhi"))
     return (
-        d.join(F.broadcast(st))
+        d.join(st)
         .select("event_id", zx.alias("zx"), zy.alias("zy"))
         .withColumn("z", morton_interleave(F.col("zx"), F.col("zy")))
         .withColumn("file_bucket", F.shiftright(F.col("z"), 22))
@@ -762,7 +762,7 @@ def mm_dedup_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("cluster_size"),
     )
     return (
-        sig.join(F.broadcast(clusters), "phash")
+        sig.join(F.broadcast(clusters), "phash")  # ≤768 rows, estimated as scan
         .select("doc_id", "phash", "canonical_id", "cluster_size",
                 (F.col("doc_id") != F.col("canonical_id")).alias("is_dup"))
     )
@@ -957,7 +957,7 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale where even the aggregate outgrows a partition, swap the
     ranks for approx_percentile boundary scoring — the winsorize
     ``_approx``-twin pattern, clamp unchanged). The corpus max date is
-    a 1-row broadcast (tiny-build, the text_tfidf doc-count pattern);
+    a 1-row join (tiny-build, the text_tfidf doc-count pattern);
     recency/frequency/scores are all integers and monetary stays exact
     DECIMAL until the final double cast, so the output hashes
     identically cross-engine."""
@@ -967,7 +967,7 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
                F.count(F.lit(1)).alias("frequency"),
                F.sum(money("o_totalprice")).alias("monetary_dec")))
     mx = o.agg(F.max(F.col("o_orderdate").cast("date")).alias("mx"))
-    base = (pc.join(F.broadcast(mx))
+    base = (pc.join(mx)
             .select("c_custkey",
                     F.datediff("mx", "last_order").alias("recency_days"),
                     "frequency", "monetary_dec"))

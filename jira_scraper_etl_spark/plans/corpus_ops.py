@@ -472,7 +472,7 @@ def text_bigram_assoc(spark: SparkSession, sf_dir: str) -> DataFrame:
     lift = ((F.col("cab").cast("double") * F.col("n").cast("double"))
             / (F.col("ca").cast("double") * F.col("cb").cast("double")))
     return (bgc.join(ua, "a").join(ub, "b")
-            .crossJoin(F.broadcast(tot))
+            .crossJoin(tot)
             .select("a", "b", "cab", lift.alias("lift"))
             .orderBy(F.desc("lift"), "a", "b").limit(50))
 

@@ -338,7 +338,7 @@ def decontaminate_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
             / (F.sqrt(F.col("n2").cast("double"))
                * F.sqrt(ev.n2.cast("double")))),
     )
-    return (corpus.crossJoin(F.broadcast(evals))
+    return (corpus.crossJoin(evals)
             .select("vec_id", max_cos.alias("max_cos_eval"))
             .withColumn("is_contaminated", F.col("max_cos_eval") >= 0.8))
 
@@ -581,7 +581,7 @@ def sample_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
                 lambda s: s.w),
             F.lit(0.0), lambda acc, x: acc + x,
         ).alias("total"))
-    return (per.crossJoin(F.broadcast(total))
+    return (per.crossJoin(total)
             .select("source", "n_docs", "n_tokens", weight.alias("weight"),
                     (weight / F.col("total")).alias("share")))
 
@@ -863,7 +863,7 @@ def curate_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
                     f"div (s + 1)"),
              F.lit(DSIR_WCAP).cast("long")).alias("wt")))
     scored = (toks.where(~F.col("is_target"))
-              .join(F.broadcast(w), "b")
+              .join(F.broadcast(w), "b")  # DSIR_BUCKETS rows, estimated as toks
               .groupBy("doc_id")
               .agg(F.count(F.lit(1)).alias("n_tokens"),
                    F.sum("wt").alias("dsir_score")))

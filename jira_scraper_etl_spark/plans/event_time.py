@@ -210,11 +210,9 @@ def events_hourly_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     hours).
 
     The spine is generated from a 1-row bounds aggregate via sequence +
-    explode — a few thousand rows per year, so it BROADCASTS into the
-    left join against the keyed hourly counts; no shuffle is added over
-    the plain aggregation. (Broadcasting the spine, not the counts,
-    is what survives scale: counts grow with data, the calendar
-    doesn't.)
+    explode — a few thousand rows per year. A LEFT join can only build
+    its right side, so the hourly counts broadcast while they measure
+    under the threshold, and the join sort-merges above it.
     """
     e = load_events(spark, sf_dir)
     bounds = e.agg(
@@ -224,7 +222,7 @@ def events_hourly_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lo", "hi", F.expr("INTERVAL 1 HOUR"))).alias("hour"))
     counts = (e.groupBy(F.date_trunc("hour", "ts").alias("hour"))
               .agg(F.count(F.lit(1)).alias("n")))
-    return (F.broadcast(spine).join(counts, "hour", "left")
+    return (spine.join(counts, "hour", "left")
             .select("hour", F.coalesce("n", F.lit(0)).alias("n")))
 
 

@@ -1392,6 +1392,7 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str,
         # int columns in columnar batches — 926k edges in ~0.2s at the
         # sf1 soak vs ~2.8s as Row objects
         pairs_pdf = fp_pairs.toPandas()
+        # a Python list: Catalyst can't size it
         labels = F.broadcast(_cc_union_find(
             spark, member_rows,
             zip(pairs_pdf["fa"].to_numpy(), pairs_pdf["fb"].to_numpy())))

@@ -6,8 +6,8 @@ TPC-H-ish star schema — these plans cover SURVEY.md §2.3 J2–J4, §2.4
 A1–A6, §2.5 windows, §2.6 sorts/limits and §2.7 set ops with idiomatic,
 shuffle-conscious Spark:
 
-* dimension tables (region/nation, derived buckets) are broadcast —
-  no shuffle for the dim side at any scale factor;
+* join sides follow the broadcast rule in ``session.py``: region and
+  nation broadcast at any scale factor, SF-linear tables under 32 MB;
 * aggregations are plain ``groupBy`` so Catalyst plans partial (map-side)
   + final hash aggregation;
 * top-k is ``orderBy().limit(k)`` which Spark plans as
@@ -248,15 +248,12 @@ def agg_approx_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("join",),
 )
 def join_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J2 multi-way equi join: fact ⋈ dims, broadcasting only true dims.
+    """J2 multi-way equi join: fact ⋈ dims, with no join hints.
 
-    nation (25 rows) and region (5 rows) are constant-size regardless of
-    scale factor, so they are explicitly broadcast. customer grows
-    linearly with SF (~SF·150k rows — GBs at SF100), so it must NOT be
-    force-broadcast: at 100 TB a forced broadcast OOMs the executors.
-    The orders⋈customer side is left to AQE, which picks broadcast when
-    customer measures under the threshold and sort-merge otherwise —
-    exactly the adaptive behavior a 1000-executor cluster needs.
+    nation (25 rows) and region (5 rows) broadcast from their file
+    statistics at any SF. customer grows linearly with SF (~SF·150k
+    rows — GBs at SF100), so AQE broadcasts it under the threshold and
+    sort-merges above it; a forced broadcast OOMs at 100 TB.
     """
     o = load_table(spark, sf_dir, "orders").where(F.col("o_orderstatus") == "F")
     c = load_table(spark, sf_dir, "customer")
@@ -264,8 +261,8 @@ def join_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = load_table(spark, sf_dir, "region")
     return (
         o.join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+        .join(n, c.c_nationkey == n.n_nationkey)
+        .join(r, n.n_regionkey == r.r_regionkey)
         .groupBy(n.n_name.alias("nation"), r.r_name.alias("region"))
         .agg(dsum("o_totalprice", "rev"), F.count(F.lit(1)).alias("n_orders"))
     )
@@ -388,7 +385,7 @@ def join_range_price_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
         "band string, lo double, hi double",
     )
     return (
-        o.join(F.broadcast(bands),
+        o.join(F.broadcast(bands),  # a Python list: Catalyst can't size it
                (o.o_totalprice >= bands.lo) & (o.o_totalprice < bands.hi))
         .groupBy("band")
         .agg(F.count(F.lit(1)).alias("n"), dsum("o_totalprice", "rev"))
@@ -453,7 +450,7 @@ def window_top3_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFra
     c = load_table(spark, sf_dir, "customer")
     w = Window.partitionBy("c_custkey").orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
     return (
-        o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
+        o.join(c, o.o_custkey == c.c_custkey)
         .select("c_custkey", "o_orderkey", "o_totalprice")
         .withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") <= 3)
@@ -741,7 +738,7 @@ def agg_listagg_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate row is what makes the result reproducible (and equal to
     DuckDB's ``STRING_AGG(... ORDER BY ...)``; both compare strings as
     binary ASCII here). Scale shape: the filter prunes to the rare
-    tail BEFORE the shuffle, the nation dim is a broadcast, and the
+    tail BEFORE the shuffle, the nation dim broadcasts unhinted, and the
     per-group list is bounded by the filter's selectivity — an
     ordered-set aggregate over an unfiltered 100 TB column would
     instead go through the sort-based spill path (collect_list spills;
@@ -749,7 +746,7 @@ def agg_listagg_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer").where(F.col("c_acctbal") > 9900)
     n = load_table(spark, sf_dir, "nation")
     return (
-        c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+        c.join(n, c.c_nationkey == n.n_nationkey)
         .groupBy("n_name")
         .agg(F.count(F.lit(1)).alias("n_rich"),
              F.array_join(F.array_sort(F.collect_list("c_name")), ",")

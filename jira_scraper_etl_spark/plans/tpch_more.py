@@ -147,8 +147,8 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(s, F.col("s_suppkey") == F.col("l_suppkey"))
         .join(o, F.col("o_orderkey") == F.col("l_orderkey"))
         .join(c, F.col("c_custkey") == F.col("o_custkey"))
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("n1.n_nationkey"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("n2.n_nationkey"))
+        .join(n1, F.col("s_nationkey") == F.col("n1.n_nationkey"))
+        .join(n2, F.col("c_nationkey") == F.col("n2.n_nationkey"))
         .where(
             ((F.col("n1.n_name") == pair[0]) & (F.col("n2.n_name") == pair[1]))
             | ((F.col("n1.n_name") == pair[1]) & (F.col("n2.n_name") == pair[0])))
@@ -368,7 +368,7 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(li.where(F.col("l_returnflag") == "R"),
               F.col("l_orderkey") == F.col("o_orderkey"))
         .join(c, F.col("c_custkey") == F.col("o_custkey"))
-        .join(F.broadcast(n), F.col("c_nationkey") == F.col("n_nationkey"))
+        .join(n, F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy("c_custkey", "c_name", "c_acctbal",
                  F.col("n_name").alias("nation"))
         .agg(F.sum(money("l_extendedprice") * one_minus_rate("l_discount"))
@@ -544,11 +544,11 @@ def q14_promotion_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix).
 
     Plan at 100 TB: the month pushes to the lineitem scan (~1/84 of
-    the fact); part broadcasts (dim-sized at any SF) carrying only
-    (p_partkey, p_type). Both sums are exact decimal with a typed
-    decimal-zero ELSE; the final ``100.0 * a / b`` is the identical
-    two-op IEEE sequence in both engines (left-associative), so the
-    single output double is bit-identical."""
+    the fact); part grows with SF, so AQE, not a hint, decides whether
+    its (p_partkey, p_type) projection broadcasts. Both sums are exact
+    decimal with a typed decimal-zero ELSE; the final ``100.0 * a / b``
+    is the identical two-op IEEE sequence in both engines
+    (left-associative), so the single output double is bit-identical."""
     li = load_table(spark, sf_dir, "lineitem")
     p = load_table(spark, sf_dir, "part")
     vol = money("l_extendedprice") * one_minus_rate("l_discount")
@@ -558,7 +558,7 @@ def q14_promotion_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.where(
             (F.col("l_shipdate") >= F.lit("1996-09-01").cast("timestamp_ntz"))
             & (F.col("l_shipdate") < F.lit("1996-10-01").cast("timestamp_ntz")))
-        .join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
+        .join(p, F.col("l_partkey") == F.col("p_partkey"))
         .agg((F.lit(100.0) * F.sum(promo).cast("double")
               / F.sum(vol).cast("double")).alias("promo_revenue"))
     )
@@ -595,13 +595,13 @@ def q16_part_supplier_relation(spark: SparkSession, sf_dir: str) -> DataFrame:
     a NOT IN anti join + COUNT(DISTINCT) over a triple group-by.
 
     Plan at 100 TB: the brand/type/size predicates push to the part
-    scan (~1/6 of parts survive the size IN-list alone) and the
-    reduced part dim broadcasts; NOT IN over the non-null supplier key
-    plans as a broadcast LEFT ANTI join (the null-aware case never
-    degrades to a nested loop here because s_suppkey is a key). The
-    distinct-count is two map-side-combined hash aggregates — first
-    (brand, type, size, suppkey) dedup, then the count — never a
-    global expand."""
+    scan (~1/6 of parts survive the size IN-list alone); part and the
+    bad suppliers grow with SF, so AQE, not a hint, picks their joins.
+    NOT IN over the non-null supplier key plans as a LEFT ANTI join (the
+    null-aware case never degrades to a nested loop here because
+    s_suppkey is a key). The distinct-count is two map-side-combined
+    hash aggregates — first (brand, type, size, suppkey) dedup, then
+    the count — never a global expand."""
     li = load_table(spark, sf_dir, "lineitem")
     p = load_table(spark, sf_dir, "part").where(
         (F.col("p_brand") != "Brand#13") & (F.col("p_type") != "PROMO")
@@ -609,9 +609,8 @@ def q16_part_supplier_relation(spark: SparkSession, sf_dir: str) -> DataFrame:
     bad = load_table(spark, sf_dir, "supplier").where(
         F.col("s_acctbal") < 0).select("s_suppkey")
     return (
-        li.join(F.broadcast(bad), F.col("l_suppkey") == F.col("s_suppkey"),
-                "left_anti")
-        .join(F.broadcast(p), F.col("p_partkey") == F.col("l_partkey"))
+        li.join(bad, F.col("l_suppkey") == F.col("s_suppkey"), "left_anti")
+        .join(p, F.col("p_partkey") == F.col("l_partkey"))
         .groupBy("p_brand", "p_type", "p_size")
         .agg(F.count_distinct(F.col("l_suppkey")).cast("long")
              .alias("supplier_cnt"))

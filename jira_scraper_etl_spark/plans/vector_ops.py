@@ -90,7 +90,7 @@ def encoded_vectors(spark: SparkSession, sf_dir: str,
             F.floor((x.cast("double") - mn(i)) / (mx(i) - mn(i)) * 255)
         ).cast("int"),
     )
-    out = e.crossJoin(F.broadcast(cal))
+    out = e.crossJoin(cal)
     if with_cal:
         return out.select("vec_id", codes.alias("codes"), "mins", "maxs")
     return out.select("vec_id", codes.alias("codes"))

@@ -621,7 +621,7 @@ def dq_referential_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
                .agg(F.count(F.lit(1)).cast("long").alias("n_orphan_rows"),
                     F.countDistinct("k").cast("long").alias("n_orphan_keys"),
                     F.min("k").alias("sample_orphan_key"))
-               .join(F.broadcast(n_child))
+               .join(n_child)
                .select(F.lit(name).alias("fk"), "n_child_rows",
                        "n_orphan_rows", "n_orphan_keys",
                        "sample_orphan_key"))
@@ -786,9 +786,8 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation to 5 rows BEFORE anything joins — nation⨝region broadcast
     as constant-size dims, so customer and supplier are each reduced
     by the nation semi-condition early. The two SF-linear sides
-    (customer, supplier) are NOT force-broadcast (the
-    join_revenue_by_nation rule: AQE picks broadcast under threshold,
-    sort-merge above). The same-nation constraint rides the supplier
+    (customer, supplier) are left to AQE (the broadcast rule in
+    ``session.py``). The same-nation constraint rides the supplier
     join as a residual equality, never a post-join filter over a wider
     product. Revenue is the exact-decimal chain (registry rules) cast
     to double only at the end."""
@@ -800,8 +799,8 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = load_table(spark, sf_dir, "supplier")
     n = load_table(spark, sf_dir, "nation")
     r = load_table(spark, sf_dir, "region")
-    # constant-size dims, pre-joined and broadcast: 5 Asian nations
-    dims = (n.join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+    # constant-size dims, pre-joined: 5 Asian nations
+    dims = (n.join(r, n.n_regionkey == r.r_regionkey)
             .where(F.col("r_name") == "ASIA")
             .select("n_nationkey", "n_name"))
     lo = F.lit("1996-01-01").cast("timestamp_ntz")
@@ -812,7 +811,7 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(li, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(s, (F.col("l_suppkey") == F.col("s_suppkey"))
               & (F.col("c_nationkey") == F.col("s_nationkey")))
-        .join(F.broadcast(dims), F.col("s_nationkey") == F.col("n_nationkey"))
+        .join(dims, F.col("s_nationkey") == F.col("n_nationkey"))
         .groupBy(F.col("n_name").alias("nation"))
         .agg(F.sum(money("l_extendedprice") * one_minus_rate("l_discount"))
              .cast("double").alias("revenue"),
@@ -1200,7 +1199,7 @@ def orders_basket_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     pb = F.broadcast(per.select(F.col("brand").alias("brand_b"),
                                 F.col("n_b").alias("n_b")))
     return (
-        co.join(pa, "brand_a").join(pb, "brand_b").join(F.broadcast(n))
+        co.join(pa, "brand_a").join(pb, "brand_b").join(n)
         .select("brand_a", "brand_b", "n_co", "n_a", "n_b",
                 (F.col("n_co").cast("double") / F.col("n_orders"))
                 .alias("support"),

@@ -28,14 +28,17 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # 32 MB: dims (region/nation/supplier/part/customer at bench SFs)
-    # all broadcast comfortably, but the 64 MB setting this replaced
-    # let a 15M-row FACT projection (orders at the sf10 decade, ~40 MB
-    # estimated after column pruning) build a driver-side hash
-    # relation — measured q9 9.5 s vs 5.6 s once orders fell back to
-    # the orderkey SMJ (round-12). Broadcast is for dimensions; facts
-    # ride the shuffle. Runtime-settable, so externally built sessions
-    # (the correctness driver) get the same join planning.
+    # 32 MB: dims broadcast comfortably at bench SFs, while a 15M-row
+    # FACT projection (orders at the sf10 decade, ~40 MB estimated)
+    # rides the shuffle: the 64 MB setting this replaced built it as a
+    # hash relation, q9 9.5 s vs 5.6 s with the SMJ (round-12).
+    # The broadcast rule: this threshold and AQE choose join sides.
+    # Catalyst sizes scans from file statistics and an aggregate with
+    # no grouping keys at one row. Hint ``F.broadcast`` only on a side
+    # small at every scale whose size Catalyst cannot see: a
+    # createDataFrame over a Python list (Long.MaxValue) or a grouped
+    # aggregate over a bounded key space (sized from its input). Never
+    # hint a table that grows with the data: at 100 TB it OOMs.
     "spark.sql.autoBroadcastJoinThreshold": str(32 * 1024 * 1024),
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Arrow for pandas UDFs / toPandas — the only sane Python<->JVM path.

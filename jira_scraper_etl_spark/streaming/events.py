@@ -136,16 +136,16 @@ def enriched_segment_counts(events: DataFrame, dim: DataFrame,
                             watermark: str = "2 hours") -> DataFrame:
     """STREAM-STATIC join + windowed aggregation — the streaming twin
     of events_enriched_segment_hourly (plans/event_time.py): the event
-    stream enriches against a static customer dimension (broadcast per
-    micro-batch; stateless — the engine keeps no join state because the
-    static side is re-readable), then the watermarked tumbling
-    aggregation rolls up per (segment, hour). This is the remaining
-    Structured Streaming join class next to the stream-stream
-    attribution join: dimension enrichment, the shape every production
-    event pipeline runs against its profile store."""
+    stream enriches against a static customer dimension (stateless —
+    the engine keeps no join state because the static side is
+    re-readable; it broadcasts while under the threshold), then the
+    watermarked tumbling aggregation rolls up per (segment, hour). This
+    is the remaining Structured Streaming join class next to the
+    stream-stream attribution join: dimension enrichment, the shape
+    every production event pipeline runs against its profile store."""
     from ..plans.registry import dsum
 
-    d = F.broadcast(dim.select("c_custkey", "c_mktsegment"))
+    d = dim.select("c_custkey", "c_mktsegment")
     joined = events.join(d, events.user_id == d.c_custkey)
     return (
         joined.withColumn("ts", F.col("ts").cast("timestamp"))

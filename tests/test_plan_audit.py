@@ -56,6 +56,31 @@ def test_audit_one_counts_and_releases_seams(spark):
     assert PA.check_features("synthetic_plain", plain) == ([], [])
 
 
+def test_audit_one_counts_a_seam_read_twice_once(spark, sf_dir):
+    """The executed-plan string prints a persisted seam's cached plan
+    under every read of it; the audit counts that subtree once, so a
+    second read adds no exchanges or scans that never ran."""
+    import pyspark.sql.functions as F
+
+    from jira_scraper_etl_spark.seams import persist_seam
+
+    def seam(s):
+        return persist_seam(
+            s.range(100).groupBy((F.col("id") % 7).alias("k")).count())
+
+    def read_twice(s, d):
+        t = seam(s)
+        return t.unionByName(t)
+
+    once = PA.audit_one(spark, "synthetic_once", lambda s, d: seam(s),
+                        sf_dir)
+    twice = PA.audit_one(spark, "synthetic_twice", read_twice, sf_dir)
+    assert once["exchanges"] == 1
+    assert twice["exchanges"] == once["exchanges"]
+    assert twice["scans"] == once["scans"]
+    assert twice["seams"] == once["seams"] == 1
+
+
 def test_unwaived_nested_loop_is_a_violation():
     feats = {"nested_loop": 1, "py_eval": 0}
     flags, violations = PA.check_features("not_on_any_list", feats)

@@ -7,7 +7,8 @@ The counts read the returned frame's plan. An entry that fills a
 ``persist_seam`` or ``checkpoint_seam`` inside ``fn()`` ran part of its
 work before that plan, as separate jobs; its ``seams`` column is > 0
 and its row is flagged PARTIAL (the shuffles before the seams are not
-counted).
+counted). A persisted seam's cached plan counts once, however many
+times the returned plan reads it.
 
 Usage: python tools/plan_audit.py [sf_dir] [out_md]
 Writes PLANS.md (default) — a committed snapshot reviewers can diff:
@@ -86,6 +87,46 @@ ALLOWED_HOF_SCAN_FILTER = {
 }
 
 
+def _depth(line: str) -> int:
+    """Indentation of a plan-tree line: where its node name starts."""
+    m = re.search(r"[A-Za-z*]", line)
+    return m.start() if m else 0
+
+
+def _dedup_cached(plan: str) -> str:
+    """``plan`` with each cached subtree kept once. The executed-plan
+    string prints a persisted seam's cached plan under every
+    ``InMemoryRelation`` that reads it, so without this a seam read N
+    times adds its exchanges and scans N times, though they ran once.
+    A repeat keeps its ``InMemoryRelation`` line and loses the subtree
+    below it; two subtrees are the same when their text, read relative
+    to the node, is. A cached plan has already run, so its adaptive
+    plan prints a ``Final Plan`` and the ``Initial Plan`` it replaced;
+    only the final one is kept."""
+    lines = plan.splitlines()
+    out, seen, i = [], set(), 0
+    while i < len(lines):
+        line = lines[i]
+        i += 1
+        if "== Initial Plan ==" in line:
+            col = line.index("+-")
+            while i < len(lines) and _depth(lines[i]) > col:
+                i += 1
+            continue
+        out.append(line)
+        if "InMemoryRelation" not in line:
+            continue
+        d = _depth(line)
+        end = i
+        while end < len(lines) and _depth(lines[end]) > d:
+            end += 1
+        body = "\n".join(sub[d:] for sub in lines[i:end])
+        if body in seen:
+            i = end
+        seen.add(body)
+    return "\n".join(out)
+
+
 def _hof_scan_filters(plan: str) -> int:
     """Count scans whose DataFilters embed a higher-order-function
     expression — the round-8 winnowing straggler class: filtering on a
@@ -122,18 +163,14 @@ def _session_pushdown_filters(plan: str) -> int:
     (``… + N minutes … <``). Plain pre-aggregation filters on source
     columns (isnotnull(ts), ts range predicates) are sound and pass."""
 
-    def depth(line: str) -> int:
-        m = re.search(r"[A-Za-z*]", line)
-        return m.start() if m else 0
-
     lines = plan.splitlines()
     n = 0
     for i, line in enumerate(lines):
         if "MergingSessions" not in line:
             continue
-        d = depth(line)
+        d = _depth(line)
         for below in lines[i + 1:]:
-            if depth(below) <= d:
+            if _depth(below) <= d:
                 break  # left the MergingSessions subtree
             if not re.search(r"\bFilter\b", below):
                 continue
@@ -152,7 +189,8 @@ def audit_one(spark, name: str, fn, sf_dir: str) -> dict:
     before = seams.outstanding()
     try:
         df = fn(spark, sf_dir)
-        plan = df._jdf.queryExecution().executedPlan().toString()
+        plan = _dedup_cached(
+            df._jdf.queryExecution().executedPlan().toString())
         n_seams = seams.outstanding() - before
     finally:
         seams.release_seams(spark)
