@@ -16,7 +16,6 @@ import sys
 import time
 
 from jira_scraper_etl_spark import plans
-from jira_scraper_etl_spark.errors import RegimeRefused
 from jira_scraper_etl_spark.seams import named_job, release_seams
 from jira_scraper_etl_spark.session import get_spark
 
@@ -306,20 +305,16 @@ def gc_quiesce(spark, pause: float | None = None) -> None:
 
 
 def run_suite(spark, sf_dir: str, headline: list[str],
-              runs: int = 3) -> tuple[dict, dict]:
+              runs: int = 3) -> dict[str, float]:
     """Measure each headline query (median-of-``runs``, default 3:
     single measurements swing ~30% run-to-run on a shared machine —
     BENCH_r02→r03 showed a 1.45× driver-to-driver swing on unchanged
     queries; the median is robust to one outlier without the minimum's
     bias. The decade probes pass runs=1 at sf100, where a third run of
     a 10-minute query buys noise rejection the scaling curve doesn't
-    need — super-linearity shows up as multiples, not percents). An operator
-    REFUSING a regime with RegimeRefused (dedup_jaccard_prefix's
-    candidate-volume guard with fallback disabled) is a documented
-    routing decision, not a bench crash — it lands in the returned
-    ``refused`` dict and the rest of the suite still measures. Only
-    that dedicated type is caught: a bare ValueError is a genuine bug
-    and must crash the run (ADVICE r8).
+    need — super-linearity shows up as multiples, not percents). An
+    exception from a query is a genuine failure and crashes the run
+    (ADVICE r8).
 
     Between queries, persist seams are reclaimed via
     ``seams.release_seams()`` — targeted to the frames the operators
@@ -327,36 +322,30 @@ def run_suite(spark, sf_dir: str, headline: list[str],
     replaces, ADVICE r9) embedding run_suite in a larger session does
     NOT drop caller-owned caches or warm fixtures."""
     timings: dict[str, float] = {}
-    refused: dict[str, str] = {}
     for name in headline:
         fn = plans.QUERIES[name].fn
         measured, n = [], 0
-        try:
-            for _ in range(runs):
-                t0 = time.perf_counter()
-                # every job of the build and the action says which query
-                # ran (seam fills nest their own label inside this one)
-                with named_job(spark, name):
-                    df = fn(spark, sf_dir)
-                    if name in FORCE_FULL_MATERIALIZE:
-                        df.write.format("noop").mode("overwrite").save()
-                        n = df.count()  # cheap: the count plan IS the scan
-                    else:
-                        n = df.count()
-                measured.append(time.perf_counter() - t0)
-        except RegimeRefused as e:
-            refused[name] = str(e).split(" — ")[0]
-            print(f"# {name}: refused ({refused[name]})", file=sys.stderr)
-        else:
-            srt = sorted(measured)
-            mid = len(srt) // 2
-            # true median: average the two middle elements for even run
-            # counts (ADVICE r11 — upper-middle alone reports the slower
-            # of two runs when runs=2).
-            med = srt[mid] if len(srt) % 2 else (srt[mid - 1] + srt[mid]) / 2
-            dt = round(med, 3)
-            timings[name] = dt
-            print(f"# {name}: {dt:.3f}s ({n} rows)", file=sys.stderr)
+        for _ in range(runs):
+            t0 = time.perf_counter()
+            # every job of the build and the action says which query
+            # ran (seam fills nest their own label inside this one)
+            with named_job(spark, name):
+                df = fn(spark, sf_dir)
+                if name in FORCE_FULL_MATERIALIZE:
+                    df.write.format("noop").mode("overwrite").save()
+                    n = df.count()  # cheap: the count plan IS the scan
+                else:
+                    n = df.count()
+            measured.append(time.perf_counter() - t0)
+        srt = sorted(measured)
+        mid = len(srt) // 2
+        # true median: average the two middle elements for even run
+        # counts (ADVICE r11 — upper-middle alone reports the slower
+        # of two runs when runs=2).
+        med = srt[mid] if len(srt) % 2 else (srt[mid - 1] + srt[mid]) / 2
+        dt = round(med, 3)
+        timings[name] = dt
+        print(f"# {name}: {dt:.3f}s ({n} rows)", file=sys.stderr)
         # each fn() call builds FRESH DataFrames, so persist seams
         # (minhash shingles, RP keys, …) accumulate three copies per
         # query plus one per warm run (ADVICE r8) — drop them before
@@ -366,7 +355,7 @@ def run_suite(spark, sf_dir: str, headline: list[str],
         # shuffle/broadcast garbage NOW, between timed regions, so the
         # next query's jobs don't pay for it (see gc_quiesce).
         gc_quiesce(spark)
-    return timings, refused
+    return timings
 
 
 def select_headline(sf: str) -> tuple[list[str], int]:
@@ -405,7 +394,7 @@ def main() -> int:
     # drain the warmup's accumulated garbage before the first timed run
     gc_quiesce(spark)
 
-    timings, refused = run_suite(spark, sf_dir, headline, runs=runs)
+    timings = run_suite(spark, sf_dir, headline, runs=runs)
     out = {
         "metric": "headline_suite_wall_clock",
         "value": round(sum(timings.values()), 3),
@@ -415,8 +404,6 @@ def main() -> int:
     }
     if big_sf:
         out["mini_headline"] = True  # 5-query scaling subset, runs=1
-    if refused:
-        out["refused"] = refused
     prev = latest_recorded_bench(os.path.dirname(os.path.abspath(__file__)))
     # ratios are only meaningful against a recording at the SAME scale
     # factor (the driver records sf0.1; a local sf0.001 smoke run would

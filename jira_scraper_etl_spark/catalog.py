@@ -28,7 +28,6 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from .session import apply_runtime_confs
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -100,7 +99,6 @@ def _events_ts_unit(path: str) -> str:
 
 
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     path = os.path.join(sf_dir, "events.parquet")
     if _events_ts_unit(path) != "ns":
         # Native-unit timestamps: Spark's vectorized reader handles

@@ -287,15 +287,10 @@ def simhash_fingerprints(df: DataFrame, id_col: str = "doc_id",
     )
 
 
-def _check_nibble_hamming(max_hamming: int) -> None:
-    """4-nibble banding is lossless only for hamming <= 3 (pigeonhole
-    over 4 blocks); larger radii would silently drop pairs that share
-    no nibble block — shared guard for both public simhash APIs."""
-    if not 0 <= max_hamming <= 3:
-        raise ValueError(
-            f"max_hamming={max_hamming}: 4-nibble banding is lossless only "
-            f"for hamming <= 3 (pigeonhole over 4 blocks); larger radii "
-            f"would silently drop pairs that share no nibble block")
+# SimHash near-dup radius: 4-nibble banding is lossless exactly up to 3
+# (pigeonhole over 4 blocks) — a wider radius would silently drop pairs
+# that share no nibble block.
+MAX_HAMMING = 3
 
 
 def nibble_keys(fps: DataFrame, fp_col: str) -> DataFrame:
@@ -313,25 +308,22 @@ def hamming(a: Column, b: Column) -> Column:
     return F.bit_count(a.cast("long").bitwiseXOR(b.cast("long")))
 
 
-def simhash_fp_pairs(fps: DataFrame, col: str = "simhash",
-                     max_hamming: int = 3) -> DataFrame:
+def simhash_fp_pairs(fps: DataFrame, col: str = "simhash") -> DataFrame:
     """Near-dup pairs over DISTINCT fingerprint VALUES: (fa, fb) with
-    fa < fb and hamming ≤ ``max_hamming``, from the nibble-key
+    fa < fb and hamming ≤ ``MAX_HAMMING``, from the nibble-key
     candidates (:func:`candidate_pairs`, uncapped). This contracted
     graph has at most 2^16 nodes whatever the corpus size, while the
     doc-pair expansion is O(Σ|clique|²) (500k docs into 2^16 values ⇒
     billions of doc pairs); dedup_cluster_canonical solves components
     on it. ``fps`` must hold each fingerprint once."""
-    _check_nibble_hamming(max_hamming)
     pairs = candidate_pairs(nibble_keys(fps.select(col), col), col,
                             max_bucket_size=None).toDF("fa", "fb")
-    return pairs.where(hamming(F.col("fa"), F.col("fb")) <= max_hamming)
+    return pairs.where(hamming(F.col("fa"), F.col("fb")) <= MAX_HAMMING)
 
 
 def simhash_near_dup_pairs(df: DataFrame, id_col: str = "doc_id",
-                           text_col: str = "text",
-                           max_hamming: int = 3) -> DataFrame:
-    """SimHash near-dup pairs at hamming ≤ max_hamming: (doc_a, doc_b,
+                           text_col: str = "text") -> DataFrame:
+    """SimHash near-dup pairs at hamming ≤ MAX_HAMMING: (doc_a, doc_b,
     hamming) with doc_a < doc_b. Candidates share a nibble key, which is
     exact for hamming ≤ 3 by pigeonhole. Each id is
     ``struct(doc, simhash)``, so the fingerprint rides through
@@ -343,7 +335,6 @@ def simhash_near_dup_pairs(df: DataFrame, id_col: str = "doc_id",
     form) or the cluster labeling (plans/llm_ops dedup_cluster_canonical)
     when the duplicate density is unknown; this pair form is for bounded
     slices and verify stages."""
-    _check_nibble_hamming(max_hamming)
     # fan out of the single-file scan partition before per-token hashing
     # (same rationale as minhash_near_dup_pairs)
     fp = simhash_fingerprints(
@@ -356,17 +347,16 @@ def simhash_near_dup_pairs(df: DataFrame, id_col: str = "doc_id",
                      F.col(f"id_b.{id_col}").alias("doc_b"),
                      hamming(F.col("id_a.simhash"), F.col("id_b.simhash"))
                      .cast("int").alias("hamming"))
-        .where(F.col("hamming") <= max_hamming)
+        .where(F.col("hamming") <= MAX_HAMMING)
     )
 
 
 def simhash_neighbor_stats(df: DataFrame, id_col: str = "doc_id",
-                           text_col: str = "text",
-                           max_hamming: int = 3) -> DataFrame:
+                           text_col: str = "text") -> DataFrame:
     """Per-document SimHash near-dup statistics — the BOUNDED output
     form of :func:`simhash_near_dup_pairs`: one row per document,
     ``(id, n_neighbors, min_neighbor)`` where neighbors are the other
-    docs at hamming ≤ max_hamming (``min_neighbor`` NULL when none).
+    docs at hamming ≤ MAX_HAMMING (``min_neighbor`` NULL when none).
 
     Never materializes a doc-pair anywhere: the computation runs on the
     CONTRACTED fingerprint graph (one node per distinct 16-bit value,
@@ -382,7 +372,6 @@ def simhash_neighbor_stats(df: DataFrame, id_col: str = "doc_id",
     form that survives dup-dense corpora where the pair listing is
     O(Σ|clique|²).
     """
-    _check_nibble_hamming(max_hamming)
     # fp feeds three consumers (clique agg, second-min agg, the final
     # join-back); checkpoint so the tokenize+hash map pass runs once —
     # at warehouse scale this seam is a parquet materialization
@@ -400,7 +389,7 @@ def simhash_neighbor_stats(df: DataFrame, id_col: str = "doc_id",
 
     # cross-fingerprint adjacency = the shared contracted-graph pair
     # join, symmetrized (each fingerprint must see ALL its neighbors)
-    fpp = simhash_fp_pairs(cl.select("simhash"), max_hamming=max_hamming)
+    fpp = simhash_fp_pairs(cl.select("simhash"))
     adj = (fpp.select(F.col("fa").alias("simhash"), F.col("fb").alias("g"))
            .unionByName(fpp.select(F.col("fb").alias("simhash"),
                                    F.col("fa").alias("g"))))

@@ -371,7 +371,7 @@ def dedup_incremental_novel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..functions import textstats as TS
     from ..functions.hashing import simhash16, word_tokens
-    from ..operators.dedup import hamming, nibble_keys
+    from ..operators.dedup import MAX_HAMMING, hamming, nibble_keys
     from ..seams import persist_seam
     from .curation import doc_bucket
 
@@ -399,7 +399,7 @@ def dedup_incremental_novel(spark: SparkSession, sf_dir: str) -> DataFrame:
     matched = (
         nibble_keys(fp_new, "simhash")
         .join(nibble_keys(fp_old, "old_sh"), "key")
-        .where(hamming(F.col("simhash"), F.col("old_sh")) <= 3)
+        .where(hamming(F.col("simhash"), F.col("old_sh")) <= MAX_HAMMING)
         .select("doc_id").distinct()
         .withColumn("hit", F.lit(1)))
     near = (fp_new.join(matched, "doc_id", "left")
@@ -588,7 +588,7 @@ def dedup_pairs_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = (load_table(spark, sf_dir, "documents")
          .where(F.col("doc_id") < 150))
-    pairs = simhash_near_dup_pairs(d, "doc_id", "text", max_hamming=3)
+    pairs = simhash_near_dup_pairs(d, "doc_id", "text")
     ta = d.select(F.col("doc_id").alias("doc_a"), F.col("text").alias("text_a"))
     tb = d.select(F.col("doc_id").alias("doc_b"), F.col("text").alias("text_b"))
     lev = F.levenshtein("text_a", "text_b")

@@ -26,9 +26,8 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.storagelevel import StorageLevel
 
-from ..seams import checkpoint_seam, persist_seam, release_checkpoint
+from ..seams import checkpoint_seam, persist_seam
 
 from ..catalog import load_table
 from ..functions import hashing as H
@@ -341,7 +340,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_simhash_pairs (bounded slice) / simhash_near_dup_pairs (API).
     """
     d = load_table(spark, sf_dir, "documents")
-    return D.simhash_neighbor_stats(d, "doc_id", "text", max_hamming=3)
+    return D.simhash_neighbor_stats(d, "doc_id", "text")
 
 
 @register(
@@ -370,7 +369,7 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle's pairs — no O(n²) anywhere, one exchange keyed on the key.
     """
     d = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 200)
-    return D.simhash_near_dup_pairs(d, "doc_id", "text", max_hamming=3)
+    return D.simhash_near_dup_pairs(d, "doc_id", "text")
 
 
 @register(
@@ -1221,7 +1220,7 @@ def _cc_union_find(spark: SparkSession, member_rows, edge_rows) -> DataFrame:
     per-fingerprint doc counts over the component (so the expand join
     needs no doc-level re-aggregation). Only valid because the
     contracted fingerprint graph is ≤ 2^16 nodes by construction (and
-    edge count is capped by the hamming-≤3 ball: ≤ 697 neighbors per
+    edge count is capped by the hamming-≤3 ball: ≤ 696 neighbours per
     node) — constants that do NOT grow with the corpus. Returns an
     (id, label, cluster_size) DataFrame small enough to broadcast into
     the expand join."""
@@ -1255,47 +1254,6 @@ def _cc_union_find(spark: SparkSession, member_rows, edge_rows) -> DataFrame:
     return spark.createDataFrame(out, "id int, label long, cluster_size long")
 
 
-def _cc_label_loop(members: DataFrame, edges: DataFrame,
-                   max_rounds: int = 20) -> DataFrame:
-    """Distributed CC via min-label propagation, for contracted graphs
-    too large to collect (e.g. wider-fingerprint variants): one join +
-    one min-aggregate per round, O(diameter) rounds, every round a
-    shuffle keyed on the node id.
-
-    localCheckpoint (not persist) each round: iterative loops double
-    the logical plan per round (labels is referenced twice), and
-    Catalyst re-analyzes the FULL lineage each iteration — exponential
-    planning time by round ~15. Checkpointing truncates the plan to the
-    materialized partitions, keeping every round O(1) to plan.
-    Self-loop edges make each round ONE join + ONE aggregation: the
-    self-loop row carries the node's own label into the same groupBy
-    that computes the neighbor minimum (min picks the better of the
-    two), and ``min(label) FILTER (s = d)`` recovers the old label so
-    the convergence check is a scan, not a second join. Each round
-    releases the checkpoint it supersedes, so the loop holds two
-    checkpoints (edges and the latest labels) at any round count."""
-    labels = checkpoint_seam(members.select(
-        F.col("simhash").alias("id"), F.col("fp_min").alias("label")))
-    eplus = checkpoint_seam(edges.unionByName(
-        labels.select(F.col("id").alias("s"), F.col("id").alias("d"))))
-    held = labels
-    for _ in range(max_rounds):  # bound ≥ any real component diameter
-        new_labels = checkpoint_seam(
-            eplus.join(labels, eplus.s == labels.id)
-            .groupBy(F.col("d").alias("id"))
-            .agg(F.min("label").alias("label"),
-                 F.min(F.when(F.col("s") == F.col("d"), F.col("label")))
-                 .alias("old")))
-        release_checkpoint(held)
-        held = new_labels
-        changed = new_labels.where(F.col("label") < F.col("old")).count()
-        labels = new_labels.select("id", "label")
-        if changed == 0:
-            break
-    return labels
-
-
-
 @register(
     "dedup_cluster_canonical",
     oracle=f"""
@@ -1326,8 +1284,7 @@ def _cc_label_loop(members: DataFrame, edges: DataFrame,
     """,
     tags=("dedup", "iterative"),
 )
-def dedup_cluster_canonical(spark: SparkSession, sf_dir: str,
-                            cc_max_driver_nodes: int = 1 << 17) -> DataFrame:
+def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup clustering: connected components over the (exact)
     SimHash pair graph; each doc in a component gets the component's
     minimum doc_id as its cluster id (the canonical representative)
@@ -1342,17 +1299,12 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str,
     (1.57M pairs at sf0.1, 47 s end-to-end) while the fingerprint graph
     is bounded by min(corpus, 2^16) nodes (identical output).
 
-    CC itself is two-path. The contracted graph is bounded at 2^16
-    nodes BY CONSTRUCTION — independent of corpus size — so the default
-    path collects it and runs union-find on the driver (O(2^16 α), sub-
-    millisecond, a constant-size problem at ANY corpus scale; the
-    collect is the same kind of driver materialization as broadcasting
-    a dim table). The distributed min-label-propagation loop
-    (_cc_label_loop: join + min-aggregate per round, O(diameter)
-    rounds, localCheckpoint lineage truncation) is retained and tested
-    for graphs that exceed ``cc_max_driver_nodes`` — e.g. a 32/64-bit
-    fingerprint variant where contraction no longer bounds the node
-    count. The oracle reproduces the doc-level semantics with a
+    CC runs on the driver: union-find over the collected contracted
+    graph. That graph is bounded BY CONSTRUCTION, independent of corpus
+    size: at most 2^16 nodes (16-bit fingerprints), each with at most
+    696 neighbours (the hamming-≤3 ball, C(16,1)+C(16,2)+C(16,3)), so
+    ``fp_pairs.toPandas()`` ships at most ~22.8M undirected edges at
+    any scale. The oracle reproduces the doc-level semantics with a
     recursive CTE.
     """
     d = load_table(spark, sf_dir, "documents")
@@ -1369,9 +1321,9 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str,
     nodes = fp.groupBy("simhash").agg(F.min("doc_id").alias("fp_min"),
                                       F.count(F.lit(1)).alias("n_docs"))
     fp_pairs = D.simhash_fp_pairs(nodes.select("simhash"))
-    # checkpoint fp_pairs, the shared upstream of BOTH edge directions
-    # and the member set — one materialization instead of two (edges,
-    # members) plus it truncates lineage for the loop path
+    # checkpoint fp_pairs, the shared upstream of BOTH edge directions,
+    # the member set and the driver's edge list — one materialization
+    # instead of one per reader
     fp_pairs = checkpoint_seam(fp_pairs)
     edges = (fp_pairs.select(F.col("fa").alias("s"), F.col("fb").alias("d"))
              .unionByName(fp_pairs.select(F.col("fb").alias("s"),
@@ -1383,31 +1335,20 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str,
     members = (nodes.join(linked, "simhash", "left_semi")
                .unionByName(nodes.where(F.col("n_docs") >= 2))
                .dropDuplicates(["simhash"]))
-    member_rows = (members.collect()
-                   if cc_max_driver_nodes > 0 else None)
-    if member_rows is not None and len(member_rows) <= cc_max_driver_nodes:
-        # labels carry the component doc-count too, so the expand is a
-        # single broadcast join — no doc-level re-aggregation
-        # Arrow transfer for the (dense) edge list: toPandas moves two
-        # int columns in columnar batches — 926k edges in ~0.2s at the
-        # sf1 soak vs ~2.8s as Row objects
-        pairs_pdf = fp_pairs.toPandas()
-        # a Python list: Catalyst can't size it
-        labels = F.broadcast(_cc_union_find(
-            spark, member_rows,
-            zip(pairs_pdf["fa"].to_numpy(), pairs_pdf["fb"].to_numpy())))
-        return (fp.join(labels, fp.simhash == labels.id)
-                .select("doc_id", F.col("label").alias("cluster_id"),
-                        F.col("cluster_size").cast("int")))
-    labels = _cc_label_loop(checkpoint_seam(members), edges)
-    # expand back: every doc of a member fingerprint gets its
-    # component's canonical (minimum) doc_id and the doc-level size
-    docs_out = (fp.join(labels, fp.simhash == labels.id)
-                .select("doc_id", F.col("label").alias("cluster_id")))
-    sizes = docs_out.groupBy("cluster_id").agg(
-        F.count(F.lit(1)).alias("cluster_size"))
-    return (docs_out.join(sizes, "cluster_id")
-            .select("doc_id", "cluster_id", F.col("cluster_size").cast("int")))
+    member_rows = members.collect()
+    # labels carry the component doc-count too, so the expand is a
+    # single broadcast join — no doc-level re-aggregation
+    # Arrow transfer for the (dense) edge list: toPandas moves two
+    # int columns in columnar batches — 926k edges in ~0.2s at the
+    # sf1 soak vs ~2.8s as Row objects
+    pairs_pdf = fp_pairs.toPandas()
+    # a Python list: Catalyst can't size it
+    labels = F.broadcast(_cc_union_find(
+        spark, member_rows,
+        zip(pairs_pdf["fa"].to_numpy(), pairs_pdf["fb"].to_numpy())))
+    return (fp.join(labels, fp.simhash == labels.id)
+            .select("doc_id", F.col("label").alias("cluster_id"),
+                    F.col("cluster_size").cast("int")))
 
 
 @register(

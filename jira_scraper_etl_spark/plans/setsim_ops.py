@@ -17,12 +17,10 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.storagelevel import StorageLevel
 
 from ..seams import checkpoint_seam, persist_seam, release_checkpoint
 
 from ..catalog import load_table
-from ..errors import RegimeRefused
 from ..functions import hashing as H
 from ..operators import dedup as OD
 from ..operators.fanout import fan_out
@@ -83,8 +81,7 @@ _TAU_LADDER = [(1, 2), (2, 3), (4, 5)]
     tags=("dedup", "join"),
 )
 def dedup_jaccard_prefix(spark: SparkSession, sf_dir: str,
-                         max_candidates: int | None = None,
-                         fallback: bool = True) -> DataFrame:
+                         max_candidates: int | None = None) -> DataFrame:
     """EXACT Jaccard ≥ 0.5 similarity join over the FULL corpus with no
     all-pairs stage — prefix filtering (AllPairs, WWW'07): order the
     shingle vocabulary globally by (document frequency, shingle), keep
@@ -126,8 +123,7 @@ def dedup_jaccard_prefix(spark: SparkSession, sf_dir: str,
     ('prefix' | 'prefix_tau=N/D' | 'minhash_lsh'): exact precision
     always (each emitted jaccard is truly ≥ the stated threshold);
     recall is total on the prefix rungs at their τ and banding-
-    probabilistic on the minhash rung. ``fallback=False`` restores the
-    round-8 refusal (RegimeRefused) for callers that must not degrade.
+    probabilistic on the minhash rung.
     """
     if max_candidates is None:
         max_candidates = MAX_PREFIX_CANDIDATES
@@ -187,32 +183,20 @@ def dedup_jaccard_prefix(spark: SparkSession, sf_dir: str,
     # FILTER of the cached table, never a corpus re-pass. m·(m−1) is
     # even, so the per-bucket div 2 is exact in int64 (ADVICE r8: the
     # former double /2 could round near the budget boundary).
-    rungs = _TAU_LADDER if fallback else _TAU_LADDER[:1]
     stats = prefix.groupBy("tok").agg(
         *[F.count(F.when(F.col("idx") <= rung_len(n, d), 1))
-          .alias(f"m{j}") for j, (n, d) in enumerate(rungs)])
+          .alias(f"m{j}") for j, (n, d) in enumerate(_TAU_LADDER)])
     totals = stats.select(
         *[F.sum(F.expr(f"m{j} * (m{j} - 1) div 2")).alias(f"c{j}")
-          for j in range(len(rungs))]).first()
-    ests = [int(totals[f"c{j}"] or 0) for j in range(len(rungs))]
+          for j in range(len(_TAU_LADDER))]).first()
+    ests = [int(totals[f"c{j}"] or 0) for j in range(len(_TAU_LADDER))]
     chosen = next((j for j, e in enumerate(ests)
                    if e <= max_candidates), None)
     if chosen is None:
         prefix.unpersist()
-        if not fallback:
-            docs.unpersist()
-            raise RegimeRefused(
-                f"dedup_jaccard_prefix: projected candidate volume "
-                f"{ests[0]:,} exceeds the {max_candidates:,} budget — "
-                f"the corpus vocabulary is too low-entropy for an exact "
-                f"prefix-filtered join (no rare tokens to prune on). "
-                f"Route this corpus to dedup_minhash_lsh, raise TAU, "
-                f"re-enable fallback=, or pass a larger max_candidates= "
-                f"if the shuffle volume is genuinely affordable "
-                f"(~32 bytes/candidate).")
         cand = _minhash_candidates_hashed(docs)
         return _verify_pairs(cand, docs, TAU, "minhash_lsh")
-    num, den = rungs[chosen]
+    num, den = _TAU_LADDER[chosen]
     if chosen > 0:
         prefix = prefix.where(F.col("idx") <= rung_len(num, den))
     a, b = prefix.alias("a"), prefix.alias("b")
@@ -707,11 +691,10 @@ def _bpe_train(spark: SparkSession, sf_dir: str,
     the learning math never reads it."""
     d = load_table(spark, sf_dir, "documents")
     cols = (["w"] if keep_words else []) + ["freq"]
-    vocab = (d.select(F.explode(H.word_tokens(F.col("text"))).alias("w"))
-             .groupBy("w").agg(F.count(F.lit(1)).cast("long").alias("freq"))
-             .select(*cols, F.split("w", "").alias("syms"))
-             .persist(StorageLevel.MEMORY_AND_DISK))
-    vocab.count()
+    vocab = persist_seam(
+        d.select(F.explode(H.word_tokens(F.col("text"))).alias("w"))
+        .groupBy("w").agg(F.count(F.lit(1)).cast("long").alias("freq"))
+        .select(*cols, F.split("w", "").alias("syms")))
     merges: list[tuple] = []
     cur = vocab
     for step in range(1, BPE_STEPS + 1):
@@ -738,7 +721,7 @@ def _bpe_train(spark: SparkSession, sf_dir: str,
             .otherwise(F.concat(acc, F.array(x)))).alias("syms")))
         release_checkpoint(cur)  # no-op on the first step's vocab
         cur = nxt
-    vocab.unpersist()
+    vocab.unpersist()  # superseded by the first step's checkpoint
     return merges, cur
 
 

@@ -19,9 +19,10 @@ entries accumulate one per seam per invocation. ``release_seams`` only
 touches frames registered here, never caller-owned caches (unlike
 ``spark.catalog.clearCache()``, which drops everything session-wide).
 
-Releasing is idempotent: a seam an operator already unpersisted on an
-early-exit path (``dedup_jaccard_prefix``'s refusal) is skipped
-harmlessly — Spark's ``unpersist`` on a non-persisted frame is a no-op.
+Releasing is idempotent: a seam an operator already unpersisted once a
+later frame superseded it (``dedup_jaccard_prefix``'s prefix table on
+its MinHash rung, ``_bpe_train``'s vocabulary) is skipped harmlessly —
+Spark's ``unpersist`` on a non-persisted frame is a no-op.
 """
 
 from __future__ import annotations

@@ -68,10 +68,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..functions import textstats as TS
 from ..operators import versioned as V
-from ..operators.dedup import (hamming, nibble_keys, simhash_fingerprints,
-                               simhash_fp_pairs)
-
-MAX_HAMMING = 3  # 4-nibble banding is lossless exactly up to 3
+from ..operators.dedup import (MAX_HAMMING, hamming, nibble_keys,
+                               simhash_fingerprints, simhash_fp_pairs)
 
 INDEX_SCHEMA = "doc_id long, h string, simhash int"
 
@@ -172,7 +170,7 @@ def admit_batch(batch_fp: DataFrame, corpus: DataFrame) -> DataFrame:
     # 2^16 nodes — the dedup_cluster_canonical bound)
     reps = (fresh.groupBy("simhash")
             .agg(F.min("doc_id").alias("rep_doc")))
-    edges = simhash_fp_pairs(reps.select("simhash"), max_hamming=MAX_HAMMING)
+    edges = simhash_fp_pairs(reps.select("simhash"))
 
     nodes = [(r.simhash, r.rep_doc) for r in reps.collect()]
     adj: dict[int, set[int]] = defaultdict(set)

@@ -25,7 +25,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from ..catalog import EVENTS_RAW_SCHEMA, _events_ts_unit
-from ..session import apply_runtime_confs
 
 # Schema for event files whose ts is a native parquet timestamp
 # (micro/milli, isAdjustedToUTC=false) — Spark reads those directly.
@@ -54,7 +53,6 @@ def stream_events(spark: SparkSession, source_dir: str,
     import glob as globmod
     import os
 
-    apply_runtime_confs(spark)
     matches = sorted(globmod.glob(os.path.join(source_dir, glob)))
     nanos = bool(matches) and _events_ts_unit(matches[0]) == "ns"
     schema = EVENTS_RAW_SCHEMA if nanos else EVENTS_NATIVE_SCHEMA

@@ -125,8 +125,7 @@ def foreach_batch_merge(
 
 def run_merge_stream(spark, orders_dir: str, table_dir: str,
                      checkpoint_dir: str, seed: DataFrame | None = None,
-                     crash_hook=None, timeout_seconds: float = 120.0,
-                     gc_retain: int | None = None):
+                     crash_hook=None, timeout_seconds: float = 120.0):
     """Drain an order-file backlog (one file per micro-batch,
     AvailableNow) through the MERGE sink. Seeds version 0 exactly once
     — re-invocation after a crash resumes from the checkpoint and the
@@ -144,8 +143,7 @@ def run_merge_stream(spark, orders_dir: str, table_dir: str,
               .parquet(orders_dir))
     drain_query(lambda: (
         stream.writeStream
-        .foreachBatch(foreach_batch_merge(table_dir, crash_hook,
-                                          gc_retain=gc_retain))
+        .foreachBatch(foreach_batch_merge(table_dir, crash_hook))
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True).start()), timeout_seconds)
     return V.read_version(spark, table_dir)

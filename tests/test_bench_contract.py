@@ -29,40 +29,10 @@ def test_bench_emits_single_json_line_on_stdout():
     assert all(v >= 0 for v in payload["queries"].values())
 
 
-def test_run_suite_records_refusals_without_losing_the_rest(spark):
-    """An operator refusing a regime (the jaccard candidate-volume
-    guard at the soak decades) must land in the refused dict while
-    every other headline query still measures — the contract that kept
-    the sf10 bench row recordable."""
-    import bench
-
-    timings, refused = bench.run_suite(
-        spark, "/root/testdata/sf0.001",
-        ["q1_pricing_summary", "dedup_jaccard_prefix"])
-    assert "q1_pricing_summary" in timings and not refused
-
-    from jira_scraper_etl_spark import plans
-    q = plans.QUERIES["dedup_jaccard_prefix"]
-    orig = q.fn
-    try:
-        # fallback=False is the only remaining refusal path (the
-        # default now degrades to the MinHash rung and measures)
-        q.fn = lambda s, d: orig(s, d, max_candidates=1, fallback=False)
-        timings, refused = bench.run_suite(
-            spark, "/root/testdata/sf0.001",
-            ["q1_pricing_summary", "dedup_jaccard_prefix"])
-    finally:
-        q.fn = orig
-    assert "q1_pricing_summary" in timings
-    assert "dedup_jaccard_prefix" in refused
-    assert "candidate volume" in refused["dedup_jaccard_prefix"]
-
-
 def test_run_suite_crashes_on_genuine_valueerror(spark):
-    """A bare ValueError is a bug, not a routing refusal — run_suite
-    must NOT swallow it into the refused dict (ADVICE r8: a genuine
-    bug silently dropped from the wall-clock total keeps the bench
-    green)."""
+    """A ValueError from a query is a bug — run_suite must NOT swallow
+    it (ADVICE r8: a genuine bug silently dropped from the wall-clock
+    total keeps the bench green)."""
     import pytest
 
     import bench
@@ -72,7 +42,7 @@ def test_run_suite_crashes_on_genuine_valueerror(spark):
     orig = q.fn
 
     def boom(s, d):
-        raise ValueError("genuine bug, not a refusal")
+        raise ValueError("genuine bug")
 
     try:
         q.fn = boom
@@ -115,9 +85,9 @@ def test_run_suite_names_each_query_job(spark, sf_dir, monkeypatch):
     sc.setLocalProperty("spark.jobGroup.id", "outer-group")
     sc.setJobDescription("outer")
     try:
-        timings, refused = bench.run_suite(
+        timings = bench.run_suite(
             spark, sf_dir, ["fake_named_query"], runs=1)
-        assert "fake_named_query" in timings and not refused
+        assert "fake_named_query" in timings
         assert seen == [("fn", "fake_named_query"),
                         ("count", "persist_seam:fake"),
                         ("fn", "fake_named_query"),

@@ -54,6 +54,27 @@ def test_load_events_any_unit(spark, tmp_path, unit):
     assert got == want
 
 
+def test_event_loaders_keep_caller_session_confs(spark, tmp_path):
+    """The event loaders read with the session as the caller set it: a
+    run with forced shuffle joins and AQE off must still plan that way
+    after loading events."""
+    d = tmp_path / "events_conf"
+    d.mkdir()
+    _write_events(str(d / "events.parquet"), "us")
+    keys = ["spark.sql.autoBroadcastJoinThreshold",
+            "spark.sql.adaptive.enabled"]
+    saved = {k: spark.conf.get(k) for k in keys}
+    try:
+        spark.conf.set(keys[0], "-1")
+        spark.conf.set(keys[1], "false")
+        load_events(spark, str(d))
+        SE.stream_events(spark, str(d))
+        assert [spark.conf.get(k) for k in keys] == ["-1", "false"]
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+
 def test_load_table_infers_a_file_schema_once(spark, tmp_path, count_jobs):
     path = str(tmp_path / "t.parquet")
     pq.write_table(pa.table({"a": pa.array([1, 2], pa.int64())}), path)

@@ -179,20 +179,6 @@ def test_span_dedup_degenerate_corpus(spark, tmp_path):
     assert out[0].doc_id == 0 and out[0].n_kept == 2
 
 
-def test_cluster_canonical_loop_path_matches_driver_path(spark, sf_dir):
-    """The distributed min-label-propagation fallback (for contracted
-    graphs too large to collect) must produce exactly the union-find
-    result."""
-    from jira_scraper_etl_spark.plans.llm_ops import dedup_cluster_canonical
-
-    driver = {(r.doc_id, r.cluster_id, r.cluster_size)
-              for r in dedup_cluster_canonical(spark, sf_dir).collect()}
-    loop = {(r.doc_id, r.cluster_id, r.cluster_size)
-            for r in dedup_cluster_canonical(
-                spark, sf_dir, cc_max_driver_nodes=0).collect()}
-    assert driver == loop and driver
-
-
 def test_bigram_assoc_exact_lift(spark, tmp_path):
     # corpus: 6x "x y" + 1x "x z" -> n=14 tokens, c(x)=7, c(y)=6,
     # c(x,y)=6 -> lift = 6*14/(7*6) = 2.0; (x,z) cab=1 < 5 support

@@ -297,13 +297,9 @@ def test_embedding_dedup_rp_sound_and_higher_recall(spark, sf_dir):
 def test_banding_guards(spark, sf_dir):
     """Misuse guards: slice banding rejects bands*bits > dim (slices
     past the vector would silently assign every row one key — an O(n^2)
-    join); a bands-only override derives a compatible bits; simhash
-    APIs reject max_hamming > 3 (nibble banding is lossless only <= 3)."""
+    join); a bands-only override derives a compatible bits."""
     import pytest as _pytest
 
-    from jira_scraper_etl_spark.catalog import load_table
-    from jira_scraper_etl_spark.operators.dedup import (
-        simhash_near_dup_pairs, simhash_neighbor_stats)
     from jira_scraper_etl_spark.plans.llm_ops import emb_band_keys
 
     with _pytest.raises(ValueError, match="invalid banding"):
@@ -315,12 +311,6 @@ def test_banding_guards(spark, sf_dir):
     # bands-only override: bits auto-fits the 64-bit budget
     out = plans.QUERIES["dedup_embedding_cosine"].fn(spark, sf_dir, bands=16)
     assert out.count() >= 0
-
-    d = load_table(spark, sf_dir, "documents")
-    with _pytest.raises(ValueError, match="lossless"):
-        simhash_near_dup_pairs(d, max_hamming=4)
-    with _pytest.raises(ValueError, match="lossless"):
-        simhash_neighbor_stats(d, max_hamming=4)
 
 
 def test_rp_band_key_table_matches_expression_path(spark, sf_dir):

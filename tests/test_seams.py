@@ -98,14 +98,12 @@ def test_checkpoint_seam_releases_rdd_blocks(spark):
     assert _settle(spark, base) <= base
 
 
-def test_label_loop_releases_superseded_rounds(spark, monkeypatch):
-    """ADVICE r14: the label-propagation loop checkpoints every round.
-    Each round must release the checkpoint it supersedes, so what the
-    loop leaves registered (edges and the final labels) does not grow
-    with the round count. Paths of 4 and 8 nodes need 4 and 8 rounds:
-    the minimum label travels one hop per round, plus the round that
-    sees no change."""
-    from jira_scraper_etl_spark.plans import llm_ops
+def test_bpe_loop_releases_superseded_rounds(spark, sf_dir, monkeypatch):
+    """ADVICE r14: the BPE training loop checkpoints every merge step.
+    Each step must release the checkpoint it supersedes, so what the
+    loop leaves registered (the vocabulary seam and the final step's
+    checkpoint) does not grow with BPE_STEPS."""
+    from jira_scraper_etl_spark.plans import setsim_ops
 
     calls = []
 
@@ -113,26 +111,45 @@ def test_label_loop_releases_superseded_rounds(spark, monkeypatch):
         calls.append(df)
         return seams.checkpoint_seam(df)
 
-    monkeypatch.setattr(llm_ops, "checkpoint_seam", counting)
+    monkeypatch.setattr(setsim_ops, "checkpoint_seam", counting)
 
-    def run(n: int) -> tuple[int, int]:
-        members = spark.createDataFrame(
-            [(i, i) for i in range(n)], "simhash int, fp_min long")
-        edges = spark.createDataFrame(
-            [e for i in range(n - 1) for e in ((i, i + 1), (i + 1, i))],
-            "s int, d int")
+    def run(steps: int) -> tuple[int, int]:
+        monkeypatch.setattr(setsim_ops, "BPE_STEPS", steps)
         seams.release_seams()
         calls.clear()
-        labels = llm_ops._cc_label_loop(members, edges)
+        merges = setsim_ops.bpe_learn_merges(spark, sf_dir).collect()
         held = seams.outstanding()
-        assert sorted(tuple(r) for r in labels.collect()) == [
-            (i, 0) for i in range(n)]
         seams.release_seams()
-        return len(calls) - 2, held  # rounds: minus labels0 and edges
+        assert len(merges) == steps
+        return len(calls), held
 
-    short, long_ = run(4), run(8)
-    assert short[0] >= 3 and long_[0] > short[0], (short, long_)
+    short, long_ = run(2), run(6)
+    assert (short[0], long_[0]) == (2, 6), (short, long_)
     assert short[1] == long_[1] == 2, (short, long_)
+
+
+def test_package_caches_only_through_seams():
+    """Every cache the package takes goes through the seam registry, so
+    ``release_seams`` can reclaim it: no ``.persist(``, ``.cache(`` or
+    ``.localCheckpoint(`` call outside ``seams.py``."""
+    import ast
+    from pathlib import Path
+
+    import jira_scraper_etl_spark
+
+    root = Path(jira_scraper_etl_spark.__file__).parent
+    found = []
+    for path in sorted(root.rglob("*.py")):
+        if path.name == "seams.py" and path.parent == root:
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr in {"persist", "cache",
+                                           "localCheckpoint"}):
+                found.append(
+                    f"{path.relative_to(root)}:{node.func.end_lineno}")
+    assert not found, found
 
 
 class _UnreleasableCheckpoint:

@@ -163,23 +163,13 @@ def test_jaccard_prefix_tau_escalation_rung_is_exact(spark, sf_dir):
     assert got == want and want
 
 
-def test_jaccard_prefix_guard_degrades_then_refuses(spark, sf_dir):
-    """The candidate-volume guard, round-9 semantics: with a budget
-    below the corpus's projected prefix-bucket candidate volume the
-    operator DEGRADES — raised-τ rungs first, then MinHash-banded
-    candidates feeding the same exact verify — returning a result
-    whose ``method`` column names the regime and whose pairs are a
-    SUBSET of the exact answer with exact jaccard values (approximate
-    recall, exact precision). Only ``fallback=False`` restores the
-    round-8 refusal, with the dedicated RegimeRefused type."""
-    import pytest
-
-    from jira_scraper_etl_spark.errors import RegimeRefused
-
-    with pytest.raises(RegimeRefused, match="dedup_minhash_lsh"):
-        plans.QUERIES["dedup_jaccard_prefix"].fn(
-            spark, sf_dir, max_candidates=1, fallback=False)
-
+def test_jaccard_prefix_guard_degrades(spark, sf_dir):
+    """The candidate-volume guard: with a budget below the corpus's
+    projected prefix-bucket candidate volume the operator DEGRADES —
+    raised-τ rungs first, then MinHash-banded candidates feeding the
+    same exact verify — returning a result whose ``method`` column
+    names the regime and whose pairs are a SUBSET of the exact answer
+    with exact jaccard values (approximate recall, exact precision)."""
     exact = {(r.doc_a, r.doc_b): r.jaccard for r in
              plans.QUERIES["dedup_jaccard_prefix"].fn(spark, sf_dir)
              .collect()}

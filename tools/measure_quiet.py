@@ -19,7 +19,6 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from jira_scraper_etl_spark import plans  # noqa: E402
-from jira_scraper_etl_spark.errors import RegimeRefused  # noqa: E402
 from jira_scraper_etl_spark.seams import release_seams  # noqa: E402
 from jira_scraper_etl_spark.session import get_spark  # noqa: E402
 
@@ -44,22 +43,16 @@ def main() -> int:
         release_seams()
         gc_quiesce(spark)
         runs: list[float] = []
-        err = None
         for _ in range(RUNS):
             spark.sparkContext.setJobDescription(f"measure: {name}")
             t0 = time.perf_counter()
-            try:
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            except RegimeRefused as e:
-                err = f"refused: {str(e).split(' — ')[0]}"
-                break
+            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             runs.append(round(time.perf_counter() - t0, 3))
             spark.sparkContext.setJobDescription(None)
             release_seams()
             gc_quiesce(spark)
         out[name] = {"runs": runs,
-                     "median": round(statistics.median(runs), 3) if runs
-                     else None, "err": err}
+                     "median": round(statistics.median(runs), 3)}
         print(f"# {name}: {out[name]}", file=sys.stderr)
         with open(out_path, "w") as f:
             json.dump(out, f, indent=1)

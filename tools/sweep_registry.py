@@ -20,7 +20,6 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from jira_scraper_etl_spark import plans  # noqa: E402
-from jira_scraper_etl_spark.errors import RegimeRefused  # noqa: E402
 from jira_scraper_etl_spark.seams import release_seams  # noqa: E402
 from jira_scraper_etl_spark.session import get_spark  # noqa: E402
 
@@ -48,8 +47,6 @@ def main() -> int:
         try:
             df = fn(spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
-        except RegimeRefused as e:
-            out[name] = f"refused: {str(e).split(' — ')[0]}"
         except Exception as e:
             out[name] = f"error: {type(e).__name__}: {str(e)[:120]}"
         else:
