@@ -3,12 +3,12 @@
 Design decision: every sketch derives from ``md5`` hex digests, because
 Spark and DuckDB produce byte-identical md5 hex — which makes every
 sketch operator oracle-checkable. MinHash uses the Kirsch-Mitzenmacher
-construction (``km_hash``): one md5 per shingle expanded into k 32-bit
-integer family members via ``(h1 + i·h2) mod 2³²`` — k× cheaper than k
-seeded hashes, and signatures shuffle as longs, not hex strings. At
-100 TB you'd swap the md5 base hash for ``xxhash64`` (no hex
-round-trip) — the operator shapes are unchanged; the md5 variant is the
-portable/testable reference implementation.
+construction (``operators/dedup.km_signature``): one md5 per shingle
+expanded into k 32-bit integer family members via ``(h1 + i·h2) mod 2³²``
+— k× cheaper than k seeded hashes, and signatures shuffle as longs, not
+hex strings. At 100 TB you'd swap the md5 base hash for ``xxhash64`` (no
+hex round-trip) — the operator shapes are unchanged; the md5 variant is
+the portable/testable reference implementation.
 """
 
 from __future__ import annotations
@@ -61,55 +61,6 @@ def word_shingles(text: Column, n: int = 3) -> Column:
     ``shingles_from_tokens`` (see its docstring).
     """
     return shingles_from_tokens(word_tokens(text), n)
-
-
-MOD32 = 4294967296  # 2^32
-
-
-def km_hash(md5_hex: Column, i: int) -> Column:
-    """Kirsch-Mitzenmacher hash-family member i from an md5 hex digest:
-    ``(h1 + i·h2) mod 2³²`` where h1/h2 are the digest's two 32-bit hex
-    halves. One real hash yields k family members — the standard trick
-    for cheap MinHash signatures (also used for Bloom filters)."""
-    h1 = F.conv(F.substring(md5_hex, 1, 8), 16, 10).cast("bigint")
-    h2 = F.conv(F.substring(md5_hex, 9, 8), 16, 10).cast("bigint")
-    return (h1 + F.lit(i) * h2) % F.lit(MOD32)
-
-
-def minhash_signature(shingles: Column, k: int = 16) -> Column:
-    """MinHash signature: array of k min-over-shingles KM hashes (bigint).
-
-    Per-row expression form (no shuffle, no UDF) for array-column
-    callers; the distributed pipeline in operators/dedup.py computes the
-    same values via explode + min-aggregate, which is the shape that
-    scales. Empty shingle sets produce nulls (filtered by callers)."""
-    ms = F.transform(shingles, lambda s: F.md5(s))
-
-    def member(i: int) -> Column:
-        # one-arg lambda on purpose: a two-arg transform lambda is
-        # (element, ARRAY INDEX) in PySpark — binding the family id via
-        # a default arg silently turned i into the element position
-        # (caught by tests/test_hashing_differential.py)
-        return F.array_min(F.transform(ms, lambda m: km_hash(m, i)))
-
-    return F.array(*[member(i) for i in range(k)])
-
-
-def band_keys(signature: Column, bands: int, rows: int) -> Column:
-    """LSH band keys: md5 of each band's concatenated signature rows.
-
-    Two docs collide on band b iff their signature rows [b*rows,
-    (b+1)*rows) are all equal. Returns array<struct<band:int, key:string>>
-    ready to explode into the bucket-join."""
-    entries = []
-    for b in range(bands):
-        rows_b = [F.element_at(signature, b * rows + r + 1).cast("string")
-                  for r in range(rows)]
-        entries.append(F.struct(
-            F.lit(b).alias("band"),
-            F.md5(F.concat_ws("|", *rows_b)).alias("key"),
-        ))
-    return F.array(*entries)
 
 
 def hex4_to_int(hex4: Column) -> Column:

@@ -63,8 +63,8 @@ def _sql_hex32(expr: str, start: int) -> str:
     )
 
 
-# Kirsch-Mitzenmacher MinHash (mirrors functions/hashing.km_hash and
-# operators/dedup.minhash_signatures): one md5 per shingle, family
+# Kirsch-Mitzenmacher MinHash (mirrors operators/dedup.km_signature
+# and minhash_signatures): one md5 per shingle, family
 # member i = (h1 + i*h2) mod 2^32 over the digest's two hex halves.
 SQL_HASH_PAIRS = (
     f"list_transform(ms, m -> [CAST({_sql_hex32('m', 1)} AS BIGINT), "
@@ -688,31 +688,13 @@ def _rp_signs(bands: int, bits: int, dim: int = EMB_DIM) -> list:
              for i in range(bits)] for b in range(bands)]
 
 
-def rp_hyperplane_dots(bands: int, bits: int) -> list:
-    """One ±sum expression per hyperplane over the pre-projected
-    component columns e0..e63, as SQL strings (composed Column objects
-    would cost one py4j round trip per node — minutes of driver time
-    for ~14k nodes; F.expr parses each in microseconds). Emitted as
-    SEPARATE columns on purpose: Spark's codegen splits a projection
-    into one method per expression, while a single
-    explode(array(<everything>)) generator expression compiles as one
-    giant method and OOMs Janino (measured at 32×7 hyperplanes)."""
-    signs = _rp_signs(bands, bits)
-
-    def dot(b, i):
-        return " ".join(("+" if s == 1 else "-") + f" e{j}"
-                        for j, s in enumerate(signs[b][i]))
-
-    return [F.expr(dot(b, i)).alias(f"d{b}_{i}")
-            for b in range(bands) for i in range(bits)]
-
-
 def rp_band_key_table(base, bands: int, bits: int):
     """(vec_id, bks: array<bigint>) — all RP band keys per vector, via
     ONE Arrow-batched numpy matmul: Q (batch×dim) @ S (dim×bands·bits),
     strict-positive sign bits packed per band above a per-band offset —
-    value-identical to the rp_hyperplane_dots + rp_band_keys expression
-    path (integer arithmetic end to end; the differential test pins
+    value-identical to the per-hyperplane ±sum expression path
+    (integer arithmetic end to end; the differential test in
+    tests/test_queries.py keeps that path as its spec and pins
     equality).
 
     This is the documented let-numpy-do-the-matmul exception to the
@@ -721,8 +703,7 @@ def rp_band_key_table(base, bands: int, bits: int):
     falls out of whole-stage codegen into interpreted evaluation —
     measured 558 s for 200k vectors even with a 512 MB JIT code cache
     — while one BLAS-shaped int64 matmul per Arrow batch is
-    sub-second. The expression path remains the oracle-parity spec and
-    the twin for corpora small enough to interpret."""
+    sub-second."""
     signs = _rp_signs(bands, bits)
     dim = EMB_DIM
 
@@ -745,20 +726,6 @@ def rp_band_key_table(base, bands: int, bits: int):
 
     return base.select("vec_id", "q").mapInPandas(
         gen, "vec_id bigint, bks array<bigint>")
-
-
-def rp_band_keys(bands: int, bits: int):
-    """Band-key array from the materialized hyperplane dot columns:
-    band b's key packs sign(d_b_i) bits above a per-band offset."""
-
-    def key(b):
-        terms = " + ".join(
-            f"(CASE WHEN d{b}_{i} > 0 THEN {1 << (bits - 1 - i)} "
-            f"ELSE 0 END)"
-            for i in range(bits))
-        return f"{b * (1 << bits)} + {terms}"
-
-    return F.expr("array(" + ", ".join(key(b) for b in range(bands)) + ")")
 
 
 # The RP hash-table construction, as SQL CTEs shared by every oracle

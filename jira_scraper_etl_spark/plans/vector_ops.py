@@ -532,60 +532,31 @@ def _km_oracle() -> str:
 
 
 def _cents_sql_literal(cents: list) -> str:
-    """The k×dim centroid model as one SQL array-of-arrays literal —
-    constant folding collapses it to a single complex-typed Literal
-    (see _km_assign's codegen-cache note)."""
+    """The k×dim centroid model as one SQL array-of-arrays literal, for
+    use inside a single ``F.expr`` string:
+
+    - Constant folding collapses it to ONE complex-typed Literal that
+      codegen stores in its references array — NOT k×dim inlined
+      source constants — so every model generates the IDENTICAL
+      codegen source (only the referenced ArrayData changes) and
+      Spark's codegen cache compiles it once. Unrolled per cluster,
+      512 fresh literals per model forced a multi-second recompile
+      per model at ANY data size.
+    - One ``F.expr`` string is ONE py4j round-trip parsed JVM-side;
+      building the same tree with F.transform/F.aggregate Python
+      lambdas plus ``F.lit(nested_list)`` costs ~0.4s of per-element
+      py4j conversion PER MODEL (measured), pure driver overhead."""
     return "array(" + ",".join(
         "array(" + ",".join(f"{int(x)}L" for x in c) + ")"
         for c in cents) + ")"
 
 
-def _km_assign(q_df: DataFrame, cents: list) -> DataFrame:
-    """Assignment under a k×dim centroid model, shaped for plan reuse
-    AND cheap plan construction:
-
-    - The model enters as one SQL array-of-arrays literal inside a
-      single ``F.expr`` string. Constant folding collapses it to ONE
-      complex-typed Literal that codegen stores in its references
-      array — NOT k×dim inlined source constants — so every Lloyd
-      iteration generates the IDENTICAL codegen source (only the
-      referenced ArrayData changes) and Spark's codegen cache compiles
-      once for all iterations. The original per-cluster unrolling
-      inlined 512 fresh literals per iteration, forcing a multi-second
-      recompile per iteration at ANY data size.
-    - One ``F.expr`` string is ONE py4j round-trip parsed JVM-side;
-      building the same tree with F.transform/F.aggregate Python
-      lambdas plus ``F.lit(nested_list)`` costs ~0.4s of per-element
-      py4j conversion PER ITERATION (measured), pure driver overhead.
-
-    The argmin is array_min over (d2, cid) structs = ties to the
-    lowest cluster id.
-
-    This expression path is the ORACLE-PARITY SPEC and the
-    differential twin; the registered operator assigns via
-    _km_assign_arrow (one numpy int64 matmul per Arrow batch) because
-    higher-order functions evaluate INTERPRETED in Spark — k×dim
-    lambda evaluations per row made assignment the whole cost of the
-    operator at the sf10 decade (53 s, ~1.5G interpreted expression
-    evals across 5 passes; the rp_band_key_table lesson again)."""
-    arr = _cents_sql_literal(cents)
-    best = F.expr(
-        f"array_min(zip_with("
-        f"transform({arr}, c -> aggregate(zip_with(q, c, "
-        f"(a, b) -> (a - b) * (a - b)), 0L, (acc, x) -> acc + x)), "
-        f"sequence(0, {len(cents) - 1}), "
-        f"(d, i) -> named_struct('d2', d, 'cid', cast(i as int))))")
-    return (q_df.withColumn("b", best)
-            .withColumn("cluster", F.col("b.cid"))
-            .withColumn("d2", F.col("b.d2")).drop("b"))
-
-
 def _km_assign_arrow(q_df: DataFrame, cents: list) -> DataFrame:
     """Assignment as ONE numpy int64 matmul per Arrow batch —
-    bit-identical to the _km_assign expression spec (all-integer:
-    d2 = ||q||² − 2·q·Cᵀ + ||c||² in int64, argmin's first-minimum
-    rule = ties to the lowest cluster id, exactly array_min's struct
-    order), differential-tested against it.
+    bit-identical to the interpreted array_min expression spec in
+    tests/test_vectors_differential.py (all-integer: d2 = ||q||² −
+    2·q·Cᵀ + ||c||² in int64, argmin's first-minimum rule = ties to the
+    lowest cluster id, exactly array_min's struct order).
 
     Why: Spark evaluates higher-order functions interpreted, so the
     expression assignment costs k×dim lambda evaluations per row —
@@ -633,9 +604,9 @@ def embedding_kmeans_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape per iteration: assignment is map-only against the
     k×dim broadcast-in-closure model — one numpy int64 matmul per
-    Arrow batch (_km_assign_arrow; the interpreted-HOF expression spec
-    _km_assign remains as the differential twin — it cost 53 s at the
-    sf10 decade where the matmul costs ~8 s); the update is ONE
+    Arrow batch (_km_assign_arrow; the interpreted-HOF expression form
+    cost 53 s at the sf10 decade where the matmul costs ~8 s, and
+    stays as the test's differential spec); the update is ONE
     map-side-combined aggregation to k×(dim+1) longs; the k×64-int
     model state lives on the driver between iterations (the
     dedup_cluster_canonical / bpe_learn_merges bounded-driver-state

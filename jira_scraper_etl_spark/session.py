@@ -77,10 +77,17 @@ RUNTIME_CONFS: dict[str, str] = {
 # worker path (5,359 entries each) and 2 over py4j. Measured in a
 # worker, that reset is 0.21-0.27 s of CPU per task, while an identity
 # mapInPandas task over 1,000 rows takes 0.34-0.42 s in all and a plain
-# scan task 0.09 s. The daemon module makes the re-read stat-checked
-# (see ``_pydaemon``); sessions built elsewhere keep ``pyspark.daemon``.
-DAEMON_MODULE = "jira_scraper_etl_spark._pydaemon"
-_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# scan task 0.09 s. The stat-checked reset (``worker_site``) is
+# installed by a startup hook, not by a daemon module: Spark 4.1 forks
+# the Data Source planner workers (``create_data_source``,
+# ``plan_data_source_read``, pushdown, lookup) from a hard-coded
+# ``pyspark.daemon`` that ``spark.python.daemon.module`` never reaches,
+# while every process it launches runs ``site`` and so the
+# ``sitecustomize`` first on its ``PYTHONPATH``. Sessions built
+# elsewhere keep the stock reset.
+_PACKAGE_DIR = os.path.dirname(os.path.abspath(__file__))
+_WORKER_SITE = os.path.join(_PACKAGE_DIR, "worker_site")
+_PACKAGE_ROOT = os.path.dirname(_PACKAGE_DIR)
 
 
 def default_parallelism() -> int:
@@ -134,10 +141,9 @@ def get_spark(app_name: str = "jira-scraper-etl-spark",
         # Spark cluster sets in spark.executor.extraJavaOptions.
         .config("spark.driver.extraJavaOptions",
                 "-XX:ReservedCodeCacheSize=512m")
-        .config("spark.python.daemon.module", DAEMON_MODULE)
-        # the daemon starts before any task can ship code, so the
-        # package must be importable whatever the driver's cwd
-        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
+        # workers import the package whatever the driver's cwd
+        .config("spark.executorEnv.PYTHONPATH",
+                os.pathsep.join([_WORKER_SITE, _PACKAGE_ROOT]))
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)

@@ -12,11 +12,52 @@ import random
 import string
 
 import pyspark.sql.functions as F
+from pyspark.sql import Column
 
 from jira_scraper_etl_spark.functions import hashing as H
 from jira_scraper_etl_spark.operators import dedup as D
 
 MOD32 = 1 << 32
+
+
+# --- per-row Spark expression specs of the distributed MinHash pipeline ----
+
+def km_hash(md5_hex: Column, i: int) -> Column:
+    """Kirsch-Mitzenmacher family member i from an md5 hex digest:
+    ``(h1 + i·h2) mod 2³²`` over the digest's two 32-bit hex halves."""
+    h1 = F.conv(F.substring(md5_hex, 1, 8), 16, 10).cast("bigint")
+    h2 = F.conv(F.substring(md5_hex, 9, 8), 16, 10).cast("bigint")
+    return (h1 + F.lit(i) * h2) % F.lit(MOD32)
+
+
+def minhash_signature(shingles: Column, k: int = 16) -> Column:
+    """Array of k min-over-shingles KM hashes: the per-row form of
+    ``operators/dedup.minhash_signatures`` (explode + min-aggregate).
+    Empty shingle sets produce nulls."""
+    ms = F.transform(shingles, lambda s: F.md5(s))
+
+    def member(i: int) -> Column:
+        # one-arg lambda on purpose: a two-arg transform lambda is
+        # (element, ARRAY INDEX) in PySpark — binding the family id via
+        # a default arg silently turns i into the element position
+        return F.array_min(F.transform(ms, lambda m: km_hash(m, i)))
+
+    return F.array(*[member(i) for i in range(k)])
+
+
+def band_keys(signature: Column, bands: int, rows: int) -> Column:
+    """LSH band keys: md5 of each band's concatenated signature rows, as
+    array<struct<band:int, key:string>>. Two docs collide on band b iff
+    their signature rows [b*rows, (b+1)*rows) are all equal."""
+    entries = []
+    for b in range(bands):
+        rows_b = [F.element_at(signature, b * rows + r + 1).cast("string")
+                  for r in range(rows)]
+        entries.append(F.struct(
+            F.lit(b).alias("band"),
+            F.md5(F.concat_ws("|", *rows_b)).alias("key"),
+        ))
+    return F.array(*entries)
 
 
 # --- pure-Python twins (written independently of the Spark forms) ----------
@@ -86,8 +127,8 @@ def test_minhash_band_simhash_match_python_twins(spark):
         r.doc_id: (list(r.sig), [(b.band, b.key) for b in r.bands], r.sh)
         for r in df.where(F.length(F.trim("text")) > 0).select(
             "doc_id",
-            H.minhash_signature(H.word_shingles(F.col("text"))).alias("sig"),
-            H.band_keys(H.minhash_signature(H.word_shingles(F.col("text"))),
+            minhash_signature(H.word_shingles(F.col("text"))).alias("sig"),
+            band_keys(minhash_signature(H.word_shingles(F.col("text"))),
                         4, 4).alias("bands"),
             H.simhash16(H.word_tokens(F.col("text"))).alias("sh"),
         ).collect()
@@ -116,6 +157,6 @@ def test_distributed_signatures_equal_expression_form(spark):
             for r in D.minhash_signatures(D.shingled_docs(df)).collect()}
     expr = {r.doc_id: list(r.sig) for r in df.select(
         "doc_id",
-        H.minhash_signature(H.word_shingles(F.col("text"))).alias("sig"))
+        minhash_signature(H.word_shingles(F.col("text"))).alias("sig"))
         .collect()}
     assert dist == expr and len(dist) >= 150

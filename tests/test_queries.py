@@ -248,6 +248,42 @@ def test_char_diversity_invariants(spark, sf_dir):
     assert one.where(F.col("simpson") != 0.0).count() == 0
 
 
+def rp_hyperplane_dots(bands: int, bits: int) -> list:
+    """The expression spec of ``llm_ops.rp_band_key_table``: one ±sum
+    column per hyperplane over the component columns e0..e63, as SQL
+    strings (composed Column objects would cost one py4j round trip per
+    node). Separate columns on purpose: codegen splits a projection
+    into one method per expression, while one explode(array(...))
+    generator compiles as one giant method and OOMs Janino."""
+    import pyspark.sql.functions as F
+
+    from jira_scraper_etl_spark.plans.llm_ops import _rp_signs
+
+    signs = _rp_signs(bands, bits)
+
+    def dot(b, i):
+        return " ".join(("+" if s == 1 else "-") + f" e{j}"
+                        for j, s in enumerate(signs[b][i]))
+
+    return [F.expr(dot(b, i)).alias(f"d{b}_{i}")
+            for b in range(bands) for i in range(bits)]
+
+
+def rp_band_keys(bands: int, bits: int):
+    """Band-key array from the hyperplane dot columns: band b's key packs
+    sign(d_b_i) bits above a per-band offset."""
+    import pyspark.sql.functions as F
+
+    def key(b):
+        terms = " + ".join(
+            f"(CASE WHEN d{b}_{i} > 0 THEN {1 << (bits - 1 - i)} "
+            f"ELSE 0 END)"
+            for i in range(bits))
+        return f"{b * (1 << bits)} + {terms}"
+
+    return F.expr("array(" + ", ".join(key(b) for b in range(bands)) + ")")
+
+
 def test_embedding_dedup_rp_sound_and_higher_recall(spark, sf_dir):
     """The multi-table RP variant: (1) SOUND — every returned pair is a
     true >=-threshold pair; (2) its recall on the ground-truth slice is
@@ -260,9 +296,7 @@ def test_embedding_dedup_rp_sound_and_higher_recall(spark, sf_dir):
     from jira_scraper_etl_spark.catalog import load_table
     from jira_scraper_etl_spark.functions import vectors as V
     from jira_scraper_etl_spark.plans.llm_ops import (EMB_DIM, RP_BANDS,
-                                                      derive_rp_bits,
-                                                      rp_band_keys,
-                                                      rp_hyperplane_dots)
+                                                      derive_rp_bits)
 
     def under300(df):
         return {(r.vec_a, r.vec_b) for r in df.where(F.col("vec_a") < 300)
@@ -324,9 +358,7 @@ def test_rp_band_key_table_matches_expression_path(spark, sf_dir):
     from jira_scraper_etl_spark.functions import vectors as V
     from jira_scraper_etl_spark.plans.llm_ops import (EMB_DIM, RP_BANDS,
                                                       derive_rp_bits,
-                                                      rp_band_key_table,
-                                                      rp_band_keys,
-                                                      rp_hyperplane_dots)
+                                                      rp_band_key_table)
 
     e = load_table(spark, sf_dir, "embeddings")
     bits = derive_rp_bits(e.count())

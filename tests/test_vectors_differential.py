@@ -151,15 +151,30 @@ def test_kmeans_exact_matches_numpy_replay(spark, sf_dir):
     assert len({c for c, _ in got.values()}) > 1  # really clusters
 
 
+def km_assign(q_df, cents: list):
+    """The expression spec of ``vector_ops._km_assign_arrow``: the
+    argmin over (d2, cid) structs, so ties go to the lowest cluster id,
+    with the model as one constant-folded literal in one ``F.expr``."""
+    from jira_scraper_etl_spark.plans.vector_ops import _cents_sql_literal
+
+    arr = _cents_sql_literal(cents)
+    best = F.expr(
+        f"array_min(zip_with("
+        f"transform({arr}, c -> aggregate(zip_with(q, c, "
+        f"(a, b) -> (a - b) * (a - b)), 0L, (acc, x) -> acc + x)), "
+        f"sequence(0, {len(cents) - 1}), "
+        f"(d, i) -> named_struct('d2', d, 'cid', cast(i as int))))")
+    return (q_df.withColumn("b", best)
+            .withColumn("cluster", F.col("b.cid"))
+            .withColumn("d2", F.col("b.d2")).drop("b"))
+
+
 def test_kmeans_arrow_assignment_equals_expression_spec(spark, sf_dir):
     """The Arrow-matmul assignment (the operator's hot path since the
     sf10 53 s HOF wall) must be BIT-IDENTICAL to the interpreted
-    expression spec _km_assign on every (vec_id, cluster, d2) — same
+    expression spec km_assign on every (vec_id, cluster, d2) — same
     contract as the rp_band_key_table differential."""
-    import pyspark.sql.functions as F
-
-    from jira_scraper_etl_spark.functions import vectors as V
-    from jira_scraper_etl_spark.plans.vector_ops import (KM_K, _km_assign,
+    from jira_scraper_etl_spark.plans.vector_ops import (KM_K,
                                                          _km_assign_arrow)
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -171,7 +186,7 @@ def test_kmeans_arrow_assignment_equals_expression_spec(spark, sf_dir):
     zero = [[0] * len(cents[0]) for _ in range(KM_K)]
     for model in (cents, zero):
         spec = {r.vec_id: (r.cluster, r.d2)
-                for r in _km_assign(q, model).collect()}
+                for r in km_assign(q, model).collect()}
         arrow = {r.vec_id: (r.cluster, r.d2)
                  for r in _km_assign_arrow(q, model).collect()}
         assert spec == arrow and spec
